@@ -778,6 +778,24 @@ def make_chunk_partition_fn_multi(params_list: list[ChunkerParams], keep_data: b
     return chunk_partition
 
 
+def _file_list_frame(spark: SparkSession, files: list[tuple[int, str]]) -> DataFrame:
+    """``(file_idx, path)`` rows, one partition per file.
+
+    ``spark.range`` with one slice per file gives the layout up front: a
+    ``repartition`` would add an exchange stage before the chunker, and a
+    Python RDD source (``parallelize`` + ``createDataFrame(rdd)``) would add
+    a second Python pass to every chunk task. Each slice looks its entry up
+    by position in literal arrays, which ride in every task's plan.
+    """
+    n = len(files)
+    idx = F.array(*[F.lit(i) for i, _ in files]).cast("array<long>")
+    path = F.array(*[F.lit(p) for _, p in files]).cast("array<string>")
+    at = (F.col("id") + 1).cast("int")
+    return spark.range(0, n, 1, max(n, 1)).select(
+        F.element_at(idx, at).alias("file_idx"), F.element_at(path, at).alias("path")
+    )
+
+
 def chunk_files_multi(
     spark: SparkSession,
     paths: list[str],
@@ -787,10 +805,7 @@ def chunk_files_multi(
     """files × params → chunk rows with ``param_idx``, ONE read per file
     (see ``_iter_file_chunks_multi``). All parameterizations must be
     ``boundary_compatible``."""
-    rdd = spark.sparkContext.parallelize(
-        list(enumerate(paths)), numSlices=max(len(paths), 1)
-    )
-    files = spark.createDataFrame(rdd, "file_idx long, path string")
+    files = _file_list_frame(spark, list(enumerate(paths)))
     chunks = files.mapInArrow(
         make_chunk_partition_fn_multi(params_list, store_data),
         "param_idx long, " + CHUNK_DDL,
@@ -1217,13 +1232,7 @@ def chunk_files_auto(
     large = [(i, p) for i, p in enumerate(paths) if os.path.getsize(p) >= parallel_threshold]
     out = None
     if small or not large:
-        # one partition per file via explicit parallelize slices — a
-        # repartition() here would add a whole exchange stage (scheduling
-        # barrier + shuffle write/read of the tiny file list) before the scan
-        rdd = spark.sparkContext.parallelize(
-            small or [], numSlices=max(len(small), 1)
-        )
-        files = spark.createDataFrame(rdd, "file_idx long, path string")
+        files = _file_list_frame(spark, small)
         out = files.mapInArrow(make_chunk_partition_fn(params, store_data), CHUNK_DDL)
         if not store_data:
             out = out.drop("data")
@@ -1245,13 +1254,7 @@ def chunk_files(
     file_idx is the position in ``paths`` — input-list order, not
     lexicographic (src/store.rs:117 semantics).
     """
-    # one partition per file up front (parallelize with explicit slices) —
-    # no repartition exchange before the chunker
-    rdd = spark.sparkContext.parallelize(
-        list(enumerate(paths)), numSlices=max(len(paths), 1)
-    )
-    files = spark.createDataFrame(rdd, "file_idx long, path string")
-
+    files = _file_list_frame(spark, list(enumerate(paths)))
     chunks = files.mapInArrow(
         make_chunk_partition_fn(params, store_data), CHUNK_DDL
     )

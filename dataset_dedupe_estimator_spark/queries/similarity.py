@@ -329,10 +329,11 @@ def _lsh_features_fn(it):
     """Arrow-batched unit vectors + full hyperplane bit strings.
 
     Bit-identical to the declarative fold expressions (`_bits_col`,
-    `_unit_col`): element products are float64 IEEE multiplies in both, and
-    ``np.cumsum`` accumulates strictly left-to-right — the same addition
-    order as ``F.aggregate``'s left fold — so every dot (and thus every
-    sign bit and unit component) matches the DuckDB oracle exactly.
+    `_unit_col`): element products are float64 IEEE multiplies in both.
+    The norm's ``np.cumsum`` accumulates strictly left-to-right — the same
+    addition order as ``F.aggregate``'s left fold — so every unit
+    component matches the DuckDB oracle exactly; the plane dots come from
+    a guarded GEMM whose sign bits provably match the fold (see below).
     Vectorized numpy beats ~50 interpreted higher-order-function dots per
     row by orders of magnitude; this is the 100 TB hot path.
     """
@@ -363,7 +364,7 @@ def _lsh_features_fn(it):
         offsets = pa.array(np.arange(0, (nb + 1) * DIM, DIM, dtype=np.int32))
         arrays = [vec_id, pa.ListArray.from_arrays(offsets, pa.array(unit.ravel()))]
         # r14 (§4.2): plane dots via ONE BLAS GEMM with a sign guard,
-        # replacing the 128-pass strict-left-fold accumulation loop
+        # replacing the 64-pass (DIM) strict-left-fold accumulation loop
         # (5-14x in the kernel microbench at 2k-100k-row batches — the
         # loop re-streams the (nb, T*P) accumulator from DRAM per dim).
         # The dot VALUES feed only the `>= 0.0` sign test below, and the
@@ -384,6 +385,10 @@ def _lsh_features_fn(it):
         dots = e @ PFT
         amax = np.abs(e) @ PFT_ABS
         near = np.abs(dots) <= GUARD_TOL * amax
+        # a NaN dot fails the test above and an infinite one voids the
+        # bound (overflow sums in GEMM order can be NaN where the fold
+        # gives +-inf): non-finite dots take the fold's sign bit too
+        near |= ~np.isfinite(dots)
         if near.any():
             r, c = np.nonzero(near)
             acc = np.zeros(len(r))

@@ -4,6 +4,18 @@ Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32); the same
 configuration is cluster-safe: AQE handles shuffle sizing / skew at scale,
 Arrow powers every pandas/mapInArrow exchange, and shuffle partitions are
 left to AQE coalescing (initial value sized by env for local runs).
+
+Local masters also start PySpark's worker daemon through
+``dataset_dedupe_estimator_spark._pyworker`` (``spark.python.daemon.module``).
+Before CPython 3.13 every Python task re-read the zip directories of
+``pyspark.zip`` and the spark-core jar from ``importlib.invalidate_caches()``,
+~0.17 s of CPU per task before the UDF ran; the daemon keeps a directory
+whose archive is unchanged. It is set for ``local[...]`` only, because only
+there does ``get_spark`` itself put this package on the workers'
+``PYTHONPATH`` before the JVM starts. On a cluster, pass
+``--conf spark.python.daemon.module=dataset_dedupe_estimator_spark._pyworker``
+to spark-submit, with the package on the executors' ``PYTHONPATH``: the
+daemon imports it before any task runs.
 """
 
 from __future__ import annotations
@@ -68,6 +80,10 @@ def get_spark(
     # Local single-JVM runs need driver heap for 32 concurrent tasks.
     if master and master.startswith("local"):
         conf.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+    # local-cluster executors are separate JVMs that need not see PYTHONPATH
+    effective = master or os.environ.get("SPARK_MASTER", "")
+    if effective == "local" or effective.startswith("local["):
+        conf["spark.python.daemon.module"] = "dataset_dedupe_estimator_spark._pyworker"
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():

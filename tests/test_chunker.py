@@ -185,6 +185,17 @@ def test_auto_dispatcher_mixed_sizes(spark, tmp_path):
     assert by_file == {0: 100_000, 1: 9 * 1024 * 1024}
 
 
+def test_file_list_frame_one_partition_per_file(spark):
+    """Partition i holds entry i, with its file_idx kept (non-contiguous,
+    as chunk_files_auto passes)."""
+    from dataset_dedupe_estimator_spark.operators import chunker
+
+    files = [(3, "/d/a.parquet"), (7, "/d/it's.parquet"), (9, "/d/c.parquet")]
+    parts = chunker._file_list_frame(spark, files).rdd.glom().collect()
+    assert [[(r.file_idx, r.path) for r in p] for p in parts] == [[f] for f in files]
+    assert chunker._file_list_frame(spark, []).count() == 0
+
+
 def test_streaming_refuses_unbounded_pending(tmp_path):
     # enforce_max=False would grow the pending buffer to the whole file
     # and rescan it per block — the streaming path must refuse it

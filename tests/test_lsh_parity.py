@@ -1,7 +1,9 @@
 """The Arrow-batched LSH feature pass must be bit-identical to the
-declarative fold expressions (which the DuckDB oracle mirrors): same
-float64 products, same left-to-right addition order (np.cumsum), so the
-same sign bits and unit components."""
+declarative fold expressions (which the DuckDB oracle mirrors). The norm,
+and so ``unit``, uses the same float64 products in the same left-to-right
+addition order (np.cumsum). The sign bits come from a BLAS GEMM whose
+near-zero and non-finite entries are recomputed with the same strict
+left fold, so they match the fold's bits."""
 
 from pyspark.sql import functions as F
 
@@ -94,6 +96,57 @@ def test_guarded_gemm_sign_matches_fold():
         want = ["".join(want_chars[i, t, :]) for i in range(n)]
         assert got == want, f"table {t}"
     assert out.column(1).to_pylist()  # unit column present and non-empty
+
+
+def test_guarded_gemm_non_finite_dots_take_the_fold():
+    """Rows whose products are finite but whose dots overflow: a blocked
+    GEMM can sum a +inf partial with a -inf one into NaN where the strict
+    left fold stays at +-inf. NaN fails the guard's ``<=`` test, so
+    non-finite dots must take the fold as well."""
+    import warnings
+
+    import numpy as np
+    import pyarrow as pa
+
+    from dataset_dedupe_estimator_spark.queries.similarity import (
+        DIM,
+        _PLANES,
+        _lsh_features_fn,
+    )
+
+    PF = np.asarray(_PLANES, dtype=np.float64).reshape(
+        N_TABLES * MAX_PLANES, DIM
+    )
+    p0 = PF[0]
+    rows = []
+    for split in (4, 8, 16, 24, 32, 40, 48, 56, 60):
+        # each product against plane 0 is +-2e307; the first `split`
+        # products share a sign, so partial sums overflow either way
+        sign = np.where(np.arange(DIM) < split, 1.0, -1.0) * np.sign(p0)
+        v = sign * 2e307 / np.maximum(np.abs(p0), 1.0)
+        rows += [v, v[::-1].copy(), -v]
+    e = np.array(rows)
+    n = e.shape[0]
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
+        ref = np.zeros((n, N_TABLES * MAX_PLANES))
+        for d in range(DIM):
+            ref += e[:, d, None] * PF[None, :, d]
+        assert np.isinf(ref).any()
+        off = pa.array(np.arange(0, (n + 1) * DIM, DIM, dtype=np.int32))
+        batch = pa.RecordBatch.from_arrays(
+            [
+                pa.array(np.arange(n, dtype=np.int64)),
+                pa.ListArray.from_arrays(off, pa.array(e.ravel())),
+            ],
+            names=["vec_id", "embedding"],
+        )
+        (out,) = list(_lsh_features_fn(iter([batch])))
+    want_chars = np.where(ref >= 0.0, "1", "0").reshape(n, N_TABLES, MAX_PLANES)
+    for t in range(N_TABLES):
+        got = out.column(out.schema.names.index(f"bits{t}")).to_pylist()
+        want = ["".join(want_chars[i, t, :]) for i in range(n)]
+        assert got == want, f"table {t}"
 
 
 def test_plane_ladder_engages_past_2pow12(spark):
