@@ -19,10 +19,14 @@ zero-filled pages). For estimates where exact uniqueness is unnecessary,
 
 from __future__ import annotations
 
+import os
+from dataclasses import replace
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataset_dedupe_estimator_spark.operators.chunker import (
+    PARALLEL_THRESHOLD,
     ChunkerParams,
     XET_PARAMS,
     boundary_compatible,
@@ -126,84 +130,92 @@ def estimate(
 
     Returns the reference's result shape: total_len, chunk_bytes,
     compressed_chunk_bytes, dedup_ratio (+ xet_bytes / xet_dedup_ratio from
-    the second chunker parameterization, src/xet.rs:10-39).
-
-    When both parameterizations share the boundary-candidate function
-    (the default: min/max/probe differ, scheme/seed/mask identical), the
-    corpus is read and boundary-scanned ONCE for both — one Spark job,
-    half the I/O of the reference's two sequential passes. Files large
-    enough for intra-file parallel chunking keep the per-param path (the
-    split machinery is single-param) and union into the same aggregate;
-    incompatible params fall back to two passes. The xet side's zlib
-    probe is skipped (probe=0): its ``compressed`` column is never
-    consumed, and the probe is ~30% of chunker CPU at full fidelity.
+    the second chunker parameterization, src/xet.rs:10-39). The one-group
+    case of ``estimate_groups``.
     """
-    import os as _os
-    from dataclasses import replace as _replace
+    return estimate_groups(spark, [paths], params, xet_params, with_xet)[0]
 
-    from dataset_dedupe_estimator_spark.operators.chunker import PARALLEL_THRESHOLD
 
-    if with_xet and boundary_compatible(params, xet_params):
-        xet_scan = _replace(xet_params, compress_probe_bytes=0)
-        small = [p for p in paths if _os.path.getsize(p) < PARALLEL_THRESHOLD]
-        large = [p for p in paths if _os.path.getsize(p) >= PARALLEL_THRESHOLD]
-        parts = []
-        if small or not large:
-            parts.append(chunk_files_multi(spark, small, [params, xet_scan]))
-        for i, prm in enumerate((params, xet_scan)):
-            if large:
-                # file_idx re-enumerates within `large`; the stats below
-                # never read it (only hash/size/compressed)
-                parts.append(
-                    chunk_files_auto(spark, large, params=prm).select(
-                        F.lit(i).alias("param_idx"), "*"
-                    )
-                )
-        chunks = parts[0]
-        for extra in parts[1:]:
-            chunks = chunks.unionByName(extra)
-        per = chunk_stats(chunks, by=("param_idx",)).collect()
-        rows = {r.param_idx: r for r in per}
-        row, xrow = rows.get(0), rows.get(1)
-        out = {
-            "numfiles": len(paths),
-            "total_len": (row.total_len if row else 0) or 0,
-            "chunk_bytes": (row.chunk_bytes if row else 0) or 0,
-            "compressed_chunk_bytes": (row.compressed_chunk_bytes if row else 0) or 0,
-            "total_chunks": (row.total_chunks if row else 0) or 0,
-            "unique_chunks": (row.unique_chunks if row else 0) or 0,
-        }
-        out["dedup_ratio"] = (
-            out["chunk_bytes"] / out["total_len"] if out["total_len"] else 0.0
-        )
-        out["xet_bytes"] = (xrow.chunk_bytes if xrow else 0) or 0
-        out["xet_dedup_ratio"] = (
-            out["xet_bytes"] / out["total_len"] if out["total_len"] else 0.0
-        )
-        return out
-    chunks = chunk_files_auto(spark, paths, params=params)
-    row = chunk_stats(chunks).collect()[0]
-    out = {
-        "numfiles": len(paths),
-        "total_len": row.total_len or 0,
-        "chunk_bytes": row.chunk_bytes or 0,
-        "compressed_chunk_bytes": row.compressed_chunk_bytes or 0,
-        "total_chunks": row.total_chunks or 0,
-        "unique_chunks": row.unique_chunks or 0,
+def estimate_groups(
+    spark: SparkSession,
+    groups: list[list[str]],
+    params: ChunkerParams = ESTIMATE_PARAMS,
+    xet_params: ChunkerParams = XET_PARAMS,
+    with_xet: bool = True,
+) -> list[dict]:
+    """One ``estimate`` dict per group of files, from ONE chunk pass and
+    one aggregate over all groups.
+
+    Every chunk row is tagged with its file's group (``grp``, looked up by
+    the file's position in the list the chunker received), and
+    ``chunk_stats(by=("grp", "param_idx"))`` scopes hash uniqueness to
+    each (group, parameterization) — the same mechanism as the shared
+    xet scan. A file listed in two groups is chunked once per listing.
+
+    With xet, when both parameterizations share the boundary-candidate
+    function (the default: min/max/probe differ, scheme/seed/mask
+    identical), small files are read and boundary-scanned ONCE for both
+    — half the I/O of the reference's two sequential passes. Files large
+    enough for intra-file parallel chunking, and incompatible params, take
+    one pass per param (the split machinery is single-param), unioned
+    into the same aggregate. The xet side's zlib probe is skipped
+    (probe=0): its ``compressed`` column is never consumed, and the probe
+    is ~30% of chunker CPU at full fidelity.
+    """
+    paths = [p for g in groups for p in g]
+    group_of = [i for i, g in enumerate(groups) for _ in g]
+    prms = [params] + ([replace(xet_params, compress_probe_bytes=0)] if with_xet else [])
+    shared = len(prms) == 2 and boundary_compatible(params, xet_params)
+    # shared scan for small files; per-param passes for the rest
+    small, rest = [], []
+    for i, p in enumerate(paths):
+        fits = shared and os.path.getsize(p) < PARALLEL_THRESHOLD
+        (small if fits else rest).append(i)
+
+    def tagged(chunks: DataFrame, idx: list[int]) -> DataFrame:
+        # file_idx enumerates the sub-list the chunker received; an empty
+        # sub-list yields no rows to look up
+        at = (F.col("file_idx") + 1).cast("int")
+        grp = F.element_at(F.array(*[F.lit(group_of[i]) for i in idx]), at)
+        return chunks.select(grp.alias("grp"), "*")
+
+    parts = []
+    if shared and (small or not rest):
+        chunks = chunk_files_multi(spark, [paths[i] for i in small], prms)
+        parts.append(tagged(chunks, small))
+    if rest or not shared:
+        for k, prm in enumerate(prms):
+            chunks = chunk_files_auto(spark, [paths[i] for i in rest], params=prm)
+            parts.append(tagged(chunks, rest).select(F.lit(k).alias("param_idx"), "*"))
+    chunks = parts[0]
+    for extra in parts[1:]:
+        chunks = chunks.unionByName(extra)
+    rows = {
+        (r.grp, r.param_idx): r
+        for r in chunk_stats(chunks, by=("grp", "param_idx")).collect()
     }
-    out["dedup_ratio"] = (out["chunk_bytes"] / out["total_len"]) if out["total_len"] else 0.0
-    if with_xet:
-        xchunks = chunk_files_auto(spark, paths, params=xet_params)
-        xrow = (
-            xchunks.groupBy("hash")
-            .agg(F.first("size").alias("size"))
-            .agg(F.sum("size").alias("xet_bytes"))
-            .collect()[0]
-        )
-        out["xet_bytes"] = xrow.xet_bytes or 0
-        out["xet_dedup_ratio"] = (
-            out["xet_bytes"] / out["total_len"] if out["total_len"] else 0.0
-        )
+
+    def field(row, name: str) -> int:
+        return (getattr(row, name) if row else 0) or 0
+
+    out = []
+    for g, members in enumerate(groups):
+        row = rows.get((g, 0))
+        res = {"numfiles": len(members)}
+        for name in (
+            "total_len",
+            "chunk_bytes",
+            "compressed_chunk_bytes",
+            "total_chunks",
+            "unique_chunks",
+        ):
+            res[name] = field(row, name)
+        total = res["total_len"]
+        res["dedup_ratio"] = res["chunk_bytes"] / total if total else 0.0
+        if with_xet:
+            res["xet_bytes"] = field(rows.get((g, 1)), "chunk_bytes")
+            res["xet_dedup_ratio"] = res["xet_bytes"] / total if total else 0.0
+        out.append(res)
     return out
 
 
@@ -255,7 +267,7 @@ def dedup_trend(
 
 def trend_from_chunks(chunks: DataFrame) -> DataFrame:
     """The trend aggregation alone, over an already-materialized chunk
-    table (``cdc_trend_oracle`` re-aggregates an EXPORTED chunk table
+    table (``cdc_dedup_trend`` re-aggregates an EXPORTED chunk table
     so DuckDB can reproduce the running ratios row-for-row — only chunk
     EMISSION stays rows-only)."""
     from dataset_dedupe_estimator_spark.operators.ranking import (

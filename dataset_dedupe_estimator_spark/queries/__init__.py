@@ -46,100 +46,90 @@ for _mod in (relational, events, dedupe_text, text_analysis, similarity, synthet
 # so rotation only affects which subset gets *driver-side* attestation,
 # never whether a regression is caught.
 #
-# Round-14 window (executes the rotation staged at r13 close, COVERAGE.md
-# ledger): 45 round-10-green queries (the r13 _NEXT head,
-# table_partition_evolution_read ... q14_promo_revenue) + the 5 queries
-# whose executed plan the r14 optimizations touched OUTSIDE that fill
-# (semantic_vs_lexical_pairs, lsh_index_incremental, dedup_near_groups,
-# dedup_near_survivors — all inherit the r14 bucket-kernel/minhash-kernel
-# plans — and ann_ivf_trained, whose train_lloyd assignment moved into an
-# Arrow kernel; the touched-query rotation rule). The remaining r14
-# optimization targets (minhash_signatures, minhash_lsh_candidates,
-# embedding_dedup_lsh, dedup_keep_first, text_quality, ngram_*,
-# near_dup_source_matrix) were already in the fill, so EVERY
-# r13/r14-touched plan carries driver-side attestation this round. The
-# 5 displaced fills (q19_disjunctive_revenue ... table_time_travel) head
-# _NEXT with the zorder_layout overflow; _middle (computed) holds the
-# r11-green tier; _TAIL = r12-green then the r13-attested 50 minus the
-# re-fronted ann_ivf_trained (freshest last).
+# Round-15 window (the COVERAGE.md ledger row r15): the r14 _NEXT
+# (q19_disjunctive_revenue ... zorder_layout, round-10-green) first, then
+# the stalest tier, the round-11-green queries in registry order
+# (temporal_dim_join ... mv_from_version_diff), then the 2 queries whose
+# executed plan this round changed (the touched-query rule):
+# format_compare_demo (one write per source, row counts taken inside the
+# write, one group-keyed chunk pass) and cdc_dedup_trend (now routed
+# through the exported chunk table, so it carries the DuckDB oracle).
+# Arithmetic: 6 + 42 + 2 = 50. The 2 round-11-green queries the window
+# could not hold head _NEXT; _TAIL = r12-green, then the r13-attested
+# 49, then the r14-attested 50 minus the re-fronted cdc_dedup_trend
+# (freshest last); _middle (computed) is empty this round.
 #
 # The touched-query rule deliberately overrides staleness: a query whose
 # executed plan changed this round re-enters the window EVEN IF it was
-# green in the most recent driver round (ann_ivf_trained: r13-green AND
-# r14-touched). _RETOUCHED names that set so the rotation-invariant test
+# green in the most recent driver round (cdc_dedup_trend: r14-green AND
+# r15-touched). _RETOUCHED names that set so the rotation-invariant test
 # can tell a sanctioned re-entry from an accidental slot waste.
 _RETOUCHED = {
-    "semantic_vs_lexical_pairs",
-    "lsh_index_incremental",
-    "dedup_near_groups",
-    "dedup_near_survivors",
-    "ann_ivf_trained",
+    "format_compare_demo",
+    "cdc_dedup_trend",
 }
 _FRONT = [
-    "table_partition_evolution_read",
-    "customer_hierarchy_rollup",
-    "supplier_pagerank",
-    "spend_quartiles",
-    "filter_project_scan",
-    "distinct_ship_modes",
-    "user_value_twap",
-    "events_gapfill",
-    "events_attribution",
-    "events_dedup_burst",
-    "events_daily_anomaly",
-    "near_dup_source_matrix",
-    "dedup_exact_events",
-    "dedup_fingerprint_groups",
-    "dedup_keep_first",
-    "ngram_jaccard_pairs",
-    "ngram_containment_pairs",
-    "minhash_signatures",
-    "minhash_lsh_candidates",
-    "simhash_signatures",
-    "bm25_search",
-    "text_quality",
-    "binary_digest_features",
-    "lang_score",
-    "token_frequencies",
-    "knn_brute_force",
-    "semdedup_clusters",
-    "ann_lsh_bucketed",
-    "ann_ivf_probe",
-    "embedding_dedup_pairs",
-    "embedding_dedup_lsh",
-    "label_centroid_spread",
-    "synthetic_generate_table",
-    "streaming_cms_counts",
-    "grouping_sets_revenue",
-    "trailing_window_revenue",
-    "asof_prev_order",
-    "unpivot_part_metrics",
-    "range_join_price_bands",
-    "cube_order_stats",
-    "cdc_dedup_trend",
-    "dedup_substring_spans",
-    "source_overlap_minhash",
-    "q8_market_share",
-    "q14_promo_revenue",
-    "semantic_vs_lexical_pairs",
-    "lsh_index_incremental",
-    "dedup_near_groups",
-    "dedup_near_survivors",
-    "ann_ivf_trained",
-]
-# overflow: the one round-10-green query the 50-slot window could not
-# hold — first in line for round 15 (locally re-verified every round)
-_NEXT = [
     "q19_disjunctive_revenue",
     "table_type_widening_read",
     "table_nested_read",
     "table_archive_read",
     "table_time_travel",
     "zorder_layout",
+    "temporal_dim_join",
+    "orders_rfm_segments",
+    "basket_part_pairs",
+    "cohort_ltv",
+    "conditional_pivot_brands",
+    "rolling_active_users",
+    "events_late_arrivals",
+    "bm25_index_search",
+    "phrase_search_index",
+    "bpe_train_merges",
+    "bpe_token_stats",
+    "doc_length_quantiles",
+    "repetition_stats",
+    "contamination_check",
+    "corpus_survival_pipeline",
+    "ann_recall_at_k",
+    "hybrid_rrf",
+    "synthetic_generator_e2e",
+    "split_assign",
+    "stratified_sample_docs",
+    "cross_split_leakage",
+    "split_purge_eval",
+    "streaming_dedup_events",
+    "streaming_view_click_join",
+    "streaming_index_pipeline",
+    "image_near_dup_demo",
+    "multimodal_pipeline_demo",
+    "fuzzy_match_customers",
+    "data_quality_report",
+    "profile_documents",
+    "source_feature_corr",
+    "date_part_revenue",
+    "quantity_percentiles",
+    "cdc_stats_oracle",
+    "cdc_trend_oracle",
+    "dataset_card_stats",
+    "mv_incremental_orders",
+    "table_deep_nested_read",
+    "table_update_read",
+    "table_dv_update_read",
+    "table_zonemap_read",
+    "mv_from_version_diff",
+    "format_compare_demo",
+    "cdc_dedup_trend",
 ]
-# most recently driver-checked: the r12-attested 50 (CORRECTNESS_r12:
-# 47 oracle-green + 3 rows-only by design) followed by the r13-attested
-# 50 (CORRECTNESS_r13: 50/50 oracle-green) — freshest at the very back
+# overflow: the round-11-green queries the 50-slot window could not
+# hold — first in line for round 16 (locally re-verified every round)
+_NEXT = [
+    "streaming_mv_refresh",
+    "snapshot_diff_docs",
+]
+# most recently driver-checked: the r12-attested 50 (CORRECTNESS_r12),
+# the r13-attested 49 (CORRECTNESS_r13 minus ann_ivf_trained, re-fronted
+# at r14) and the r14-attested 49 (CORRECTNESS_r14 minus cdc_dedup_trend)
+# — freshest at the very back. format_compare_demo (r12) left for _FRONT.
 _TAIL = [
     "events_user_lifecycle",
     "events_markov_transitions",
@@ -161,7 +151,6 @@ _TAIL = [
     "token_bpe_ish",
     "rolling_hash_fingerprint",
     "cdc_estimate",
-    "format_compare_demo",
     "cdc_per_file_chunks",
     "cdc_provenance",
     "cdc_estimate_xet",
@@ -240,6 +229,55 @@ _TAIL = [
     "cdc_streaming_estimate",
     "table_replace_where_read",
     "table_analyze_read",
+    "table_partition_evolution_read",
+    "customer_hierarchy_rollup",
+    "supplier_pagerank",
+    "spend_quartiles",
+    "filter_project_scan",
+    "distinct_ship_modes",
+    "user_value_twap",
+    "events_gapfill",
+    "events_attribution",
+    "events_dedup_burst",
+    "events_daily_anomaly",
+    "near_dup_source_matrix",
+    "dedup_exact_events",
+    "dedup_fingerprint_groups",
+    "dedup_keep_first",
+    "ngram_jaccard_pairs",
+    "ngram_containment_pairs",
+    "minhash_signatures",
+    "minhash_lsh_candidates",
+    "simhash_signatures",
+    "bm25_search",
+    "text_quality",
+    "binary_digest_features",
+    "lang_score",
+    "token_frequencies",
+    "knn_brute_force",
+    "semdedup_clusters",
+    "ann_lsh_bucketed",
+    "ann_ivf_probe",
+    "embedding_dedup_pairs",
+    "embedding_dedup_lsh",
+    "label_centroid_spread",
+    "synthetic_generate_table",
+    "streaming_cms_counts",
+    "grouping_sets_revenue",
+    "trailing_window_revenue",
+    "asof_prev_order",
+    "unpivot_part_metrics",
+    "range_join_price_bands",
+    "cube_order_stats",
+    "dedup_substring_spans",
+    "source_overlap_minhash",
+    "q8_market_share",
+    "q14_promo_revenue",
+    "semantic_vs_lexical_pairs",
+    "lsh_index_incremental",
+    "dedup_near_groups",
+    "dedup_near_survivors",
+    "ann_ivf_trained",
 ]
 _missing = (set(_FRONT) | set(_NEXT) | set(_TAIL)) - REGISTRY.keys()
 if _missing:

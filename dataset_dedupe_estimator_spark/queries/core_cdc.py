@@ -168,9 +168,8 @@ def format_compare_demo(spark, sf):
 
     gen = DataGenerator({"a": "int", "b": "str"}, seed=42)
     tables = gen.generate_synthetic_tables(spark, 2000, [0.5], edit_size=10)
-    # persist: every format write (and its sanity count) re-executes the
-    # lazy generator pipeline otherwise — 3 formats x 2 tables x (write +
-    # read-back) re-derivations collapse to one materialization each
+    # persist: every format write re-executes the lazy generator pipeline
+    # otherwise — 3 formats x 2 tables collapse to one materialization each
     original = finalize(tables["original"]).persist()
     deleted = finalize(tables["deleted"]).persist()
     groups = {"edit-deleted": {"original": original, "deleted": deleted}}
@@ -202,12 +201,16 @@ def format_compare_demo(spark, sf):
 
 def cdc_dedup_trend(spark, sf):
     """Cumulative dedup ratio per file prefix over the sf parquet corpus —
-    plans/estimate.py:dedup_trend (one chunk pass for all N prefixes;
-    rows-only: the chunker is not SQL-expressible)."""
-    from dataset_dedupe_estimator_spark.plans.estimate import dedup_trend
+    plans/estimate.py:dedup_trend's aggregation (first-seen novelty + two
+    distributed prefix sums, ``trend_from_chunks``) over the exported
+    chunk table, so DuckDB reproduces every running total and ratio with
+    window functions (``CDC_TREND_ORACLE_SQL``); only chunk EMISSION
+    stays rows-only. ``cdc_trend_oracle`` names the same query."""
+    from dataset_dedupe_estimator_spark.plans.estimate import (
+        trend_from_chunks,
+    )
 
-    return dedup_trend(spark, _paths(sf))
-
+    return trend_from_chunks(_export_chunks(spark, sf, _TREND_EXPORT))
 
 
 def _export_chunks(spark, sf: str, out_dir: str, params=None):
@@ -387,19 +390,6 @@ ORDER BY file
 """
 
 
-def cdc_trend_oracle(spark, sf):
-    """Oracle-bearing dedup TREND (r11): the cumulative-ratio rollup
-    (``cdc_dedup_trend``'s aggregation — first-seen novelty + two
-    distributed prefix sums) over an exported chunk table; DuckDB
-    reproduces every running total and ratio with window functions."""
-    from dataset_dedupe_estimator_spark.plans.estimate import (
-        trend_from_chunks,
-    )
-
-    exported = _export_chunks(spark, sf, _TREND_EXPORT)
-    return trend_from_chunks(exported)
-
-
 CDC_TREND_ORACLE_SQL = f"""
 WITH c AS (SELECT * FROM read_parquet('{_TREND_EXPORT}/*.parquet')),
 pf AS (SELECT file_idx, SUM(size) AS file_bytes FROM c GROUP BY 1),
@@ -487,8 +477,10 @@ def cdc_index_incremental(spark, sf):
 QUERIES = {
     "cdc_estimate": Q(cdc_estimate, None, headline=True),
     "cdc_stats_oracle": Q(cdc_stats_oracle, CDC_STATS_ORACLE_SQL),
-    "cdc_trend_oracle": Q(cdc_trend_oracle, CDC_TREND_ORACLE_SQL),
-    "cdc_dedup_trend": Q(cdc_dedup_trend, None),
+    # one query under two names: cdc_trend_oracle (r11) predates the
+    # oracle on cdc_dedup_trend, and the driver tracks both names
+    "cdc_trend_oracle": Q(cdc_dedup_trend, CDC_TREND_ORACLE_SQL),
+    "cdc_dedup_trend": Q(cdc_dedup_trend, CDC_TREND_ORACLE_SQL),
     "format_compare_demo": Q(format_compare_demo, None),
     "cdc_per_file_chunks": Q(cdc_per_file_chunks, CDC_PER_FILE_CHUNKS_SQL),
     "cdc_provenance": Q(cdc_provenance, CDC_PROVENANCE_SQL),

@@ -5,7 +5,13 @@ Reference surface (de/formats.py:21-48): a FileFormat has a name, a suffix,
 param-derived file naming (paramstem/derive_path, de/formats.py:30-44) and
 ``write(name, src, directory)`` where src is a DataFrame or an existing
 parquet path (rewrite path, de/formats.py:109-123). Every write is sanity-
-checked (row count + schema, de/formats.py:116-129).
+checked (row count + column names, de/formats.py:116-129), and the check
+costs at most one Spark job per write. The rows the writer received are
+counted inside the write job (an Observation on the written frame; the
+CDC writer's manifest); the rows and names in the written file come from
+the parquet footer (no Spark job), or from one Spark read-back job for
+JSONL, ORC and CSV. The source is never counted again. SqliteFormat
+counts its own table.
 
 Formats:
 - ParquetFormat: Spark-native parquet sink; compression / row-group size
@@ -45,6 +51,9 @@ from typing import Union
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from dataset_dedupe_estimator_spark.plans._observed import observed_metrics
 
 Source = Union[DataFrame, str, Path]
 
@@ -64,14 +73,17 @@ def _resolve(spark: SparkSession, src: Source) -> DataFrame:
 
 
 def _single_file_write(df: DataFrame, writer_fmt: str, options: dict, dest: Path) -> Path:
-    """Write a DataFrame as exactly one file named ``dest``.
+    """Write a DataFrame as exactly one file named ``dest``, sanity-checked.
 
     Spark writers emit a directory of part files; the estimator needs
     file-granular outputs (one ChunkStore per file). One task writes the
-    file, then it is renamed into place.
+    file, then it is renamed into place. An Observation on the written
+    frame counts the rows the writer receives inside the write job, so
+    the check never re-counts the source.
     """
     tmp = str(dest) + ".spark-tmp"
-    w = df.coalesce(1).write.mode("overwrite")
+    observed, written_rows = observed_metrics(df.coalesce(1), rows=F.count(F.lit(1)))
+    w = observed.write.mode("overwrite")
     for k, v in options.items():
         w = w.option(k, v)
     w.format(writer_fmt).save(tmp)
@@ -85,6 +97,7 @@ def _single_file_write(df: DataFrame, writer_fmt: str, options: dict, dest: Path
     dest.parent.mkdir(parents=True, exist_ok=True)
     shutil.move(parts[0], dest)
     shutil.rmtree(tmp)
+    sanity_check(df, written_rows()["rows"], dest, writer_fmt)
     return dest
 
 
@@ -171,13 +184,51 @@ def write_parquet_distributed(
     return [(r.path, r.n_rows) for r in manifest]
 
 
-def sanity_check(spark: SparkSession, src: DataFrame, written: DataFrame) -> None:
-    """Reference de/formats.py:116-129: row count + schema must survive."""
-    if [f.name for f in src.schema.fields] != [f.name for f in written.schema.fields]:
-        raise SanityCheckError(
-            f"schema mismatch: {src.schema.simpleString()} vs {written.schema.simpleString()}"
+def sanity_check(src: DataFrame, n_src: int, dest: Path, writer_fmt: str) -> None:
+    """Reference de/formats.py:116-129: row count + column names must
+    survive the write.
+
+    ``n_src`` is the number of rows the writer received, counted inside
+    the write job (an Observation for Spark's writers, the manifest for
+    the executor-side pyarrow writer); the source is not counted again.
+    Rows and names in the written file come from:
+
+    - parquet: the file footer (``pq.ParquetFile``), no Spark job —
+      ``spark.read.parquet`` would run a schema-inference job first;
+    - json: one Spark job over the file's lines, counting them and
+      collecting every top-level key present. Spark's JSON writer omits
+      null fields, so the keys must be a subset of the source names;
+    - orc: a Spark read-back (its count and column names);
+    - csv: a Spark read-back count with the source schema (CSV is
+      untyped; the names are the source's).
+    """
+    names = src.columns
+    if writer_fmt == "parquet":
+        pf = pq.ParquetFile(dest)
+        out_names, n_out = pf.schema_arrow.names, pf.metadata.num_rows
+    elif writer_fmt == "json":
+        row = (
+            src.sparkSession.read.text(str(dest))
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.array_distinct(
+                    F.flatten(F.collect_set(F.json_object_keys("value")))
+                ).alias("keys"),
+            )
+            .first()
         )
-    n_src, n_out = src.count(), written.count()
+        n_out = row.n
+        out_names = names if set(row.keys) <= set(names) else sorted(row.keys)
+    else:
+        reader = src.sparkSession.read
+        back = (
+            reader.orc(str(dest))
+            if writer_fmt == "orc"
+            else reader.csv(str(dest), header=True, schema=src.schema)
+        )
+        out_names, n_out = back.columns, back.count()
+    if names != out_names:
+        raise SanityCheckError(f"column mismatch: {names} vs {out_names}")
     if n_src != n_out:
         raise SanityCheckError(f"row count mismatch: {n_src} vs {n_out}")
 
@@ -234,9 +285,7 @@ class ParquetFormat(FileFormat):
         if self.data_page_size is not None:
             options["parquet.page.size"] = str(self.data_page_size)
         options["parquet.enable.dictionary"] = "true" if self.use_dictionary else "false"
-        _single_file_write(df, "parquet", options, dest)
-        sanity_check(spark, df, spark.read.parquet(str(dest)))
-        return dest
+        return _single_file_write(df, "parquet", options, dest)
 
 
 @dataclass(frozen=True)
@@ -300,7 +349,7 @@ class CdcParquetFormat(FileFormat):
             empty = to_arrow_schema(df.schema).empty_table()
             pq.write_table(empty, dest, compression=self.compression)
         shutil.rmtree(tmp, ignore_errors=True)
-        sanity_check(spark, df, spark.read.parquet(str(dest)))
+        sanity_check(df, sum(n for _, n in manifest), dest, "parquet")
         return dest
 
 
@@ -324,9 +373,7 @@ class JsonLinesFormat(FileFormat):
         options = {}
         if self.compression:
             options["compression"] = self.compression
-        _single_file_write(df, "json", options, dest)
-        sanity_check(spark, df, spark.read.json(str(dest), schema=df.schema))
-        return dest
+        return _single_file_write(df, "json", options, dest)
 
 
 @dataclass(frozen=True)
@@ -346,9 +393,7 @@ class OrcFormat(FileFormat):
     def write(self, spark: SparkSession, stem: str, src: Source, directory: Path) -> Path:
         df = _resolve(spark, src)
         dest = self.derive_path(stem, directory)
-        _single_file_write(df, "orc", {"compression": self.compression}, dest)
-        sanity_check(spark, df, spark.read.orc(str(dest)))
-        return dest
+        return _single_file_write(df, "orc", {"compression": self.compression}, dest)
 
 
 @dataclass(frozen=True)
@@ -377,11 +422,7 @@ class CsvFormat(FileFormat):
         options = {"header": "true"}
         if self.compression:
             options["compression"] = self.compression
-        _single_file_write(df, "csv", options, dest)
-        sanity_check(
-            spark, df, spark.read.csv(str(dest), header=True, schema=df.schema)
-        )
-        return dest
+        return _single_file_write(df, "csv", options, dest)
 
 
 @dataclass(frozen=True)

@@ -84,9 +84,10 @@ def test_driver_window_rotation_invariants():
     rows_only = {n for n in REGISTRY if n not in oracles}
     # r13: cdc_streaming_estimate (chunk table IS the export) and
     # ann_ivf_trained (deterministic Lloyd's + exported-centroid
-    # re-derivation) gained oracles — 9 = chunk emission where the
-    # export would BE the timed work (cdc_estimate headline,
-    # cdc_dedup_trend's one-pass variant, cdc_approx_estimate's HLL,
+    # re-derivation) gained oracles; r15: cdc_dedup_trend runs its trend
+    # aggregation over the exported chunk table (CDC_TREND_ORACLE_SQL).
+    # 8 = chunk emission where the export would BE the timed work
+    # (cdc_estimate headline, cdc_approx_estimate's HLL,
     # format_compare_demo's env-dependent file bytes), BPE (2),
     # demos/pipelines (3)
-    assert len(rows_only) == 9, sorted(rows_only)
+    assert len(rows_only) == 8, sorted(rows_only)

@@ -84,3 +84,59 @@ def test_display_helpers(spark, variant_groups, tmp_path):
     assert "edit-deleted" in grid.columns and "identical" in grid.columns
     report = markdown_report(spark, df)
     assert "### identical" in report and "**" in report
+
+
+@pytest.fixture(scope="module")
+def edited_groups(spark):
+    """The benchmark's shape: 2 groups of 2 sharing one ``original``."""
+    gen = DataGenerator({"a": "int", "b": "str"}, seed=7)
+    tables = gen.generate_synthetic_tables(spark, 2000, [0.25, 0.75], edit_size=10)
+    v = {n: finalize(tables[n]).cache() for n in ("original", "inserted", "updated")}
+    return {n: {"original": v["original"], n: v[n]} for n in ("inserted", "updated")}
+
+
+def test_shared_source_written_once_per_format(spark, edited_groups, tmp_path, monkeypatch):
+    """A source used by two groups is written once per format and linked
+    into the other group's directory: identical bytes in both, and each
+    group's total_len is its own directory's bytes."""
+    calls = []
+    real = {cls: cls.write for cls in (ParquetFormat, JsonLinesFormat)}
+
+    def counting(cls):
+        def write(self, spark, stem, src, directory):
+            calls.append((self.name, stem))
+            return real[cls](self, spark, stem, src, directory)
+
+        return write
+
+    for cls in real:
+        monkeypatch.setattr(cls, "write", counting(cls))
+    fmts = [ParquetFormat(compression="zstd"), JsonLinesFormat()]
+    results = compare_formats_tables(spark, fmts, edited_groups, tmp_path)
+    # 3 distinct sources × 2 formats, not 2 groups × 2 members × 2 formats
+    assert len(calls) == 6
+    assert calls.count(("parquet", "original")) == 1
+    for label in ("parquet-c=zstd", "jsonlines"):
+        a, b = (
+            next((tmp_path / g / label).glob("original*")) for g in ("inserted", "updated")
+        )
+        assert a.read_bytes() == b.read_bytes()
+    for r in results:
+        d = tmp_path / r.group / r.format
+        assert r.total_len == sum(f.stat().st_size for f in d.iterdir())
+        assert r.numfiles == 2 and r.write_seconds > 0
+
+
+def test_compare_job_budget(spark, edited_groups, tmp_path):
+    """One compare call shaped like the benchmark's (2 formats × 2 groups
+    of 2) runs at most 16 Spark jobs: one write per (format, source), row
+    counts inside the writes, one chunk pass."""
+    fmts = [ParquetFormat(compression="zstd"), JsonLinesFormat()]
+    sc = spark.sparkContext
+    # the pool threads' jobs carry no job group; neither may this thread's
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    compare_formats_tables(spark, fmts, edited_groups, tmp_path / "warm")
+    before = max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+    compare_formats_tables(spark, fmts, edited_groups, tmp_path / "timed")
+    jobs = [j for j in sc.statusTracker().getJobIdsForGroup(None) if j > before]
+    assert 0 < len(jobs) <= 16, len(jobs)

@@ -155,3 +155,67 @@ def test_dedup_trend_halves_on_duplicate_corpus(spark, parquet_paths):
     # second copy of the corpus introduces zero novel bytes
     assert all(r.novel_bytes == 0 for r in rows[n:])
     assert abs(rows[-1].cum_dedup_ratio - rows[n - 1].cum_dedup_ratio / 2) < 1e-6
+
+
+@pytest.mark.parametrize("mode", ["no_xet", "shared_xet", "incompatible_xet"])
+def test_estimate_groups_matches_per_group_estimate(spark, parquet_paths, tmp_path, mode):
+    """The group-keyed core scopes dedup to each group: its dicts equal a
+    per-group ``estimate`` field for field, a file listed in two groups
+    included, and a group of one empty file reads all zeros."""
+    from dataclasses import replace
+
+    from dataset_dedupe_estimator_spark.operators.chunker import XET_PARAMS
+    from dataset_dedupe_estimator_spark.plans.estimate import estimate_groups
+
+    empty = tmp_path / "empty.bin"
+    empty.write_bytes(b"")
+    # a shifted copy: how many of its bytes dedup depends on where each
+    # parameterization cuts, unlike whole-file duplicates
+    rng = np.random.default_rng(5)
+    base = rng.bytes(400_000)
+    shifted = [tmp_path / "base.bin", tmp_path / "shifted.bin"]
+    shifted[0].write_bytes(base)
+    shifted[1].write_bytes(rng.bytes(5_000) + base[100_000:])
+    groups = [
+        parquet_paths[:3],
+        [str(empty)],
+        parquet_paths[2:5] + parquet_paths[2:3],
+        parquet_paths[5:6],
+        [str(p) for p in shifted],
+    ]
+    kw = {
+        "no_xet": {"with_xet": False},
+        "shared_xet": {"with_xet": True},
+        "incompatible_xet": {
+            "with_xet": True,
+            "xet_params": replace(XET_PARAMS, seed=12345),
+        },
+    }[mode]
+    got = estimate_groups(spark, groups, **kw)
+    assert got == [estimate(spark, g, **kw) for g in groups]
+    assert got[1]["numfiles"] == 1 and got[1]["total_len"] == 0
+    assert got[1]["dedup_ratio"] == 0.0
+    # independent of the core: the chunk table's own aggregate per group
+    if mode == "no_xet":
+        from dataset_dedupe_estimator_spark.operators.chunker import chunk_files_auto
+        from dataset_dedupe_estimator_spark.plans.estimate import ESTIMATE_PARAMS
+
+        row = chunk_stats(chunk_files_auto(spark, groups[2], params=ESTIMATE_PARAMS)).first()
+        assert (got[2]["total_len"], got[2]["chunk_bytes"]) == (row.total_len, row.chunk_bytes)
+    if mode == "incompatible_xet":
+        # the xet side's unique-chunk bytes from their own aggregate over
+        # the xet parameterization's chunks
+        from pyspark.sql import functions as F
+
+        from dataset_dedupe_estimator_spark.operators.chunker import chunk_files_auto
+
+        xet = (
+            chunk_files_auto(spark, groups[4], params=kw["xet_params"])
+            .groupBy("hash")
+            .agg(F.first("size").alias("size"))
+            .agg(F.sum("size").alias("xet_bytes"))
+            .first()
+        )
+        assert got[4]["xet_bytes"] == xet.xet_bytes
+        # the two parameterizations dedup the shifted copy differently
+        assert got[4]["xet_bytes"] != got[4]["chunk_bytes"]

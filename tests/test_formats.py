@@ -208,3 +208,68 @@ def test_orc_roundtrip(spark, small_df, tmp_path):
     assert sorted(back.collect()) == sorted(small_df.collect())
     names = [f.name for f in default_formats(with_orc=True)]
     assert "orc" in names
+
+
+def _drop_last_row(dest):
+    if dest.suffix == ".parquet":
+        t = pq.read_table(dest)
+        pq.write_table(t.slice(0, t.num_rows - 1), dest)
+    else:
+        lines = dest.read_text().splitlines(keepends=True)
+        dest.write_text("".join(lines[:-1]))
+
+
+def _rename_column(dest):
+    if dest.suffix == ".parquet":
+        t = pq.read_table(dest)
+        pq.write_table(t.rename_columns(["a", "b_renamed"]), dest)
+    else:
+        dest.write_text(dest.read_text().replace('"b":', '"b_renamed":'))
+
+
+@pytest.mark.parametrize("tamper", [_drop_last_row, _rename_column])
+@pytest.mark.parametrize("fmt", [ParquetFormat(), JsonLinesFormat()], ids=["parquet", "jsonl"])
+def test_sanity_check_reads_the_written_file(spark, small_df, tmp_path, monkeypatch, fmt, tamper):
+    """The check compares the rows the writer received with what the file
+    holds: a file that lost a row, or has a renamed column, between the
+    write and the check raises."""
+    from dataset_dedupe_estimator_spark.sources import formats as m
+
+    real = m.sanity_check
+
+    def tampered_check(src, n_src, dest, writer_fmt):
+        tamper(dest)
+        return real(src, n_src, dest, writer_fmt)
+
+    fmt.write(spark, "ok", small_df, tmp_path)  # untouched file passes
+    monkeypatch.setattr(m, "sanity_check", tampered_check)
+    with pytest.raises(m.SanityCheckError):
+        fmt.write(spark, "t", small_df, tmp_path)
+
+
+def test_sanity_check_counts_rows_inside_the_write(spark, tmp_path, monkeypatch):
+    """Writes of an empty frame and of a multi-partition frame pass the
+    check with the writer's own row count; the parquet check reads the
+    footer, with no Spark job."""
+    from dataset_dedupe_estimator_spark.sources import formats as m
+
+    empty = spark.createDataFrame([], "a bigint, b string")
+    for fmt in (ParquetFormat(), JsonLinesFormat()):
+        fmt.write(spark, "empty", empty, tmp_path)
+    df = spark.range(0, 1000, 1, 4).selectExpr("id AS a", "CAST(id AS STRING) AS b")
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.jobGroup.id", None)
+    seen = []
+    real = m.sanity_check
+
+    def spy(src, n_src, dest, writer_fmt):
+        before = max(sc.statusTracker().getJobIdsForGroup(None), default=-1)
+        real(src, n_src, dest, writer_fmt)
+        jobs = [j for j in sc.statusTracker().getJobIdsForGroup(None) if j > before]
+        seen.append((writer_fmt, n_src, len(jobs)))
+
+    monkeypatch.setattr(m, "sanity_check", spy)
+    ParquetFormat().write(spark, "t", df, tmp_path)
+    JsonLinesFormat().write(spark, "t", df, tmp_path)
+    assert seen[0] == ("parquet", 1000, 0)
+    assert seen[1][:2] == ("json", 1000)

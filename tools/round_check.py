@@ -8,8 +8,9 @@ Stages (``--fast`` runs only the first three):
   2. oracle gate         — tools/check_oracles.py over the whole registry
                            (writes CORRECTNESS_LOCAL_r{N}.json for the in-progress round)
   3. driver smoke        — __spark_entry__.entry() returns rows at sf0.001
-  4. bench               — bench.py one-line JSON at sf0.1
-  5. stress battery      — estimate resync + index admission at 50 MB
+  4. perfbench tests     — the benchmark's own tests (python3 -m pytest perfbench -q)
+  5. bench               — bench.py one-line JSON at sf0.1
+  6. stress battery      — estimate resync + index admission at 50 MB
 
 Exit code 0 only if every stage passes.
 """
@@ -110,6 +111,13 @@ def main() -> int:
     )
 
     if not fast:
+        results.append(
+            _run(
+                "perfbench tests",
+                [sys.executable, "-m", "pytest", "perfbench", "-q"],
+                pytest_ok,
+            )
+        )
 
         def bench_ok(p):
             for line in (p.stdout or "").splitlines():
