@@ -880,13 +880,13 @@ def cmd_gram_index(args) -> int:
     if args.action == "query":
         from pyspark.sql import functions as F
 
-        from dataset_dedupe_estimator_spark.plans.gram_index import _load_meta
+        from dataset_dedupe_estimator_spark.plans.gram_index import STORE
 
         spans = query_docs(spark, _docs(args.docs), args.index_dir).persist()
         if args.spans_out:
             # read-only probe: stamp the generation the index was queried
             # at, keeping the shared spans-sink schema uniform
-            queried_gen = _load_meta(args.index_dir)["generations"] - 1
+            queried_gen = STORE.load(args.index_dir)["generations"] - 1
             spans.withColumn("generation", F.lit(queried_gen)).write.mode(
                 "append"
             ).parquet(args.spans_out)
@@ -939,9 +939,9 @@ def cmd_pq_index(args) -> int:
             return 2
         emb = spark.read.parquet(args.vectors)
         PqIndex.build(emb, args.index_dir, k=args.cells, ks=args.codes, seed=args.seed)
-        from dataset_dedupe_estimator_spark.operators.ann import _pq_meta
+        from dataset_dedupe_estimator_spark.operators.ann import PQ_STORE
 
-        n = _pq_meta(args.index_dir)["total"]
+        n = PQ_STORE.load(args.index_dir)["total"]
         print(f"indexed {n} vectors: {args.cells} cells, 8x{args.codes} codebooks")
         return 0
     if args.action == "add":

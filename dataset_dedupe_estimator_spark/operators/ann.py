@@ -18,6 +18,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from dataset_dedupe_estimator_spark.functions.vectors import cosine, norm
+from dataset_dedupe_estimator_spark.plans._genstore import GenStore
 
 
 def _make_lloyd_assign_fn(C, dim: int, with_nrm: bool = False):
@@ -192,6 +193,9 @@ class IvfIndex:
         )
 
 
+PQ_STORE = GenStore("_pq_meta.json", indent=None)
+
+
 class PqIndex:
     """Persistent IVF-PQ index — the billion-vector production shape of
     ``queries/similarity.py:ivfpq_search``: trained coarse centroids and
@@ -203,19 +207,19 @@ class PqIndex:
     at 64 dims the code column is 32x smaller than the vectors, which is
     what lets a 1B-vector index fit a small fraction of cluster memory.
 
-    Storage follows the same log-structured protocol as the chunk/LSH
-    indexes (plans/chunk_index.py, plans/lsh_index.py): code rows live in
-    ``gen-NNNNN/`` directories (each cell-partitioned parquet), and the
-    JSON manifest — rewritten with an atomic ``os.replace`` — is the ONLY
-    commit point. Readers list generations ``[floor, generations)`` from
-    the manifest, so they can never observe a partial append (uncommitted
+    Storage is the generation store the other persistent indexes share
+    (plans/_genstore.py): code rows live in ``gen-NNNNN/`` directories
+    (each cell-partitioned parquet), and the JSON manifest — rewritten
+    with an atomic ``os.replace`` — is the ONLY commit point. Readers
+    list generations ``[compacted_below, generations)`` from the
+    manifest, so they can never observe a partial append (uncommitted
     gen dirs are invisible) or a mid-compact rename (compaction commits a
-    merged generation and advances ``floor``; superseded dirs are removed
-    only after the commit). Writers are single-writer
+    merged generation and advances ``compacted_below``; superseded dirs
+    are removed only after the commit). Writers are single-writer
     (plans/_index_lock.py); readers never take the lock.
     """
 
-    MANIFEST = "_pq_meta.json"
+    MANIFEST = PQ_STORE.manifest
 
     def __init__(self, index_dir, centroids, codebooks, m, sub,
                  encoding: str = "residual"):
@@ -278,8 +282,6 @@ class PqIndex:
         seed: int = 42,
         encoding: str = "residual",
     ) -> "PqIndex":
-        import json
-        import os
         from pathlib import Path
 
         from dataset_dedupe_estimator_spark.plans._index_lock import writer_lock
@@ -351,21 +353,21 @@ class PqIndex:
         with writer_lock(index_dir):
             # a crashed earlier build may have left gen dirs with no
             # manifest (never committed) — clear them before rebuilding
-            _pq_clear_orphans(index_dir, floor=0, counter=0)
+            PQ_STORE.clear(index_dir, None)
             coded = ivf.assigned.select(
                 F.col("vec_id"), F.col("cell"), F.col("embedding")
             ).mapInArrow(encode, "vec_id long, cell int, codes array<long>")
-            gen0 = _pq_gen_dir(index_dir, 0)
+            gen0 = PQ_STORE.gen_path(index_dir, 0)
             coded.write.mode("overwrite").partitionBy("cell").parquet(str(gen0))
             total = _pq_count(coded.sparkSession, [str(gen0)])
-            _pq_commit(
+            PQ_STORE.commit(
                 index_dir,
                 {
                     "k": k, "m": m, "ks": ks, "dim": dim,
                     "centroids": ivf.centroids.tolist(),
                     "codebooks": books.tolist(),
                     "generations": 1,
-                    "floor": 0,
+                    "compacted_below": 0,
                     "total": total,
                     "encoding": encoding,
                 },
@@ -374,7 +376,7 @@ class PqIndex:
 
     @classmethod
     def load(cls, index_dir) -> "PqIndex":
-        mf = _pq_meta(index_dir)
+        mf = PQ_STORE.load(index_dir)
         books = np.asarray(mf["codebooks"], dtype=np.float64)
         return cls(
             index_dir,
@@ -386,15 +388,12 @@ class PqIndex:
         )
 
     def codes_df(self, spark) -> DataFrame:
-        """The committed code store: generations ``[floor, generations)``
-        per the manifest, re-read on every call so a reader sees each
-        admission as soon as its manifest commit lands — and never
-        sooner. Each generation is its own partitioned-parquet root
-        (Spark rejects multiple partitioned roots in one read), so the
-        store is a union of per-generation scans — cell partition
-        pruning applies to every scan in the union."""
-        import functools
-
+        """The committed code store: the manifest's live generations,
+        re-read on every call so a reader sees each admission as soon as
+        its manifest commit lands — and never sooner. Each generation is
+        its own cell-partitioned root, so the store is a union of
+        per-generation scans — cell partition pruning applies to every
+        scan in the union."""
         from dataset_dedupe_estimator_spark.plans._tombstones import (
             minus_tombstones,
             tombstones_df,
@@ -403,13 +402,8 @@ class PqIndex:
         # ONE manifest read for both the generation list and the
         # tombstone window (a delete landing between two reads would
         # otherwise pair new tombstones with an old generation list)
-        mf = _pq_meta(self.index_dir)
-        gens = [
-            str(_pq_gen_dir(self.index_dir, n))
-            for n in range(mf.get("floor", 0), mf["generations"])
-        ]
-        reads = [spark.read.parquet(g) for g in gens]
-        df = functools.reduce(DataFrame.unionByName, reads)
+        mf = PQ_STORE.load(self.index_dir)
+        df = PQ_STORE.read_each(spark, self.index_dir, mf)
         return minus_tombstones(
             df, tombstones_df(spark, self.index_dir, mf, "vec_id"), "vec_id"
         )
@@ -700,58 +694,6 @@ def _pq_search_batch(idx: "PqIndex", spark, queries, topk, nprobe, emb,
     )
 
 
-def _pq_gen_dir(index_dir, n: int):
-    from pathlib import Path
-
-    return Path(index_dir) / f"gen-{n:05d}"
-
-
-def _pq_meta(index_dir) -> dict:
-    import json
-    from pathlib import Path
-
-    with open(Path(index_dir) / PqIndex.MANIFEST) as f:
-        return json.load(f)
-
-
-def _pq_commit(index_dir, meta: dict) -> None:
-    """Atomic manifest replace — the single commit point for every
-    build/add/compact."""
-    import json
-    import os
-    from pathlib import Path
-
-    index_dir = Path(index_dir)
-    tmp = index_dir / (PqIndex.MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, index_dir / PqIndex.MANIFEST)
-
-
-def _pq_live_gens(index_dir) -> list[str]:
-    mf = _pq_meta(index_dir)
-    return [
-        str(_pq_gen_dir(index_dir, n))
-        for n in range(mf.get("floor", 0), mf["generations"])
-    ]
-
-
-def _pq_clear_orphans(index_dir, floor: int, counter: int) -> None:
-    """Remove generation dirs outside ``[floor, counter)``: dirs at or
-    above the counter are crashed uncommitted writes; dirs below the
-    floor were superseded by a committed compaction. Readers never list
-    either (they go by the manifest), so removal is safe at any time —
-    writers call this under the lock before writing."""
-    import re
-    import shutil
-    from pathlib import Path
-
-    for p in Path(index_dir).glob("gen-*"):
-        m = re.fullmatch(r"gen-(\d{5})", p.name)
-        if m and not (floor <= int(m.group(1)) < counter):
-            shutil.rmtree(p)
-
-
 def _pq_count(spark, paths: list[str]) -> int:
     return spark.read.parquet(*paths).count()
 
@@ -814,9 +756,9 @@ def pq_index_add(spark, index_dir, emb: DataFrame, vec_col: str = "embedding", i
             )
 
     with writer_lock(index_dir):
-        meta = _pq_meta(index_dir)
+        meta = PQ_STORE.load(index_dir)
         gen = meta["generations"]
-        _pq_clear_orphans(index_dir, meta.get("floor", 0), gen)
+        PQ_STORE.clear(index_dir, meta)
         from dataset_dedupe_estimator_spark.plans._tombstones import (
             tombstones_df,
         )
@@ -832,7 +774,7 @@ def pq_index_add(spark, index_dir, emb: DataFrame, vec_col: str = "embedding", i
         coded = fresh.mapInArrow(
             assign_encode, "vec_id long, cell int, codes array<long>"
         )
-        out = _pq_gen_dir(index_dir, gen)
+        out = PQ_STORE.gen_path(index_dir, gen)
         coded.write.partitionBy("cell").parquet(str(out))
         if not _pq_has_rows(out):
             shutil.rmtree(out)  # nothing novel: no new generation
@@ -840,7 +782,7 @@ def pq_index_add(spark, index_dir, emb: DataFrame, vec_col: str = "embedding", i
         admitted = _pq_count(spark, [str(out)])
         meta["generations"] = gen + 1
         meta["total"] = meta["total"] + admitted
-        _pq_commit(index_dir, meta)
+        PQ_STORE.commit(index_dir, meta)
     return {"admitted": admitted, "total": meta["total"]}
 
 
@@ -861,7 +803,7 @@ def pq_index_delete(spark, index_dir, ids) -> dict:
     )
 
     with writer_lock(index_dir):
-        meta = _pq_meta(index_dir)
+        meta = PQ_STORE.load(index_dir)
         idx = PqIndex.load(index_dir)
         ids_df = normalize_ids(spark, ids, "vec_id")
         # live membership BEFORE staging the new set (codes_df reads the
@@ -877,7 +819,7 @@ def pq_index_delete(spark, index_dir, ids) -> dict:
             {"set": meta["tombstone_sets"] - 1, "vectors": matched,
              "denylisted": n_new}
         )
-        _pq_commit(index_dir, meta)  # commit point
+        PQ_STORE.commit(index_dir, meta)  # commit point
     return {"deleted": matched, "denylisted": n_new, "total": meta["total"]}
 
 
@@ -885,7 +827,8 @@ def pq_index_compact(spark, index_dir, files_per_cell: int = 1) -> dict:
     """Reclaim the small files a long admission history accumulates:
     merge every live generation into ONE new generation with
     ``files_per_cell`` files per cell, commit it by advancing the
-    manifest's ``floor`` past the superseded dirs, then remove them.
+    manifest's ``compacted_below`` past the superseded dirs, then remove
+    them.
     Runs under the writer lock. A crash before the manifest commit
     leaves an uncommitted gen dir the next writer clears; a crash after
     the commit leaves superseded dirs readers never list (the next
@@ -894,42 +837,29 @@ def pq_index_compact(spark, index_dir, files_per_cell: int = 1) -> dict:
     from dataset_dedupe_estimator_spark.plans._index_lock import writer_lock
 
     with writer_lock(index_dir):
-        meta = _pq_meta(index_dir)
-        gen, floor = meta["generations"], meta.get("floor", 0)
-        _pq_clear_orphans(index_dir, floor, gen)
-        import functools
-
-        live = [str(_pq_gen_dir(index_dir, n)) for n in range(floor, gen)]
+        meta = PQ_STORE.load(index_dir)
+        gen = meta["generations"]
+        PQ_STORE.clear(index_dir, meta)
         n_before = sum(
-            len(list(_pq_gen_dir(index_dir, n).rglob("*.parquet")))
-            for n in range(floor, gen)
+            len(list(g.rglob("*.parquet"))) for g in PQ_STORE.live(index_dir, meta)
         )
         from dataset_dedupe_estimator_spark.plans._tombstones import (
-            clear_tombstones,
             minus_tombstones,
             tombstones_df,
         )
 
         df = minus_tombstones(  # physically purge deleted vectors
-            functools.reduce(
-                DataFrame.unionByName, [spark.read.parquet(p) for p in live]
-            ),
+            PQ_STORE.read_each(spark, index_dir, meta),
             tombstones_df(spark, index_dir, meta, "vec_id"),
             "vec_id",
         )
-        out = _pq_gen_dir(index_dir, gen)
+        out = PQ_STORE.gen_path(index_dir, gen)
         (
             df.repartition(int(files_per_cell), "cell")
             .write.partitionBy("cell")
             .parquet(str(out))
         )
         n_rows = _pq_count(spark, [str(out)])
-        meta["generations"] = gen + 1
-        meta["floor"] = gen
-        meta["tombstone_sets"] = 0  # purge is durable with this commit
-        meta["tombstone_floor"] = 0
-        _pq_commit(index_dir, meta)  # commit point
-        _pq_clear_orphans(index_dir, gen, gen + 1)
-        clear_tombstones(index_dir)
+        PQ_STORE.commit_compaction(index_dir, meta, gen)
         n_after = len(list(out.rglob("*.parquet")))
     return {"rows": n_rows, "files_before": n_before, "files_after": n_after}

@@ -1,9 +1,8 @@
 """Single-writer guard shared by the persistent indexes.
 
-The chunk index (`plans/chunk_index.py`) and LSH doc index
-(`plans/lsh_index.py`) use the same commit protocol: write the next
-``gen-NNNNN`` directory, then atomically commit it by rewriting the
-manifest. That protocol is crash-safe for ONE writer, but two concurrent
+The five persistent indexes share one commit protocol, the generation
+store (`plans/_genstore.py`): write the next ``gen-NNNNN`` directory,
+then atomically commit it by rewriting the manifest. That protocol is crash-safe for ONE writer, but two concurrent
 writers both read ``meta['generations']``, target the same generation
 directory, and each treats the other's in-flight directory as a crashed
 orphan (``shutil.rmtree``) — the surviving manifest can then commit a

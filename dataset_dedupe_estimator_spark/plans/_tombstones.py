@@ -1,16 +1,19 @@
 """Shared tombstone-set machinery for the persistent indexes.
 
 All five indexes (chunk, LSH, gram, text — plans/*.py — and PQ,
-operators/ann.py) are log-structured: immutable parquet generations, a
-JSON manifest as the single commit point, one writer lock. Deletion
-(takedown, right-to-be-forgotten, retraction of a contaminated source)
-gets the same treatment: a delete appends an immutable TOMBSTONE SET —
-a small parquet of deleted keys under ``<index>/tombstones/`` — and
-commits by bumping ``tombstone_sets`` in the manifest. Readers
-anti-join live rows against the union of committed sets (tiny → AQE
-broadcasts); COMPACTION physically drops tombstoned rows and clears
-the sets in the same manifest commit that advances the floor, so the
-bytes are actually gone, not just hidden.
+operators/ann.py) keep their rows in the generation store
+(plans/_genstore.py): immutable parquet generations, a JSON manifest as
+the single commit point, one writer lock. Deletion (takedown,
+right-to-be-forgotten, retraction of a contaminated source) gets the
+same treatment: a delete appends an immutable TOMBSTONE SET — a small
+parquet of deleted keys under ``<index>/tombstones/`` — and commits by
+bumping ``tombstone_sets`` in the index's manifest. Readers anti-join
+live rows against the union of committed sets (tiny → AQE
+broadcasts); COMPACTION physically drops tombstoned rows, and the
+store's compaction commit (``GenStore.commit_compaction``) zeroes the
+set window in the same manifest write that advances the floor, then
+calls :func:`clear_tombstones` — so the bytes are actually gone, not
+just hidden.
 
 Semantics (shared across indexes, pinned by each index's tests):
 

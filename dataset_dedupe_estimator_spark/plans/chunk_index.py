@@ -39,9 +39,6 @@ impossible by construction.
 from __future__ import annotations
 
 import dataclasses
-import json
-import os
-
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,12 +49,12 @@ from dataset_dedupe_estimator_spark.operators.chunker import (
     ChunkerParams,
     chunk_files_auto,
 )
+from dataset_dedupe_estimator_spark.plans._genstore import GenStore
 from dataset_dedupe_estimator_spark.plans._index_lock import writer_lock
 from dataset_dedupe_estimator_spark.plans._observed import observed_metrics
 from dataset_dedupe_estimator_spark.plans._tombstones import (
     _clear_stale_sets,
     append_tombstone_set,
-    clear_tombstones,
     minus_tombstones,
     normalize_ids,
     resurrect_keys,
@@ -65,7 +62,7 @@ from dataset_dedupe_estimator_spark.plans._tombstones import (
 )
 from dataset_dedupe_estimator_spark.plans.estimate import ESTIMATE_PARAMS
 
-_META = "_index_meta.json"
+STORE = GenStore("_index_meta.json", ".parquet")
 _CHUNK_COLS = ("hash", "size", "csize")  # csize = chunker "compressed"
 
 
@@ -74,45 +71,6 @@ def _params_dict(params: ChunkerParams) -> dict:
     if d.get("gear_table") is not None:
         d["gear_table"] = list(d["gear_table"])
     return d
-
-
-def _gen_no(p: Path) -> int:
-    """Generation number from a dir name — parse the full digit run, not
-    a fixed 5-char slice: a streaming index creates one generation per
-    microbatch and crosses 99999 within weeks."""
-    return int(p.name.removeprefix("gen-").removesuffix(".parquet"))
-
-
-def _index_files(index_dir: str | Path, floor: int = 0) -> list[str]:
-    """Generation dirs at or above ``floor`` (gens below a committed
-    compaction are superseded — their rows live in the compacted
-    generation — and are ignored even if a crash left them on disk),
-    in numeric generation order."""
-    gens = sorted(Path(index_dir).glob("gen-*.parquet"), key=_gen_no)
-    return [str(p) for p in gens if _gen_no(p) >= floor]
-
-
-def _read_index(spark: SparkSession, index_dir: str | Path) -> DataFrame:
-    # no manifest => not an index; raising beats resurrecting superseded
-    # pre-compaction generations with a silent floor=0 fallback
-    floor = _load_meta(index_dir).get("compacted_below", 0)
-    files = _index_files(index_dir, floor)
-    if not files:
-        raise FileNotFoundError(f"no index generations under {index_dir}")
-    return spark.read.parquet(*files)
-
-
-def _load_meta(index_dir: str | Path) -> dict:
-    with open(Path(index_dir) / _META) as f:
-        return json.load(f)
-
-
-def _write_meta(index_dir: Path, meta: dict) -> None:
-    """Atomic replace: a crash mid-write never corrupts the manifest."""
-    tmp = index_dir / (_META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(tmp, index_dir / _META)
 
 
 def build_index(
@@ -126,23 +84,15 @@ def build_index(
 
     Single-writer: all index mutations (build/update/compact) take the
     index dir's exclusive writer lock — see plans/_index_lock.py."""
-    import shutil
-
     index_dir = Path(index_dir)
-    if (index_dir / _META).exists():
+    if STORE.has_manifest(index_dir):
         raise FileExistsError(f"{index_dir} already holds an index")
     index_dir.mkdir(parents=True, exist_ok=True)
     with writer_lock(index_dir):
-        if (index_dir / _META).exists():  # re-check under the lock
+        if STORE.has_manifest(index_dir):  # re-check under the lock
             raise FileExistsError(f"{index_dir} already holds an index")
-        gen0 = index_dir / "gen-00000.parquet"
-        if gen0.exists():
-            # no manifest but gen-00000 present: a prior build crashed
-            # between the parquet write and the manifest commit. The
-            # manifest is the commit point, so the orphan was never part
-            # of any index — remove it and redo (retry-safe, mirroring
-            # update_index's orphan protocol).
-            shutil.rmtree(gen0)
+        STORE.clear(index_dir, None)  # a crashed build's orphans
+        gen0 = STORE.gen_path(index_dir, 0)
         chunks = chunk_files_auto(spark, paths, params=params)
         distinct = (
             chunks.groupBy("hash")
@@ -165,7 +115,7 @@ def build_index(
             "generations": 1,
             "snapshots": [{"gen": 0, "files": len(paths), "novel_chunks": n_chunks, "novel_bytes": n_bytes}],
         }
-        _write_meta(index_dir, meta)
+        STORE.commit(index_dir, meta)
     return {"generation": 0, "novel_chunks": n_chunks, "novel_bytes": n_bytes}
 
 
@@ -187,7 +137,7 @@ def update_index(
 def _update_index_locked(
     spark: SparkSession, paths: list[str], index_dir: Path
 ) -> dict:
-    meta = _load_meta(index_dir)
+    meta = STORE.load(index_dir)
     pinned_hash = meta.get("identity_hash", IDENTITY_HASH)
     if pinned_hash != IDENTITY_HASH:
         raise ValueError(
@@ -202,21 +152,13 @@ def _update_index_locked(
         }
     )
     gen = meta["generations"]
-    out = index_dir / f"gen-{gen:05d}.parquet"
-    if out.exists():
-        # orphan from an attempt that crashed after writing the
-        # generation but before committing the manifest (the manifest is
-        # the commit point, so the orphan was never part of the index) —
-        # remove it BEFORE listing generations, then redo: retries are
-        # idempotent and the orphan's rows never reach the anti-join
-        import shutil
-
-        shutil.rmtree(out)
+    STORE.clear(index_dir, meta)
+    out = STORE.gen_path(index_dir, gen)
     ts = tombstones_df(spark, index_dir, meta, "hash")
     # content-keyed: a deleted (reclaimed) chunk tests as ABSENT — the
     # client re-uploads it and resurrection below makes it present again
     known = minus_tombstones(
-        _read_index(spark, index_dir), ts, "hash"
+        STORE.read(spark, index_dir, meta), ts, "hash"
     ).select("hash")
     chunks = chunk_files_auto(spark, paths, params=params)
     # persist the per-hash aggregate: it feeds two actions (the novel
@@ -261,7 +203,7 @@ def _update_index_locked(
         {"gen": gen, "files": len(paths), "novel_chunks": novel_chunks,
          "novel_bytes": novel_bytes, "resurrected_chunks": n_back}
     )
-    _write_meta(index_dir, meta)
+    STORE.commit(index_dir, meta)
     _clear_stale_sets(index_dir, meta)  # superseded by a resurrection
     snap.unpersist()
     return {
@@ -287,7 +229,7 @@ def delete_chunks(spark: SparkSession, index_dir: str | Path, hashes) -> dict:
     frame. O(tombstones) — no generation is rewritten here."""
     index_dir = Path(index_dir)
     with writer_lock(index_dir):
-        meta = _load_meta(index_dir)
+        meta = STORE.load(index_dir)
         ids_df = normalize_ids(spark, hashes, "hash")
         fresh = append_tombstone_set(spark, index_dir, meta, ids_df, "hash")
         if fresh is None:
@@ -296,7 +238,7 @@ def delete_chunks(spark: SparkSession, index_dir: str | Path, hashes) -> dict:
         meta.setdefault("deletions", []).append(
             {"set": meta["tombstone_sets"] - 1, "chunks": n_new}
         )
-        _write_meta(index_dir, meta)  # commit point
+        STORE.commit(index_dir, meta)  # commit point
     return {"tombstoned": n_new}
 
 
@@ -305,71 +247,27 @@ def compact_index(spark: SparkSession, index_dir: str | Path, files_out: int | N
     files a long admission history accumulates (same job as
     sources/compact.py, specialized to the index's commit protocol).
 
-    Crash safety mirrors update_index: the merged generation is written
-    under the NEXT gen number, the manifest commit atomically records
-    both the new generation and ``compacted_below`` (superseded gens are
-    ignored by every reader from that instant), and only then are the
-    old directories deleted. A crash before the commit leaves an orphan
-    the next update/compaction removes; a crash after it leaves
-    already-superseded directories that are skipped and lazily deleted
-    on the next compaction.
+    Crash safety is the generation store's (plans/_genstore.py): the
+    merged generation is written under the NEXT gen number, one manifest
+    commit records both it and ``compacted_below``, and only then are
+    the superseded directories deleted.
 
     Single-writer: holds the index writer lock (plans/_index_lock.py)."""
-    index_dir = Path(index_dir)
     with writer_lock(index_dir):
-        return _compact_index_locked(spark, index_dir, files_out)
-
-
-def _compact_index_locked(
-    spark: SparkSession, index_dir: Path, files_out: int | None
-) -> dict:
-    import shutil
-
-    meta = _load_meta(index_dir)
-    floor = meta.get("compacted_below", 0)
-    gen = meta["generations"]
-    out = index_dir / f"gen-{gen:05d}.parquet"
-    if out.exists():
-        shutil.rmtree(out)  # orphan from a crashed attempt (pre-commit)
-    # live = committed generations only: at or above the compaction
-    # floor, strictly below the manifest's counter (anything at/above
-    # the counter is an uncommitted orphan, not part of the index)
-    live = [
-        p for p in _index_files(index_dir, floor) if _gen_no(Path(p)) < gen
-    ]
-    if files_out is None:
-        # ~24-byte rows: size output files to ~128 MB (≈5M rows each)
-        bytes_live = sum(
-            f.stat().st_size for d in live for f in Path(d).glob("*.parquet")
+        meta = STORE.load(index_dir)
+        gen, n_live, n_chunks = STORE.merge(spark, index_dir, meta, "hash", files_out)
+        STORE.commit_compaction(
+            index_dir, meta, gen,
+            {"gen": gen, "merged_generations": n_live, "chunks": n_chunks},
         )
-        files_out = max(1, -(-bytes_live // (128 << 20)))
-    merged = minus_tombstones(  # physically purge deleted chunks
-        spark.read.parquet(*live),
-        tombstones_df(spark, index_dir, meta, "hash"),
-        "hash",
-    )
-    merged.coalesce(int(files_out)).write.parquet(str(out))
-    n_chunks = spark.read.parquet(str(out)).count()
-    meta["generations"] = gen + 1
-    meta["compacted_below"] = gen
-    meta["tombstone_sets"] = 0  # purge is durable with this commit
-    meta["tombstone_floor"] = 0
-    meta.setdefault("compactions", []).append(
-        {"gen": gen, "merged_generations": len(live), "chunks": n_chunks}
-    )
-    _write_meta(index_dir, meta)  # commit point
-    for p in Path(index_dir).glob("gen-*.parquet"):
-        if _gen_no(p) < gen:
-            shutil.rmtree(p)
-    clear_tombstones(index_dir)
-    return {"generation": gen, "merged_generations": len(live), "chunks": n_chunks}
+    return {"generation": gen, "merged_generations": n_live, "chunks": n_chunks}
 
 
 def index_stats(spark: SparkSession, index_dir: str | Path) -> DataFrame:
     """One row: generations, unique chunks, unique bytes, compressed bytes."""
-    meta = _load_meta(index_dir)
+    meta = STORE.load(index_dir)
     idx = minus_tombstones(  # live view: tombstoned chunks don't count
-        _read_index(spark, index_dir),
+        STORE.read(spark, index_dir, meta),
         tombstones_df(spark, index_dir, meta, "hash"),
         "hash",
     )

@@ -4,10 +4,8 @@ The batch operator (operators/substring_dedup.py) answers "which token
 spans are duplicated WITHIN this corpus"; a production ingest gate asks
 the incremental question — "which spans of these NEW documents already
 exist in everything admitted before?" — without re-hashing history. This
-module is that index, log-structured on parquet with the same
-gen-NNNNN + manifest-commit + single-writer-lock protocol as the chunk
-index (plans/chunk_index.py), LSH doc index (plans/lsh_index.py) and PQ
-index (operators/ann.py):
+module is that index, log-structured on parquet through the generation
+store the chunk, LSH, text and PQ indexes share (plans/_genstore.py):
 
 * ``build_gram_index`` — hash every sliding k-gram of a corpus, keep the
   global first occurrence per hash (provenance), write generation 0 +
@@ -26,7 +24,9 @@ Layout: ``<dir>/gen-<n>.parquet`` (columns h, doc_id, pos — the first
 occurrence of each gram hash) + ``<dir>/_index_meta.json`` (k, hash
 scheme, generation counter, admission history). Rows are distinct by
 ``h`` across ALL generations; the manifest write is the atomic commit
-point (crash orphans are invisible and removed on the next mutation).
+point. Crash orphans are invisible because readers list generations
+from the manifest's committed window, never from the disk; the next
+build, admission or compaction removes them.
 
 Params discipline: spans are only comparable for the same gram width
 and hash; the manifest pins both at build time and every later
@@ -43,9 +43,6 @@ answer, unlike the LSH index's id-based idempotent skip.
 
 from __future__ import annotations
 
-import json
-import os
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
@@ -56,45 +53,23 @@ from dataset_dedupe_estimator_spark.operators.substring_dedup import (
     merged_islands,
     gram_occurrences,
 )
+from dataset_dedupe_estimator_spark.plans._genstore import GenStore
 from dataset_dedupe_estimator_spark.plans._index_lock import writer_lock
 from dataset_dedupe_estimator_spark.plans._observed import observed_metrics
 from dataset_dedupe_estimator_spark.plans._tombstones import (
     append_tombstone_set,
-    clear_tombstones,
     minus_tombstones,
     normalize_ids,
     tombstones_df,
 )
 
-_META = "_index_meta.json"
+STORE = GenStore("_index_meta.json", ".parquet")
 _GRAM_COLS = ("h", "doc_id", "pos")
 _HASH_SCHEME = "md5(space-joined k-gram)"
 
 
-def _gen_no(p: Path) -> int:
-    return int(p.name.removeprefix("gen-").removesuffix(".parquet"))
-
-
-def _gen_files(index_dir: str | Path, floor: int = 0) -> list[str]:
-    gens = sorted(Path(index_dir).glob("gen-*.parquet"), key=_gen_no)
-    return [str(p) for p in gens if _gen_no(p) >= floor]
-
-
-def _load_meta(index_dir: str | Path) -> dict:
-    with open(Path(index_dir) / _META) as f:
-        return json.load(f)
-
-
-def _write_meta(index_dir: Path, meta: dict) -> None:
-    """Atomic replace: a crash mid-write never corrupts the manifest."""
-    tmp = index_dir / (_META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(tmp, index_dir / _META)
-
-
 def _check_meta(index_dir: str | Path, k: int | None = None) -> dict:
-    meta = _load_meta(index_dir)
+    meta = STORE.load(index_dir)
     if meta.get("hash_scheme") != _HASH_SCHEME:
         raise ValueError(
             f"gram index at {index_dir} uses hash scheme "
@@ -107,14 +82,6 @@ def _check_meta(index_dir: str | Path, k: int | None = None) -> dict:
             f"caller asked k={k}; span semantics are incomparable"
         )
     return meta
-
-
-def _read_index(spark: SparkSession, index_dir: str | Path) -> DataFrame:
-    floor = _load_meta(index_dir).get("compacted_below", 0)
-    files = _gen_files(index_dir, floor)
-    if not files:
-        raise FileNotFoundError(f"no generations in gram index {index_dir}")
-    return spark.read.parquet(*files)
 
 
 def _firsts(grams: DataFrame) -> DataFrame:
@@ -140,18 +107,14 @@ def build_gram_index(
     Single-writer: all index mutations (build/admit/compact) take the
     index dir's exclusive writer lock — see plans/_index_lock.py."""
     index_dir = Path(index_dir)
-    if (index_dir / _META).exists():
+    if STORE.has_manifest(index_dir):
         raise FileExistsError(f"{index_dir} already holds a gram index")
     index_dir.mkdir(parents=True, exist_ok=True)
     with writer_lock(index_dir):
-        if (index_dir / _META).exists():  # re-check under the lock
+        if STORE.has_manifest(index_dir):  # re-check under the lock
             raise FileExistsError(f"{index_dir} already holds a gram index")
-        gen0 = index_dir / "gen-00000.parquet"
-        if gen0.exists():
-            # no manifest but gen-00000 present: a prior build crashed
-            # between the parquet write and the manifest commit — the
-            # orphan was never part of any index; remove and redo
-            shutil.rmtree(gen0)
+        STORE.clear(index_dir, None)  # a crashed build's orphans
+        gen0 = STORE.gen_path(index_dir, 0)
         # the gram count rides the generation write (plans/_observed.py)
         # instead of a read-back of everything just written
         gen0_df, resolve = observed_metrics(
@@ -167,7 +130,7 @@ def build_gram_index(
             "total_grams": n_grams,
             "admissions": [{"gen": 0, "novel_grams": n_grams}],
         }
-        _write_meta(index_dir, meta)
+        STORE.commit(index_dir, meta)
     return {"generation": 0, "novel_grams": n_grams}
 
 
@@ -200,12 +163,8 @@ def _admit_docs_locked(
     meta = _check_meta(index_dir)
     k = meta["k"]
     gen = meta["generations"]
-    out = index_dir / f"gen-{gen:05d}.parquet"
-    if out.exists():
-        # orphan from a crash after the generation write but before the
-        # manifest commit — never part of the index; remove BEFORE
-        # reading generations so retries are idempotent
-        shutil.rmtree(out)
+    STORE.clear(index_dir, meta)
+    out = STORE.gen_path(index_dir, gen)
     ts = tombstones_df(spark, index_dir, meta, "doc_id")
     if ts is not None:
         # denylist: a tombstoned doc cannot re-enter (its NEW rows would
@@ -213,7 +172,7 @@ def _admit_docs_locked(
         # and deleted docs' first-occurrence rows stop anchoring dups
         docs = docs.join(ts, "doc_id", "left_anti")
     known = minus_tombstones(
-        _read_index(spark, index_dir), ts, "doc_id"
+        STORE.read(spark, index_dir, meta), ts, "doc_id"
     ).select("h")
     # persist: the batch grams feed the keeper agg, the dup-span flags
     # and (via firsts) the generation write — without it each action
@@ -266,7 +225,7 @@ def _admit_docs_locked(
         {"gen": gen, "docs": n_docs, "novel_grams": novel_grams,
          "docs_with_dup_spans": n_span_docs}
     )
-    _write_meta(index_dir, meta)  # commit point
+    STORE.commit(index_dir, meta)  # commit point
     return spans, {
         "generation": gen,
         "docs": n_docs,
@@ -308,7 +267,7 @@ def delete_docs(spark: SparkSession, index_dir: str | Path, ids) -> dict:
         meta.setdefault("deletions", []).append(
             {"set": meta["tombstone_sets"] - 1, "denylisted": n_new}
         )
-        _write_meta(index_dir, meta)  # commit point
+        STORE.commit(index_dir, meta)  # commit point
     return {"denylisted": n_new}
 
 
@@ -322,7 +281,7 @@ def query_docs(
     admitted, so batch order confers no first-occurrence rights)."""
     meta = _check_meta(index_dir)
     known = minus_tombstones(
-        _read_index(spark, index_dir),
+        STORE.read(spark, index_dir, meta),
         tombstones_df(spark, index_dir, meta, "doc_id"),
         "doc_id",
     ).select("h")
@@ -337,48 +296,21 @@ def query_docs(
 def compact_gram_index(
     spark: SparkSession, index_dir: str | Path, files_out: int | None = None
 ) -> dict:
-    """Merge every live generation into one (same crash-safe protocol as
-    chunk_index.compact_index: write under the next gen number, commit
-    generation + ``compacted_below`` atomically, then delete superseded
-    directories — readers never observe a partial state)."""
+    """Merge every live generation into one (the generation store's
+    crash-safe compaction, plans/_genstore.py: write under the next gen
+    number, commit generation + ``compacted_below`` atomically, then
+    delete superseded directories — readers never observe a partial
+    state)."""
     index_dir = Path(index_dir)
     with writer_lock(index_dir):
         meta = _check_meta(index_dir)
-        floor = meta.get("compacted_below", 0)
-        gen = meta["generations"]
-        out = index_dir / f"gen-{gen:05d}.parquet"
-        if out.exists():
-            shutil.rmtree(out)  # orphan from a crashed attempt (pre-commit)
-        live = [
-            p for p in _gen_files(index_dir, floor) if _gen_no(Path(p)) < gen
-        ]
-        if files_out is None:
-            # ~28-byte rows: size output files to ~128 MB
-            bytes_live = sum(
-                f.stat().st_size for d in live for f in Path(d).glob("*.parquet")
-            )
-            files_out = max(1, -(-bytes_live // (128 << 20)))
-        merged = minus_tombstones(  # physically purge deleted provenance
-            spark.read.parquet(*live),
-            tombstones_df(spark, index_dir, meta, "doc_id"),
-            "doc_id",
-        )
-        merged.coalesce(int(files_out)).write.parquet(str(out))
-        n_grams = spark.read.parquet(str(out)).count()
-        meta["generations"] = gen + 1
-        meta["compacted_below"] = gen
-        meta["tombstone_sets"] = 0  # purge is durable with this commit
-        meta["tombstone_floor"] = 0
+        gen, n_live, n_grams = STORE.merge(spark, index_dir, meta, "doc_id", files_out)
         meta["total_grams"] = n_grams  # deletion debt settles here
-        meta.setdefault("compactions", []).append(
-            {"gen": gen, "merged_generations": len(live), "grams": n_grams}
+        STORE.commit_compaction(
+            index_dir, meta, gen,
+            {"gen": gen, "merged_generations": n_live, "grams": n_grams},
         )
-        _write_meta(index_dir, meta)  # commit point
-        for p in Path(index_dir).glob("gen-*.parquet"):
-            if _gen_no(p) < gen:
-                shutil.rmtree(p)
-        clear_tombstones(index_dir)
-        return {"generation": gen, "merged_generations": len(live), "grams": n_grams}
+    return {"generation": gen, "merged_generations": n_live, "grams": n_grams}
 
 
 def index_stats(spark: SparkSession, index_dir: str | Path) -> dict:
@@ -386,7 +318,7 @@ def index_stats(spark: SparkSession, index_dir: str | Path) -> dict:
     store count is read for drift detection, not accounting)."""
     meta = _check_meta(index_dir)
     stored = minus_tombstones(
-        _read_index(spark, index_dir),
+        STORE.read(spark, index_dir, meta),
         tombstones_df(spark, index_dir, meta, "doc_id"),
         "doc_id",
     ).count()

@@ -5,8 +5,8 @@ one shot. A training-data pipeline that ingests continuously needs the
 other shape: an index of every document ever admitted, so each incoming
 batch is checked against ALL history without re-shingling it. This is
 the document-level sibling of the CDC chunk index
-(plans/chunk_index.py) — same log-structured layout, same
-manifest-as-commit-point crash discipline:
+(plans/chunk_index.py) — same generation store (plans/_genstore.py),
+same manifest-as-commit-point crash discipline:
 
 * ``build_lsh_index`` — band a corpus, write generation 0 of the
   (doc_id, band_id, band_key) rows + a params manifest.
@@ -31,8 +31,7 @@ ingestion. Already-admitted doc_ids are skipped via a doc_id anti-join
 (idempotent re-admission), and candidate pairs are normalized
 (least, greatest) + distinct so new-vs-new collisions across several
 bands emit once. Generation sprawl is reclaimed by
-``compact_lsh_index`` (same commit protocol as the chunk index's
-compaction).
+``compact_lsh_index`` (the generation store's compaction commit).
 
 Determinism contract: signatures are pure functions of (doc_id, text)
 — seeded affine permutations over a cross-engine md5 base hash — so
@@ -45,17 +44,15 @@ from __future__ import annotations
 
 import hashlib
 import json
-import os
-import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataset_dedupe_estimator_spark.plans._genstore import GenStore
 from dataset_dedupe_estimator_spark.plans._index_lock import writer_lock
 from dataset_dedupe_estimator_spark.plans._tombstones import (
     append_tombstone_set,
-    clear_tombstones,
     minus_tombstones,
     normalize_ids,
     tombstones_df,
@@ -71,7 +68,7 @@ from dataset_dedupe_estimator_spark.queries.dedupe_text import (
     minhash_sig_of,
 )
 
-_META = "_lsh_meta.json"
+STORE = GenStore("_lsh_meta.json", ".parquet")
 _BAND_COLS = ("doc_id", "band_id", "band_key")
 
 
@@ -90,47 +87,8 @@ def _signature_params() -> dict:
     }
 
 
-def _gen_no(p: Path) -> int:
-    """Generation number from a dir name — parse the full digit run, not
-    a fixed 5-char slice: a streaming index creates one generation per
-    microbatch and crosses 99999 within weeks."""
-    return int(p.name.removeprefix("gen-").removesuffix(".parquet"))
-
-
-def _gen_files(index_dir: str | Path, floor: int = 0) -> list[str]:
-    """Generation dirs at or above ``floor`` (gens below a committed
-    compaction are superseded — their rows live in the compacted
-    generation — and are ignored even if a crash left them on disk),
-    in numeric generation order."""
-    gens = sorted(Path(index_dir).glob("gen-*.parquet"), key=_gen_no)
-    return [str(p) for p in gens if _gen_no(p) >= floor]
-
-
-def _load_meta(index_dir: str | Path) -> dict:
-    with open(Path(index_dir) / _META) as f:
-        return json.load(f)
-
-
-def _write_meta(index_dir: Path, meta: dict) -> None:
-    """Atomic replace: a crash mid-write never corrupts the manifest."""
-    tmp = index_dir / (_META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(tmp, index_dir / _META)
-
-
-def _read_index(spark: SparkSession, index_dir: str | Path) -> DataFrame:
-    # no manifest => not an index; raising beats resurrecting superseded
-    # pre-compaction generations with a silent floor=0 fallback
-    floor = _load_meta(index_dir).get("compacted_below", 0)
-    files = _gen_files(index_dir, floor)
-    if not files:
-        raise FileNotFoundError(f"no index generations under {index_dir}")
-    return spark.read.parquet(*files)
-
-
 def _check_meta(index_dir: str | Path) -> dict:
-    meta = _load_meta(index_dir)
+    meta = STORE.load(index_dir)
     mine = _signature_params()
     if meta["signature"] != mine:
         raise ValueError(
@@ -150,19 +108,14 @@ def build_lsh_index(
     Single-writer: all index mutations (build/admit/compact) take the
     index dir's exclusive writer lock — see plans/_index_lock.py."""
     index_dir = Path(index_dir)
-    if (index_dir / _META).exists():
+    if STORE.has_manifest(index_dir):
         raise FileExistsError(f"{index_dir} already holds an LSH index")
     index_dir.mkdir(parents=True, exist_ok=True)
     with writer_lock(index_dir):
-        if (index_dir / _META).exists():  # re-check under the lock
+        if STORE.has_manifest(index_dir):  # re-check under the lock
             raise FileExistsError(f"{index_dir} already holds an LSH index")
-        out = index_dir / "gen-00000.parquet"
-        if out.exists():
-            # no manifest but gen-00000 present: a prior build crashed
-            # between the parquet write and the manifest commit — the
-            # orphan was never part of any index; remove and redo
-            # (retry-safe, mirroring admit_docs' orphan protocol)
-            shutil.rmtree(out)
+        STORE.clear(index_dir, None)  # a crashed build's orphans
+        out = STORE.gen_path(index_dir, 0)
         bands = band_rows_of(minhash_sig_of(docs.select("doc_id", "text")))
         bands.select(*_BAND_COLS).write.mode("errorifexists").parquet(str(out))
         n_docs = (
@@ -173,7 +126,7 @@ def build_lsh_index(
             "generations": 1,
             "admissions": [{"gen": 0, "docs": n_docs, "candidate_pairs": None}],
         }
-        _write_meta(index_dir, meta)
+        STORE.commit(index_dir, meta)
     return {"generation": 0, "docs": n_docs}
 
 
@@ -204,15 +157,11 @@ def _admit_docs_locked(
 ) -> tuple[DataFrame, dict]:
     meta = _check_meta(index_dir)
     gen = meta["generations"]
-    out = index_dir / f"gen-{gen:05d}.parquet"
-    if out.exists():
-        # orphan from a crash after the generation write but before the
-        # manifest commit — it was never part of the index; remove it
-        # BEFORE reading generations so retries are idempotent
-        shutil.rmtree(out)
+    STORE.clear(index_dir, meta)
+    out = STORE.gen_path(index_dir, gen)
     ts = tombstones_df(spark, index_dir, meta, "doc_id")
     # deleted docs collide with nothing (their band rows are suppressed)
-    known = minus_tombstones(_read_index(spark, index_dir), ts, "doc_id")
+    known = minus_tombstones(STORE.read(spark, index_dir, meta), ts, "doc_id")
     known_ids = known.select("doc_id").distinct()
     if ts is not None:  # ...but their ids stay denylisted for admission
         known_ids = known_ids.unionByName(ts)
@@ -249,7 +198,7 @@ def _admit_docs_locked(
     meta["admissions"].append(
         {"gen": gen, "docs": n_docs, "candidate_pairs": n_pairs}
     )
-    _write_meta(index_dir, meta)
+    STORE.commit(index_dir, meta)
     new_bands.unpersist()
     return cands, {"generation": gen, "docs": n_docs, "candidate_pairs": n_pairs}
 
@@ -265,7 +214,7 @@ def query_docs(
     OTHER near-dups (self-matches are excluded by doc_id)."""
     meta = _check_meta(index_dir)
     known = minus_tombstones(
-        _read_index(spark, index_dir),
+        STORE.read(spark, index_dir, meta),
         tombstones_df(spark, index_dir, meta, "doc_id"),
         "doc_id",
     )
@@ -300,72 +249,34 @@ def delete_docs(spark: SparkSession, index_dir: str | Path, ids) -> dict:
         meta.setdefault("deletions", []).append(
             {"set": meta["tombstone_sets"] - 1, "denylisted": n_new}
         )
-        _write_meta(index_dir, meta)  # commit point
+        STORE.commit(index_dir, meta)  # commit point
     return {"denylisted": n_new}
 
 
 def compact_lsh_index(
     spark: SparkSession, index_dir: str | Path, files_out: int | None = None
 ) -> dict:
-    """Merge every live generation into one (same commit protocol as
-    plans/chunk_index.compact_index): the merged generation is written
-    under the NEXT gen number, the manifest commit atomically records
-    both it and ``compacted_below``, and only then are superseded
-    directories deleted. A crash before the commit leaves an orphan the
-    next admission/compaction removes; a crash after it leaves
-    already-superseded directories every reader skips.
+    """Merge every live generation into one (the generation store's
+    commit protocol, plans/_genstore.py): the merged generation is
+    written under the NEXT gen number, the manifest commit atomically
+    records both it and ``compacted_below``, and only then are
+    superseded directories deleted.
 
     Single-writer: holds the index writer lock (plans/_index_lock.py)."""
-    index_dir = Path(index_dir)
     with writer_lock(index_dir):
-        return _compact_lsh_index_locked(spark, index_dir, files_out)
-
-
-def _compact_lsh_index_locked(
-    spark: SparkSession, index_dir: Path, files_out: int | None
-) -> dict:
-    meta = _check_meta(index_dir)
-    floor = meta.get("compacted_below", 0)
-    gen = meta["generations"]
-    out = index_dir / f"gen-{gen:05d}.parquet"
-    if out.exists():
-        shutil.rmtree(out)  # orphan from a crashed attempt (pre-commit)
-    # live = committed generations only: at or above the compaction
-    # floor, strictly below the manifest's generation counter (anything
-    # at/above the counter is an uncommitted orphan)
-    live = [p for p in _gen_files(index_dir, floor) if _gen_no(Path(p)) < gen]
-    if files_out is None:
-        # ~45-byte band rows: size output files to ~128 MB
-        bytes_live = sum(
-            f.stat().st_size for d in live for f in Path(d).glob("*.parquet")
+        meta = _check_meta(index_dir)
+        gen, n_live, n_rows = STORE.merge(spark, index_dir, meta, "doc_id", files_out)
+        STORE.commit_compaction(
+            index_dir, meta, gen,
+            {"gen": gen, "merged_generations": n_live, "band_rows": n_rows},
         )
-        files_out = max(1, -(-bytes_live // (128 << 20)))
-    merged = minus_tombstones(  # physically purge deleted docs
-        spark.read.parquet(*live),
-        tombstones_df(spark, index_dir, meta, "doc_id"),
-        "doc_id",
-    )
-    merged.coalesce(int(files_out)).write.parquet(str(out))
-    n_rows = spark.read.parquet(str(out)).count()
-    meta["generations"] = gen + 1
-    meta["compacted_below"] = gen
-    meta["tombstone_sets"] = 0  # purge is durable with this commit
-    meta["tombstone_floor"] = 0
-    meta.setdefault("compactions", []).append(
-        {"gen": gen, "merged_generations": len(live), "band_rows": n_rows}
-    )
-    _write_meta(index_dir, meta)  # commit point
-    for p in Path(index_dir).glob("gen-*.parquet"):
-        if _gen_no(p) < gen:
-            shutil.rmtree(p)
-    clear_tombstones(index_dir)
-    return {"generation": gen, "merged_generations": len(live), "band_rows": n_rows}
+    return {"generation": gen, "merged_generations": n_live, "band_rows": n_rows}
 
 
 def index_stats(spark: SparkSession, index_dir: str | Path) -> dict:
     meta = _check_meta(index_dir)
     idx = minus_tombstones(  # live view: tombstoned docs don't count
-        _read_index(spark, index_dir),
+        STORE.read(spark, index_dir, meta),
         tombstones_df(spark, index_dir, meta, "doc_id"),
         "doc_id",
     )

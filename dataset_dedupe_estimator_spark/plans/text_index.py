@@ -5,12 +5,12 @@ the right shape when the query terms are known at plan time and the
 corpus is scanned anyway. A search SERVICE has the opposite access
 pattern: the corpus is at rest, queries arrive continuously, and
 re-scanning 100 TB of text per query is off the table. The classic
-answer is the inverted index, and it maps onto the exact storage
-protocol this repo's other persistent indexes use (chunk, LSH, PQ,
-gram — plans/chunk_index.py et al.): log-structured generations over
-immutable parquet, an atomically-replaced JSON manifest as the only
-commit point, a single-writer lock, O(batch) admission, compaction
-that advances a floor.
+answer is the inverted index, and it maps onto the generation store
+this repo's other persistent indexes use (chunk, LSH, PQ, gram —
+plans/_genstore.py): log-structured generations over immutable
+parquet, an atomically-replaced JSON manifest as the only commit point,
+a single-writer lock, O(batch) admission, compaction that advances a
+floor.
 
 Layout (``<dir>/``):
 
@@ -57,54 +57,24 @@ pipeline surface, like plans/lsh_index.py and sources/versioned.py.
 from __future__ import annotations
 
 import hashlib
-import json
-import os
 import shutil
 from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dataset_dedupe_estimator_spark.plans._genstore import GenStore, target_files
 from dataset_dedupe_estimator_spark.plans._index_lock import writer_lock
 from dataset_dedupe_estimator_spark.plans._tombstones import (
     append_tombstone_set,
-    clear_tombstones,
     minus_tombstones,
     normalize_ids,
     tombstones_df,
 )
 
-_META = "_text_meta.json"
+STORE = GenStore("_text_meta.json")
 DEFAULT_BUCKETS = 32
 _TOKENIZER = "whitespace-v1"  # split(text, ' '), the corpus-wide convention
-# compaction write sizing: one task per ~this many merged bytes (module
-# constant so tests can exercise the multi-task path at small scale)
-_COMPACT_TARGET_BYTES = 128 << 20
-
-
-def _gen_no(p: Path) -> int:
-    return int(p.name.removeprefix("gen-"))
-
-
-def _gen_dirs(index_dir: str | Path, floor: int = 0) -> list[Path]:
-    gens = sorted(
-        (p for p in Path(index_dir).glob("gen-*") if p.is_dir()), key=_gen_no
-    )
-    return [p for p in gens if _gen_no(p) >= floor]
-
-
-def _load_meta(index_dir: str | Path) -> dict:
-    with open(Path(index_dir) / _META) as f:
-        return json.load(f)
-
-
-def _write_meta(index_dir: Path, meta: dict) -> None:
-    """Atomic replace: a crash mid-write never corrupts the manifest."""
-    tmp = index_dir / (_META + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f, indent=1)
-    os.replace(tmp, index_dir / _META)
-
 
 
 def _corpus_stats(meta: dict) -> tuple[int, float]:
@@ -121,7 +91,7 @@ def _corpus_stats(meta: dict) -> tuple[int, float]:
 
 
 def _check_meta(index_dir: str | Path) -> dict:
-    meta = _load_meta(index_dir)
+    meta = STORE.load(index_dir)
     if meta.get("tokenizer") != _TOKENIZER:
         raise ValueError(
             f"text index at {index_dir} was built with tokenizer "
@@ -184,36 +154,14 @@ def _write_generation(gen_dir: Path, postings: DataFrame, doclens: DataFrame):
     doclens.write.mode("errorifexists").parquet(str(gen_dir / "doclens"))
 
 
-def _live_gens(index_dir: str | Path, meta: dict) -> list[Path]:
-    """Committed generations ``[compacted_below, generations)`` BY THE
-    MANIFEST — never a disk listing: a dir at or above the counter is a
-    crashed uncommitted write (a writer clears it; readers must not
-    trip over its possibly-partial files), one below the floor is
-    superseded by a committed compaction."""
-    index_dir = Path(index_dir)
-    gens = [
-        index_dir / f"gen-{n:05d}"
-        for n in range(meta["compacted_below"], meta["generations"])
-    ]
-    if not gens:
-        raise FileNotFoundError(f"no index generations under {index_dir}")
-    return gens
-
-
 def _doclens_df(spark: SparkSession, index_dir: str | Path, meta: dict) -> DataFrame:
-    gens = _live_gens(index_dir, meta)
-    return spark.read.parquet(*[str(g / "doclens") for g in gens])
+    return STORE.read(spark, index_dir, meta, "doclens")
 
 
 def _postings_df(spark: SparkSession, index_dir: str | Path, meta: dict) -> DataFrame:
     """Union of per-generation postings scans (each generation is its own
-    bucket-partitioned root; Spark refuses a multi-path read of several
-    partitioned roots, and per-root scans keep partition pruning)."""
-    import functools
-
-    gens = _live_gens(index_dir, meta)
-    reads = [spark.read.parquet(str(g / "postings")) for g in gens]
-    return functools.reduce(DataFrame.unionByName, reads)
+    bucket-partitioned root)."""
+    return STORE.read_each(spark, index_dir, meta, "postings")
 
 
 def build_text_index(
@@ -225,17 +173,14 @@ def build_text_index(
     """Create generation 0 from a (doc_id, text) corpus. Fails if the
     dir already holds an index (use admit_docs to grow one)."""
     index_dir = Path(index_dir)
-    if (index_dir / _META).exists():
+    if STORE.has_manifest(index_dir):
         raise FileExistsError(f"{index_dir} already holds a text index")
     index_dir.mkdir(parents=True, exist_ok=True)
     with writer_lock(index_dir):
-        if (index_dir / _META).exists():  # re-check under the lock
+        if STORE.has_manifest(index_dir):  # re-check under the lock
             raise FileExistsError(f"{index_dir} already holds a text index")
-        gen0 = index_dir / "gen-00000"
-        if gen0.exists():
-            # crashed prior build: parquet written, manifest never
-            # committed — the orphan was never part of any index
-            shutil.rmtree(gen0)
+        STORE.clear(index_dir, None)  # a crashed build's orphans
+        gen0 = STORE.gen_path(index_dir, 0)
         docs = _dedup_batch(docs.select("doc_id", "text"))
         _write_generation(gen0, _postings_of(docs, n_buckets), _doclens_of(docs))
         stats = (
@@ -252,7 +197,7 @@ def build_text_index(
             "sum_dl": int(stats["s"] or 0),
             "admissions": [{"gen": 0, "docs": stats["n"]}],
         }
-        _write_meta(index_dir, meta)
+        STORE.commit(index_dir, meta)
     return {"generation": 0, "docs": stats["n"]}
 
 
@@ -268,12 +213,7 @@ def admit_docs(
     with writer_lock(index_dir):
         meta = _check_meta(index_dir)
         gen = meta["generations"]
-        # clear crashed uncommitted generations (>= counter) — readers
-        # never list them (they go by the manifest), writers must not
-        # collide with their dirs
-        for p in _gen_dirs(index_dir):
-            if _gen_no(p) >= gen:
-                shutil.rmtree(p)
+        STORE.clear(index_dir, meta)
         known = _doclens_df(spark, index_dir, meta).select("doc_id")
         ts = tombstones_df(spark, index_dir, meta, "doc_id")
         if ts is not None:  # tombstoned ids are denylisted, not re-admitted
@@ -281,7 +221,7 @@ def admit_docs(
         fresh = _dedup_batch(docs.select("doc_id", "text")).join(
             known, "doc_id", "left_anti"
         )
-        gen_dir = index_dir / f"gen-{gen:05d}"
+        gen_dir = STORE.gen_path(index_dir, gen)
         _write_generation(
             gen_dir, _postings_of(fresh, meta["n_buckets"]), _doclens_of(fresh)
         )
@@ -297,7 +237,7 @@ def admit_docs(
         meta["n_docs"] += stats["n"]
         meta["sum_dl"] += int(stats["s"])
         meta["admissions"].append({"gen": gen, "docs": stats["n"]})
-        _write_meta(index_dir, meta)  # commit point
+        STORE.commit(index_dir, meta)  # commit point
     return {"generation": gen, "docs": stats["n"], "n_docs": meta["n_docs"]}
 
 
@@ -338,7 +278,7 @@ def delete_docs(spark: SparkSession, index_dir: str | Path, ids) -> dict:
             {"set": meta["tombstone_sets"] - 1, "docs": matched["n"],
              "denylisted": n_new}
         )
-        _write_meta(index_dir, meta)  # commit point
+        STORE.commit(index_dir, meta)  # commit point
     return {
         "deleted": matched["n"],
         "denylisted": n_new,
@@ -634,11 +574,9 @@ def compact_text_index(spark: SparkSession, index_dir: str | Path) -> dict:
     index_dir = Path(index_dir)
     with writer_lock(index_dir):
         meta = _check_meta(index_dir)
-        gen, floor = meta["generations"], meta["compacted_below"]
-        # committed gens only — a disk listing could include a crashed
-        # uncommitted dir at >= gen, and deleting that range post-commit
-        # would take the just-written compacted generation with it
-        live = _live_gens(index_dir, meta)
+        gen = meta["generations"]
+        STORE.clear(index_dir, meta)
+        live = STORE.live(index_dir, meta)
         ts = tombstones_df(spark, index_dir, meta, "doc_id")
         merged_p = minus_tombstones(
             _postings_df(spark, index_dir, meta), ts, "doc_id"
@@ -646,27 +584,13 @@ def compact_text_index(spark: SparkSession, index_dir: str | Path) -> dict:
         merged_d = minus_tombstones(
             _doclens_df(spark, index_dir, meta), ts, "doc_id"
         )
-        # Size the compacted write by merged bytes (~128 MB per task),
-        # same discipline as the other three log-structured indexes
-        # (plans/chunk_index.py _compact_index_locked). Hashing on
-        # (bucket, term) — not bucket alone — spreads a hot bucket
-        # across tasks while still landing each term's postings in one
-        # file of its bucket dir (partitionBy lays out the dirs).
-        post_bytes = sum(
-            f.stat().st_size
-            for g in live
-            for f in (g / "postings").rglob("*.parquet")
-        )
-        dl_bytes = sum(
-            f.stat().st_size
-            for g in live
-            for f in (g / "doclens").glob("*.parquet")
-        )
-        n_post = max(1, -(-post_bytes // _COMPACT_TARGET_BYTES))
-        n_dl = max(1, -(-dl_bytes // _COMPACT_TARGET_BYTES))
-        out = index_dir / f"gen-{gen:05d}"
-        if out.exists():
-            shutil.rmtree(out)  # crashed prior compact, never committed
+        # Size the compacted write by merged bytes (plans/_genstore.py).
+        # Hashing on (bucket, term) — not bucket alone — spreads a hot
+        # bucket across tasks while still landing each term's postings
+        # in one file of its bucket dir (partitionBy lays out the dirs).
+        n_post = target_files([g / "postings" for g in live])
+        n_dl = target_files([g / "doclens" for g in live])
+        out = STORE.gen_path(index_dir, gen)
         _write_generation(
             out,
             merged_p.repartition(n_post, "bucket", "term").select(
@@ -686,14 +610,7 @@ def compact_text_index(spark: SparkSession, index_dir: str | Path) -> dict:
                 f"compaction row-count mismatch: merged {n_rows} docs, "
                 f"manifest says {meta['n_docs']} — refusing to commit"
             )
-        meta["generations"] = gen + 1
-        meta["compacted_below"] = gen
-        meta["tombstone_sets"] = 0  # purge is durable with this commit
-        meta["tombstone_floor"] = 0
-        _write_meta(index_dir, meta)  # commit point
-        for p in live:
-            shutil.rmtree(p)
-        clear_tombstones(index_dir)
+        STORE.commit_compaction(index_dir, meta, gen)
     return {"generation": gen, "merged_generations": len(live), "docs": n_rows}
 
 

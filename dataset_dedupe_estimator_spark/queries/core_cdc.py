@@ -428,10 +428,10 @@ def cdc_index_incremental(spark, sf):
     Spark side returns the REAL index's persisted ledger. A wrong
     anti-join, a double-admitted hash, or a non-idempotent re-admission
     hash-mismatches. Only chunk EMISSION stays rows-only."""
-    import json
     import tempfile
 
     from dataset_dedupe_estimator_spark.plans.chunk_index import (
+        STORE,
         build_index,
         update_index,
     )
@@ -462,8 +462,7 @@ def cdc_index_incremental(spark, sf):
         build_index(spark, half, idx)
         update_index(spark, paths, idx)
         update_index(spark, paths, idx)  # re-admit: must add nothing
-        with open(f"{idx}/_index_meta.json") as f:
-            ledger = json.load(f)["snapshots"]
+        ledger = STORE.load(idx)["snapshots"]
     rows = [
         (g["gen"], g["files"], g["novel_chunks"], g["novel_bytes"])
         for g in ledger

@@ -219,70 +219,21 @@ def test_pq_index_compact_preserves_store_and_search(spark, emb, tmp_path):
     assert hits_before == hits_after
 
 
-def test_pq_index_crash_windows_are_invisible_to_readers(spark, emb, tmp_path):
-    """The manifest is the only commit point: an uncommitted generation
-    dir (crash before commit) and a superseded dir (crash after a
-    compact's commit, before cleanup) must both be invisible to readers,
-    and the next writer must clear them."""
-    import shutil
-    from pathlib import Path
-
-    from dataset_dedupe_estimator_spark.operators.ann import (
-        PqIndex,
-        _pq_gen_dir,
-        _pq_meta,
-        pq_index_add,
-        pq_index_compact,
-    )
-
-    d = tmp_path / "idx"
-    old = emb.filter(F.col("vec_id") % 3 != 0)
-    idx = PqIndex.build(old, d, k=4, ks=16, train_sample=256)
-    committed = idx.codes_df(spark).orderBy("vec_id").collect()
-
-    # crash BEFORE commit: a gen dir at the manifest counter exists but
-    # the manifest never advanced — readers must not see its rows
-    meta = _pq_meta(d)
-    orphan = _pq_gen_dir(d, meta["generations"])
-    shutil.copytree(_pq_gen_dir(d, 0), orphan)
-    assert [
-        (r.vec_id, r.cell) for r in idx.codes_df(spark).orderBy("vec_id").collect()
-    ] == [(r.vec_id, r.cell) for r in committed]
-    # the next writer clears the orphan and admits cleanly
-    st = pq_index_add(spark, d, emb.filter(F.col("vec_id") % 3 == 0))
-    assert st["admitted"] == emb.count() - old.count()
-    assert st["total"] == emb.count()
-    assert idx.codes_df(spark).count() == emb.count()
-
-    # crash AFTER a compact's commit, before cleanup: resurrect a
-    # superseded dir below the floor — readers must not see it
-    pq_index_compact(spark, d)
-    meta = _pq_meta(d)
-    assert meta["floor"] >= 1
-    stale = _pq_gen_dir(d, 0)
-    assert not stale.exists()
-    shutil.copytree(_pq_gen_dir(d, meta["floor"]), stale)
-    assert idx.codes_df(spark).count() == emb.count()
-    # and the next compact removes it
-    pq_index_compact(spark, d)
-    assert not Path(stale).exists()
-
-
 def test_pq_index_add_empty_batch_is_a_noop(spark, emb, tmp_path):
     """Re-admitting only known vectors must not create an empty
     generation (which a reader could not even schema-infer)."""
     from dataset_dedupe_estimator_spark.operators.ann import (
+        PQ_STORE,
         PqIndex,
-        _pq_meta,
         pq_index_add,
     )
 
     d = tmp_path / "idx"
     PqIndex.build(emb, d, k=4, ks=16, train_sample=256)
-    gens_before = _pq_meta(d)["generations"]
+    gens_before = PQ_STORE.load(d)["generations"]
     st = pq_index_add(spark, d, emb)
     assert st["admitted"] == 0 and st["total"] == emb.count()
-    assert _pq_meta(d)["generations"] == gens_before
+    assert PQ_STORE.load(d)["generations"] == gens_before
 
 
 def test_pq_index_rerank_default_path(spark, emb, pq_index):

@@ -8,7 +8,7 @@ import json
 import pytest
 
 from dataset_dedupe_estimator_spark.plans.chunk_index import (
-    _read_index,
+    STORE,
     build_index,
     index_stats,
     update_index,
@@ -31,8 +31,8 @@ def test_incremental_equals_full_rebuild(spark, tmp_path, snapshots):
     build_index(spark, old, inc_dir)
     update_index(spark, new, inc_dir)
     build_index(spark, old + new, full_dir)
-    inc = {r.hash for r in _read_index(spark, inc_dir).select("hash").collect()}
-    full = {r.hash for r in _read_index(spark, full_dir).select("hash").collect()}
+    inc = {r.hash for r in STORE.read(spark, inc_dir).select("hash").collect()}
+    full = {r.hash for r in STORE.read(spark, full_dir).select("hash").collect()}
     assert inc == full
 
 
@@ -101,33 +101,13 @@ def test_streaming_admission_exactly_once(spark, tmp_path, snapshots):
 
     full_dir = tmp_path / "full"
     build_index(spark, old + [new[0], new[1]], full_dir)
-    inc = {r.hash for r in _read_index(spark, idx).select("hash").collect()}
-    full = {r.hash for r in _read_index(spark, full_dir).select("hash").collect()}
+    inc = {r.hash for r in STORE.read(spark, idx).select("hash").collect()}
+    full = {r.hash for r in STORE.read(spark, full_dir).select("hash").collect()}
     assert inc == full
 
     # drained: a third pass with nothing new creates no generation
     third = admit_stream(spark, str(watch), idx, ckpt)
     assert third == []
-
-
-def test_update_retry_after_orphan_generation(spark, tmp_path, snapshots):
-    """A generation directory left by a crashed attempt (written but never
-    committed to the manifest) must not wedge the next update."""
-    old, new = snapshots
-    idx = tmp_path / "idx"
-    build_index(spark, old, idx)
-    # simulate the crash: gen-00001 exists on disk, manifest still says 1
-    orphan = idx / "gen-00001.parquet"
-    spark.range(0).selectExpr(
-        "id AS hash", "id AS size", "id AS csize"
-    ).write.parquet(str(orphan))
-    stats = update_index(spark, new, idx)
-    assert stats["generation"] == 1 and stats["novel_chunks"] > 0
-    full_dir = tmp_path / "full"
-    build_index(spark, old + new, full_dir)
-    inc = {r.hash for r in _read_index(spark, idx).select("hash").collect()}
-    full = {r.hash for r in _read_index(spark, full_dir).select("hash").collect()}
-    assert inc == full
 
 
 def test_update_refuses_foreign_identity_hash(spark, tmp_path, snapshots):
@@ -160,93 +140,18 @@ def test_compact_index_preserves_store_and_admission(spark, tmp_path, snapshots)
     idx = tmp_path / "idx"
     build_index(spark, old, idx)
     update_index(spark, [new[0]], idx)
-    before = {r.hash for r in _read_index(spark, idx).select("hash").collect()}
+    before = {r.hash for r in STORE.read(spark, idx).select("hash").collect()}
     st = compact_index(spark, idx)
     assert st["merged_generations"] == 2 and st["chunks"] == len(before)
     # superseded generation dirs are gone; store unchanged
     assert sorted(p.name for p in idx.glob("gen-*.parquet")) == ["gen-00002.parquet"]
-    after = {r.hash for r in _read_index(spark, idx).select("hash").collect()}
+    after = {r.hash for r in STORE.read(spark, idx).select("hash").collect()}
     assert after == before
     # admission continues on the compacted index with correct numbering
     st2 = update_index(spark, [new[1]], idx)
     assert st2["generation"] == 3
     row = index_stats(spark, idx).collect()[0]
     assert row.unique_chunks >= len(before)
-
-
-def test_compact_index_crash_after_commit_is_ignored(spark, tmp_path, snapshots):
-    """Superseded generations a crash failed to delete are invisible to
-    readers and cleaned by the next compaction."""
-    import json as _json
-    import shutil
-
-    from dataset_dedupe_estimator_spark.plans.chunk_index import compact_index
-
-    old, new = snapshots
-    idx = tmp_path / "idx"
-    build_index(spark, old, idx)
-    update_index(spark, [new[0]], idx)
-    # stash a copy of gen-00001, compact, then restore it = post-commit crash
-    stash = tmp_path / "stash"
-    shutil.copytree(idx / "gen-00001.parquet", stash)
-    compact_index(spark, idx)
-    shutil.copytree(stash, idx / "gen-00001.parquet")
-    meta = _json.loads((idx / "_index_meta.json").read_text())
-    assert meta["compacted_below"] == 2
-    # the leftover dir is ignored: stats count each hash once
-    n_unique = index_stats(spark, idx).collect()[0].unique_chunks
-    assert n_unique == len(
-        {r.hash for r in _read_index(spark, idx).select("hash").collect()}
-    )
-    # next compaction removes the leftover
-    compact_index(spark, idx)
-    names = sorted(p.name for p in idx.glob("gen-*.parquet"))
-    assert names == ["gen-00003.parquet"]
-
-
-def test_compact_survives_precommit_orphan(spark, tmp_path, snapshots):
-    """A compaction attempt that crashed after writing its target
-    generation but before the manifest commit must not poison the
-    retry: the orphan is removed and never read as live data."""
-    from dataset_dedupe_estimator_spark.plans.chunk_index import (
-        build_index,
-        compact_index,
-        index_stats,
-        update_index,
-    )
-
-    old, new = snapshots
-    idx = tmp_path / "idx"
-    build_index(spark, old, idx)
-    update_index(spark, new, idx)
-    before = index_stats(spark, idx).collect()[0]
-    # simulate the crash: gen-00002 written, manifest still at 2 gens
-    spark.range(3).selectExpr(
-        "id as hash", "1 as size", "1 as csize"
-    ).write.parquet(str(tmp_path / "idx" / "gen-00002.parquet"))
-    st = compact_index(spark, idx)
-    assert st["merged_generations"] == 2
-    after = index_stats(spark, idx).collect()[0]
-    assert after.unique_chunks == before.unique_chunks
-    assert after.unique_bytes == before.unique_bytes
-
-
-def test_build_retry_after_precommit_crash(spark, tmp_path, snapshots):
-    """A crash between the gen-00000 write and the manifest commit must
-    not wedge a retried build (ADVICE r3): the manifest is the commit
-    point, so a manifest-less gen-00000 is an orphan to discard."""
-    old, _ = snapshots
-    idx = tmp_path / "idx"
-    orphan = idx / "gen-00000.parquet"
-    spark.range(3).selectExpr(
-        "id AS hash", "id AS size", "id AS csize"
-    ).write.parquet(str(orphan))
-    assert not (idx / "_index_meta.json").exists()
-    stats = build_index(spark, old, idx)
-    assert stats["generation"] == 0 and stats["novel_chunks"] > 3
-    # the orphan's fake rows are gone, replaced by the real snapshot
-    hashes = {r.hash for r in _read_index(spark, idx).select("hash").collect()}
-    assert 0 not in hashes and len(hashes) == stats["novel_chunks"]
 
 
 def test_single_writer_lock_refuses_concurrent_mutation(spark, tmp_path, snapshots):

@@ -116,32 +116,6 @@ def test_compaction_preserves_answers(spark, tmp_path):
     assert rep2["novel_grams"] > 0
 
 
-def test_admit_retry_after_precommit_crash(spark, tmp_path):
-    """An orphan generation (crash between parquet write and manifest
-    commit) is invisible and removed by the retried admission."""
-    idx = tmp_path / "idx"
-    build_gram_index(spark, _docs(spark, [0]), idx, k=K)
-    orphan = idx / "gen-00001.parquet"
-    spark.createDataFrame(
-        [("deadbeef", 99, 0)], "h string, doc_id long, pos int"
-    ).write.parquet(str(orphan))
-    spans, rep = admit_docs(spark, _docs(spark, [6]), idx)
-    assert rep["generation"] == 1
-    idx_rows = index_stats(spark, idx)
-    assert idx_rows["total_grams"] == idx_rows["stored_grams"]
-
-
-def test_build_retry_after_precommit_crash(spark, tmp_path):
-    idx = tmp_path / "idx"
-    orphan = idx / "gen-00000.parquet"
-    spark.createDataFrame(
-        [("deadbeef", 99, 0)], "h string, doc_id long, pos int"
-    ).write.parquet(str(orphan))
-    st = build_gram_index(spark, _docs(spark, [0]), idx, k=K)
-    assert st["generation"] == 0 and st["novel_grams"] > 0
-    assert index_stats(spark, idx)["stored_grams"] == st["novel_grams"]
-
-
 def test_param_and_scheme_pinning(spark, tmp_path):
     import json
 

@@ -126,7 +126,7 @@ def test_chunk_delete_then_reupload_resurrects(spark, tmp_path, snapshots):
     live0 = ci.index_stats(spark, idx).collect()[0]
     hashes = [
         r.hash
-        for r in ci._read_index(spark, idx).select("hash").limit(3).collect()
+        for r in ci.STORE.read(spark, idx).select("hash").limit(3).collect()
     ]
     st = ci.delete_chunks(spark, idx, hashes)
     assert st["tombstoned"] == 3
@@ -151,7 +151,7 @@ def test_chunk_compact_purges_tombstoned(spark, tmp_path, snapshots):
     ci.update_index(spark, new, idx)
     hashes = [
         r.hash
-        for r in ci._read_index(spark, idx).select("hash").limit(4).collect()
+        for r in ci.STORE.read(spark, idx).select("hash").limit(4).collect()
     ]
     ci.delete_chunks(spark, idx, hashes)
     live = ci.index_stats(spark, idx).collect()[0]

@@ -88,26 +88,6 @@ def test_mismatched_signature_refused(spark, tmp_path):
         index_stats(spark, idx)
 
 
-def test_orphan_generation_cleanup(spark, tmp_path):
-    """A generation dir written by a crashed attempt (manifest never
-    committed) must not poison the retry: the retry removes it and the
-    admission result is as if the crash never happened."""
-    docs = _docs(spark)
-    idx = tmp_path / "lsh"
-    build_lsh_index(spark, docs.filter(F.col("doc_id") % 3 != 0), idx)
-    batch = docs.filter(F.col("doc_id") % 3 == 0)
-    # simulate the crash window: gen-00001 exists, manifest still at 1
-    orphan = idx / "gen-00001.parquet"
-    batch.limit(3).selectExpr(
-        "doc_id", "0 as band_id", "'junk' as band_key"
-    ).write.parquet(str(orphan))
-    cands, rep = admit_docs(spark, batch, idx)
-    got = {(r.doc_a, r.doc_b) for r in cands.collect()}
-    want = {p for p in _full_pairs(spark) if p[0] % 3 == 0 or p[1] % 3 == 0}
-    assert got == want
-    assert rep["generation"] == 1
-
-
 def test_build_refuses_existing(spark, tmp_path):
     docs = _docs(spark)
     idx = tmp_path / "lsh"
@@ -231,45 +211,6 @@ def test_query_is_readonly_lookup(spark, tmp_path):
         (r.probe_doc_id, r.index_doc_id)
         for r in query_docs(spark, probe, idx).collect()
     } == hits
-
-
-def test_generation_numbers_past_five_digits(spark, tmp_path):
-    """A streaming index crosses gen 99999; the full digit run must
-    parse (a fixed 5-char slice would mis-order and, after compaction
-    raised the floor, silently drop committed generations)."""
-    import json as _json
-
-    from dataset_dedupe_estimator_spark.plans.lsh_index import _gen_files, _gen_no
-    from pathlib import Path
-
-    idx = tmp_path / "lsh"
-    docs = _docs(spark)
-    build_lsh_index(spark, docs.filter(F.col("doc_id") < 50), idx)
-    # simulate a long history: rename gen-0 to gen-100000 and bump meta
-    (idx / "gen-00000.parquet").rename(idx / "gen-100000.parquet")
-    meta = _json.load(open(idx / "_lsh_meta.json"))
-    meta["generations"] = 100001
-    meta["compacted_below"] = 99999
-    _json.dump(meta, open(idx / "_lsh_meta.json", "w"))
-    assert _gen_no(Path(str(idx / "gen-100000.parquet"))) == 100000
-    assert _gen_files(idx, 99999) == [str(idx / "gen-100000.parquet")]
-    # readers and admission still see the committed generation
-    assert index_stats(spark, idx)["docs"] > 0
-    _, rep = admit_docs(spark, docs.filter(F.col("doc_id") < 50), idx)
-    assert rep["docs"] == 0 and rep["generation"] == 100001
-
-
-def test_build_retry_after_precommit_crash(spark, tmp_path):
-    """Manifest-less gen-00000 (crash between write and commit) must not
-    wedge a retried build (ADVICE r3)."""
-    idx = tmp_path / "idx"
-    orphan = idx / "gen-00000.parquet"
-    spark.range(3).selectExpr(
-        "CAST(id AS INT) AS band", "CAST(id AS STRING) AS band_key", "id AS doc_id"
-    ).write.parquet(str(orphan))
-    docs = _docs(spark)
-    st = build_lsh_index(spark, docs, idx)
-    assert st["generation"] == 0 and st["docs"] == docs.count()
 
 
 def test_single_writer_lock_refuses_concurrent_admission(spark, tmp_path):

@@ -4,7 +4,11 @@ one command, with a PASS/FAIL summary line per stage.
 Usage: python tools/round_check.py [--fast]
 
 Stages (``--fast`` runs only the first three):
-  1. pytest              — the full unit/integration suite
+  1. pytest              — full mode: the whole suite, slow tests included
+                           (pytest tests/ -m 'slow or not slow'), the
+                           seal gate; --fast: the default selection
+                           (pyproject addopts -m 'not slow', the
+                           driver-budget run)
   2. oracle gate         — tools/check_oracles.py over the whole registry
                            (writes CORRECTNESS_LOCAL_r{N}.json for the in-progress round)
   3. driver smoke        — __spark_entry__.entry() returns rows at sf0.001
@@ -61,8 +65,13 @@ def main() -> int:
     def pytest_ok(p):
         return p.returncode == 0, _last_line(p.stdout)
 
+    select = [] if fast else ["-m", "slow or not slow"]
     results.append(
-        _run("pytest", [sys.executable, "-m", "pytest", "tests/", "-q"], pytest_ok)
+        _run(
+            "pytest",
+            [sys.executable, "-m", "pytest", "tests/", "-q", *select],
+            pytest_ok,
+        )
     )
 
     def gate_ok(p):

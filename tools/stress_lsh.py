@@ -117,10 +117,10 @@ def main() -> int:
     # with a noop sink so stage cost isn't hidden inside a later action.
     # Mirrors the real stages (anti-join → signatures → candidate join →
     # generation write); drift guard: the stage composition here is the
-    # same band_rows_of/minhash_sig_of/_read_index calls admit_docs makes.
+    # same band_rows_of/minhash_sig_of/STORE.read calls admit_docs makes.
     from pyspark.sql import functions as F
 
-    from dataset_dedupe_estimator_spark.plans.lsh_index import _read_index
+    from dataset_dedupe_estimator_spark.plans.lsh_index import STORE
     from dataset_dedupe_estimator_spark.queries.dedupe_text import (
         band_rows_of,
         minhash_sig_of,
@@ -133,7 +133,7 @@ def main() -> int:
         bd = {}
 
         t0 = time.perf_counter()
-        known = _read_index(spark, idx)
+        known = STORE.read(spark, idx)
         known_ids = known.select("doc_id").distinct()
         fresh2 = batch_df.select("doc_id", "text").join(known_ids, "doc_id", "left_anti")
         fresh2.persist().count()

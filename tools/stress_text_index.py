@@ -176,22 +176,22 @@ def main() -> int:
         # merge identical generations.
         import shutil as sh
 
-        from dataset_dedupe_estimator_spark.plans import text_index as ti_mod
+        from dataset_dedupe_estimator_spark.plans import _genstore
 
         idx_one = f"{root}/big_one_task"
         sh.copytree(idx, idx_one)
-        saved_target = ti_mod._COMPACT_TARGET_BYTES
+        saved_target = _genstore.TARGET_BYTES
         try:
-            ti_mod._COMPACT_TARGET_BYTES = 1 << 60  # forces one task
+            _genstore.TARGET_BYTES = 1 << 60  # forces one task
             t0 = time.time()
             compact_text_index(spark, idx_one)
             out["compact_one_task_s"] = round(time.time() - t0, 2)
-            ti_mod._COMPACT_TARGET_BYTES = 16 << 20  # sized: multi-task
+            _genstore.TARGET_BYTES = 16 << 20  # sized: multi-task
             t0 = time.time()
             cst = compact_text_index(spark, idx)
             out["compact_sized_s"] = round(time.time() - t0, 2)
         finally:
-            ti_mod._COMPACT_TARGET_BYTES = saved_target
+            _genstore.TARGET_BYTES = saved_target
         got_c = [
             (r.doc_id, r.n_terms, r.score)
             for r in search(spark, idx, QUERY, top=20).collect()
