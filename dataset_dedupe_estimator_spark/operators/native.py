@@ -23,6 +23,12 @@ over random and adversarial buffers):
 * ``window_scan`` — the windowed-sum scheme: 64-byte rolling sum of
   table values, mixed by a 64-bit odd multiplier, same candidate test.
 
+The MinHash signature kernel (``minhash_sigs``, with its own md5) does
+the per-document loop of ``queries/dedupe_text.py:_minhash_sig_fn`` —
+tokenize on spaces, hash word trigrams, keep the 16 affine minima —
+with the same output as that function's Python fallback (enforced by
+tests/test_minhash_kernel.py).
+
 No compiler, a failed compile, or ``DDES_NO_NATIVE=1`` → callers fall
 back to the numpy path transparently (``available()`` is False).
 """
@@ -490,6 +496,121 @@ void chunk_probe_scan(const uint8_t *buf, const int64_t *offs,
     }
 }
 
+/* MD5 (RFC 1321), one-shot. The MinHash base hash is md5 because md5 is
+   the one hash Spark and DuckDB share (the oracle contract); this copy
+   only lets the signature kernel skip a Python call per shingle.
+   Cross-checked in tests against hashlib across the padding
+   boundaries. Little-endian hosts only, like xxh64 above. */
+static const uint32_t MD5_K[64] = {
+    0xd76aa478, 0xe8c7b756, 0x242070db, 0xc1bdceee,
+    0xf57c0faf, 0x4787c62a, 0xa8304613, 0xfd469501,
+    0x698098d8, 0x8b44f7af, 0xffff5bb1, 0x895cd7be,
+    0x6b901122, 0xfd987193, 0xa679438e, 0x49b40821,
+    0xf61e2562, 0xc040b340, 0x265e5a51, 0xe9b6c7aa,
+    0xd62f105d, 0x02441453, 0xd8a1e681, 0xe7d3fbc8,
+    0x21e1cde6, 0xc33707d6, 0xf4d50d87, 0x455a14ed,
+    0xa9e3e905, 0xfcefa3f8, 0x676f02d9, 0x8d2a4c8a,
+    0xfffa3942, 0x8771f681, 0x6d9d6122, 0xfde5380c,
+    0xa4beea44, 0x4bdecfa9, 0xf6bb4b60, 0xbebfbc70,
+    0x289b7ec6, 0xeaa127fa, 0xd4ef3085, 0x04881d05,
+    0xd9d4d039, 0xe6db99e5, 0x1fa27cf8, 0xc4ac5665,
+    0xf4292244, 0x432aff97, 0xab9423a7, 0xfc93a039,
+    0x655b59c3, 0x8f0ccc92, 0xffeff47d, 0x85845dd1,
+    0x6fa87e4f, 0xfe2ce6e0, 0xa3014314, 0x4e0811a1,
+    0xf7537e82, 0xbd3af235, 0x2ad7d2bb, 0xeb86d391,
+};
+static const uint8_t MD5_S[16] = {
+    7, 12, 17, 22, 5, 9, 14, 20, 4, 11, 16, 23, 6, 10, 15, 21,
+};
+static void md5_block(uint32_t st[4], const uint8_t *p) {
+    uint32_t m[16];
+    __builtin_memcpy(m, p, 64);
+    uint32_t a = st[0], b = st[1], c = st[2], d = st[3];
+    for (int i = 0; i < 64; i++) {
+        uint32_t f;
+        int g;
+        if (i < 16) { f = (b & c) | (~b & d); g = i; }
+        else if (i < 32) { f = (d & b) | (~d & c); g = (5 * i + 1) & 15; }
+        else if (i < 48) { f = b ^ c ^ d; g = (3 * i + 5) & 15; }
+        else { f = c ^ (b | ~d); g = (7 * i) & 15; }
+        int s = MD5_S[((i >> 4) << 2) | (i & 3)];
+        f += a + MD5_K[i] + m[g];
+        a = d; d = c; c = b;
+        b += (f << s) | (f >> (32 - s));
+    }
+    st[0] += a; st[1] += b; st[2] += c; st[3] += d;
+}
+void md5_digest(const uint8_t *p, int64_t n, uint8_t *out) {
+    uint32_t st[4] = { 0x67452301, 0xefcdab89, 0x98badcfe, 0x10325476 };
+    int64_t i = 0;
+    for (; i + 64 <= n; i += 64) md5_block(st, p + i);
+    uint8_t tail[128];
+    int64_t r = n - i;
+    int64_t tl = r < 56 ? 64 : 128; /* the length field needs 8 bytes */
+    memset(tail, 0, sizeof tail);
+    memcpy(tail, p + i, r);
+    tail[r] = 0x80;
+    uint64_t bits = (uint64_t)n << 3;
+    memcpy(tail + tl - 8, &bits, 8);
+    md5_block(st, tail);
+    if (tl == 128) md5_block(st, tail + 64);
+    memcpy(out, st, 16);
+}
+
+/* x mod (2^31 - 1) for x < 2^63 without a division: 2^31 = 1 (mod p). */
+static inline uint64_t mod_mersenne31(uint64_t x) {
+    x = (x & 0x7fffffffULL) + (x >> 31);
+    x = (x & 0x7fffffffULL) + (x >> 31);
+    return x >= 0x7fffffffULL ? x - 0x7fffffffULL : x;
+}
+
+/* MinHash signatures of n documents in Arrow string layout (int64
+   offsets into one data buffer; valid[d] == 0 is NULL). Tokens split on
+   the byte 0x20 (a UTF-8 multi-byte sequence never contains it, so this
+   is Python's str.split(" ") and Spark's split(text, ' ')); each word
+   trigram is the text between the first token's start and the third
+   token's end, i.e. the tokens joined by one space. Base hash: md5's
+   first 4 bytes big-endian, mod p; signature j is the min over the
+   doc's shingles of (a[j] * base + b[j]) mod p (products < 2^62). A
+   repeated shingle needs no set: min ignores repeats. emit[d] = 1 iff
+   the doc is non-NULL with at least 3 tokens (else no shingle, and the
+   doc has no signature). sigs is n x k, row-major. */
+void minhash_sigs(const uint8_t *data, const int64_t *offs,
+                  const uint8_t *valid, int64_t n, const int64_t *a,
+                  const int64_t *b, int64_t k, int64_t p,
+                  int64_t *sigs, uint8_t *emit) {
+    int mersenne = p == 0x7fffffffLL;
+    for (int64_t d = 0; d < n; d++) {
+        int64_t *sig = sigs + d * k;
+        for (int64_t j = 0; j < k; j++) sig[j] = INT64_MAX;
+        emit[d] = 0;
+        if (!valid[d]) continue;
+        const uint8_t *s = data + offs[d];
+        int64_t len = offs[d + 1] - offs[d];
+        int64_t ntok = 0, cur = 0, prev1 = 0, prev2 = 0;
+        for (int64_t i = 0; i <= len; i++) {
+            if (i < len && s[i] != 0x20) continue;
+            if (ntok >= 2) { /* token ntok ends at i: shingle [prev2, i) */
+                uint32_t st[4];
+                md5_digest(s + prev2, i - prev2, (uint8_t *)st);
+                uint64_t base = __builtin_bswap32(st[0]);
+                base = mersenne ? mod_mersenne31(base) : base % (uint64_t)p;
+                for (int64_t j = 0; j < k; j++) {
+                    uint64_t v = (uint64_t)a[j] * base + (uint64_t)b[j];
+                    int64_t h = (int64_t)(mersenne ? mod_mersenne31(v)
+                                                   : v % (uint64_t)p);
+                    if (h < sig[j]) sig[j] = h;
+                }
+            }
+            prev2 = prev1;
+            prev1 = cur;
+            cur = i + 1;
+            ntok++;
+        }
+        emit[d] = ntok >= 3;
+    }
+}
+
 /* PNG scanline un-filtering (spec filters 0-4), in place over an
    h x stride image whose per-row filter bytes were stripped into
    `filters`. Row-serial by spec; byte ops are branch-light C. */
@@ -601,6 +722,14 @@ def _compile() -> ctypes.CDLL | None:
     lib.chunk_hash3_scan.argtypes = [
         ctypes.c_void_p, ctypes.c_void_p, ctypes.c_int64,
         ctypes.c_int64, ctypes.c_void_p,
+    ]
+    lib.md5_digest.restype = None
+    lib.md5_digest.argtypes = [ctypes.c_char_p, ctypes.c_int64, ctypes.c_char_p]
+    lib.minhash_sigs.restype = None
+    lib.minhash_sigs.argtypes = [
+        ctypes.c_void_p, ctypes.c_void_p, ctypes.c_void_p, ctypes.c_int64,
+        ctypes.c_void_p, ctypes.c_void_p, ctypes.c_int64, ctypes.c_int64,
+        ctypes.c_void_p, ctypes.c_void_p,
     ]
     lib.png_unfilter.restype = ctypes.c_int
     lib.png_unfilter.argtypes = [
@@ -786,6 +915,62 @@ def chunk_probes(
         idx.ctypes.data, idx.shape[0], cap, out.ctypes.data,
     )
     return out
+
+
+def md5_bytes(data: bytes) -> bytes | None:
+    """md5 digest of ``data`` by the C copy the MinHash kernel uses, or
+    None without the native lib. Cross-checked against hashlib in tests."""
+    lib = _get()
+    if lib is None:
+        return None
+    out = ctypes.create_string_buffer(16)
+    lib.md5_digest(data, len(data), out)
+    return out.raw
+
+
+def minhash_sigs(texts, a, b, p: int) -> tuple[np.ndarray, np.ndarray] | None:
+    """MinHash signatures of an Arrow string array in one native pass:
+    ``(emit, sigs)`` where ``emit`` is a bool mask of the docs that have
+    a signature (non-NULL, at least 3 tokens) and ``sigs`` is the
+    (len, len(a)) int64 minima (rows where ``emit`` is False are
+    undefined). None without the native lib. Semantics: see the C
+    ``minhash_sigs``."""
+    lib = _get()
+    if lib is None:
+        return None
+    import pyarrow as pa
+
+    a = np.ascontiguousarray(a, dtype=np.int64)
+    b = np.ascontiguousarray(b, dtype=np.int64)
+    k = a.shape[0]
+    if a.ndim != 1 or b.shape != (k,):
+        raise ValueError("a and b must be 1-d arrays of one length")
+    if isinstance(texts, pa.ChunkedArray):
+        texts = texts.combine_chunks()
+    if texts.type not in (pa.string(), pa.large_string()):
+        texts = texts.cast(pa.large_string())
+    n = len(texts)
+    if n == 0:
+        return np.zeros(0, np.bool_), np.empty((0, k), np.int64)
+    _, obuf, dbuf = texts.buffers()
+    odt = np.int64 if texts.type == pa.large_string() else np.int32
+    # the array may be a slice: its offsets start at texts.offset
+    offs = np.ascontiguousarray(
+        np.frombuffer(obuf, dtype=odt, count=texts.offset + n + 1)[texts.offset :],
+        dtype=np.int64,
+    )
+    # all-empty or all-NULL text: no data buffer, and no byte is read
+    data = np.frombuffer(dbuf, np.uint8) if dbuf is not None and dbuf.size else np.zeros(1, np.uint8)
+    valid = np.ascontiguousarray(
+        texts.is_valid().to_numpy(zero_copy_only=False), dtype=np.uint8
+    )
+    sigs = np.empty((n, k), dtype=np.int64)
+    emit = np.empty(n, dtype=np.uint8)
+    lib.minhash_sigs(
+        data.ctypes.data, offs.ctypes.data, valid.ctypes.data, n,
+        a.ctypes.data, b.ctypes.data, k, p, sigs.ctypes.data, emit.ctypes.data,
+    )
+    return emit.view(np.bool_), sigs
 
 
 def png_unfilter(rows: np.ndarray, filters: np.ndarray, ch: int) -> bool:

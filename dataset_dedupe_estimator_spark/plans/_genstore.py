@@ -56,13 +56,15 @@ TARGET_BYTES = 128 << 20
 @dataclasses.dataclass(frozen=True)
 class GenStore:
     """One index kind's generation layout: its manifest filename, the
-    generation dir suffix, and the manifest's JSON indent (None for PQ,
-    whose manifest carries the trained centroids and codebooks). Methods
-    take the index dir."""
+    generation dir suffix, the manifest's JSON indent (None for PQ,
+    whose manifest carries the trained centroids and codebooks), and the
+    declared payload schema of a flat parquet payload (a DDL string, in
+    on-disk column order; None infers it). Methods take the index dir."""
 
     manifest: str
     suffix: str = ""
     indent: int | None = 1
+    schema: str | None = None
 
     def gen_path(self, index_dir: str | Path, n: int) -> Path:
         return Path(index_dir) / f"gen-{n:05d}{self.suffix}"
@@ -100,6 +102,14 @@ class GenStore:
             raise FileNotFoundError(f"no index generations under {index_dir}")
         return gens
 
+    def scan(self, spark: SparkSession, *paths: str | Path) -> DataFrame:
+        """A parquet scan of ``paths`` with the declared payload schema.
+        Without one, ``spark.read.parquet`` first runs a Spark job to
+        infer the schema from a footer. Spark reads every column as
+        nullable either way, so what a compaction writes is unchanged."""
+        reader = spark.read if self.schema is None else spark.read.schema(self.schema)
+        return reader.parquet(*(str(p) for p in paths))
+
     def read(
         self,
         spark: SparkSession,
@@ -112,7 +122,7 @@ class GenStore:
         read; pass the caller's copy so the generation list and the
         tombstone window come from the same commit."""
         meta = self.load(index_dir) if meta is None else meta
-        return spark.read.parquet(*(str(g / sub) for g in self.live(index_dir, meta)))
+        return self.scan(spark, *(g / sub for g in self.live(index_dir, meta)))
 
     def read_each(
         self, spark: SparkSession, index_dir: str | Path, meta: dict, sub: str = ""
@@ -160,7 +170,7 @@ class GenStore:
         )
         out = self.gen_path(index_dir, gen)
         merged.coalesce(int(files_out)).write.parquet(str(out))
-        return gen, len(live), spark.read.parquet(str(out)).count()
+        return gen, len(live), self.scan(spark, out).count()
 
     def commit_compaction(
         self, index_dir: str | Path, meta: dict, gen: int, entry: dict | None = None

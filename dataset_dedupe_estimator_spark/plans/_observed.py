@@ -22,8 +22,12 @@ construction: the observed frame IS the written frame, and
 that is the streaming-clone session the microbatch lineage carries).
 
 NOT convertible: distinct aggregates (``countDistinct``) are rejected
-inside observed metrics — lsh_index's per-admission doc count reads
-its persisted band cache instead.
+inside observed metrics. ``F.size(F.collect_set(col))`` IS accepted and
+gives the same exact distinct count, but the set itself travels to the
+driver: its memory is O(distinct values), so it fits a per-batch count
+(lsh_index's per-admission doc count, bounded by the batch's distinct
+ids) and not a corpus-wide one (build_lsh_index counts its generation
+with a distributed ``countDistinct`` instead).
 """
 
 from __future__ import annotations

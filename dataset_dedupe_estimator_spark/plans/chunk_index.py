@@ -62,7 +62,7 @@ from dataset_dedupe_estimator_spark.plans._tombstones import (
 )
 from dataset_dedupe_estimator_spark.plans.estimate import ESTIMATE_PARAMS
 
-STORE = GenStore("_index_meta.json", ".parquet")
+STORE = GenStore("_index_meta.json", ".parquet", schema="hash long, size long, csize long")
 _CHUNK_COLS = ("hash", "size", "csize")  # csize = chunker "compressed"
 
 

@@ -63,7 +63,7 @@ from dataset_dedupe_estimator_spark.plans._tombstones import (
     tombstones_df,
 )
 
-STORE = GenStore("_index_meta.json", ".parquet")
+STORE = GenStore("_index_meta.json", ".parquet", schema="h string, doc_id long, pos int")
 _GRAM_COLS = ("h", "doc_id", "pos")
 _HASH_SCHEME = "md5(space-joined k-gram)"
 

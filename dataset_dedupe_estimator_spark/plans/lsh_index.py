@@ -24,14 +24,20 @@ mismatched engine refuses instead of silently finding zero collisions.
 
 Scale shape (100 TB): band rows are ~45 bytes x N_BANDS per document
 (~4.5 GB per billion docs per band set) — a narrow table the admission
-join reads with band-column pruning. The join shuffles the NEW batch's
-band rows against the index on (band_id, band_key); AQE broadcasts the
-batch side when it is small, which is the steady state for continuous
-ingestion. Already-admitted doc_ids are skipped via a doc_id anti-join
-(idempotent re-admission), and candidate pairs are normalized
-(least, greatest) + distinct so new-vs-new collisions across several
-bands emit once. Generation sprawl is reclaimed by
-``compact_lsh_index`` (the generation store's compaction commit).
+join reads with band-column pruning, under the store's declared schema
+(no schema-inference job). The join shuffles the NEW batch's band rows
+against the index on (band_id, band_key); AQE broadcasts the batch side
+when it is small, which is the steady state for continuous ingestion.
+Already-admitted doc_ids are skipped by anti-joining the batch's
+signature rows against the index's ``band_id = 0`` rows (one per
+indexed doc, so no distinct aggregate; idempotent re-admission), and
+candidate pairs are normalized (least, greatest) + distinct so new-vs-new
+collisions across several bands emit once. The report's doc and pair
+counts are observed inside the generation write and the candidate
+checkpoint (plans/_observed.py): an admission of a parquet batch runs
+8 Spark jobs, its read included (tests/test_lsh_index.py pins it).
+Generation sprawl is reclaimed by ``compact_lsh_index`` (the generation
+store's compaction commit).
 
 Determinism contract: signatures are pure functions of (doc_id, text)
 — seeded affine permutations over a cross-engine md5 base hash — so
@@ -51,6 +57,7 @@ from pyspark.sql import functions as F
 
 from dataset_dedupe_estimator_spark.plans._genstore import GenStore
 from dataset_dedupe_estimator_spark.plans._index_lock import writer_lock
+from dataset_dedupe_estimator_spark.plans._observed import observed_metrics
 from dataset_dedupe_estimator_spark.plans._tombstones import (
     append_tombstone_set,
     minus_tombstones,
@@ -68,7 +75,9 @@ from dataset_dedupe_estimator_spark.queries.dedupe_text import (
     minhash_sig_of,
 )
 
-STORE = GenStore("_lsh_meta.json", ".parquet")
+STORE = GenStore(
+    "_lsh_meta.json", ".parquet", schema="doc_id long, band_id int, band_key string"
+)
 _BAND_COLS = ("doc_id", "band_id", "band_key")
 
 
@@ -118,9 +127,11 @@ def build_lsh_index(
         out = STORE.gen_path(index_dir, 0)
         bands = band_rows_of(minhash_sig_of(docs.select("doc_id", "text")))
         bands.select(*_BAND_COLS).write.mode("errorifexists").parquet(str(out))
-        n_docs = (
-            spark.read.parquet(str(out)).agg(F.countDistinct("doc_id")).collect()[0][0]
-        )
+        # exact at any corpus size: a distributed distinct count over the
+        # generation just written, read with the store's schema (no
+        # schema-inference job); an observed collect_set would hold
+        # every doc id on the driver
+        n_docs = STORE.scan(spark, out).agg(F.countDistinct("doc_id")).first()[0]
         meta = {
             "signature": _signature_params(),
             "generations": 1,
@@ -155,6 +166,11 @@ def admit_docs(
 def _admit_docs_locked(
     spark: SparkSession, docs: DataFrame, index_dir: Path
 ) -> tuple[DataFrame, dict]:
+    """Two actions: the generation write and the candidate checkpoint,
+    each carrying one observed count of the report (plans/_observed.py).
+    Both observed frames derive from ``docs``, so the session that runs
+    the action is the one that registered the Observation (in
+    ``foreachBatch``, the microbatch's session)."""
     meta = _check_meta(index_dir)
     gen = meta["generations"]
     STORE.clear(index_dir, meta)
@@ -162,14 +178,20 @@ def _admit_docs_locked(
     ts = tombstones_df(spark, index_dir, meta, "doc_id")
     # deleted docs collide with nothing (their band rows are suppressed)
     known = minus_tombstones(STORE.read(spark, index_dir, meta), ts, "doc_id")
-    known_ids = known.select("doc_id").distinct()
+    # every signature row has exactly one band_id = 0 row: the indexed
+    # ids without an aggregate (repeats are harmless to an anti-join)
+    known_ids = known.filter(F.col("band_id") == 0).select("doc_id")
     if ts is not None:  # ...but their ids stay denylisted for admission
         known_ids = known_ids.unionByName(ts)
-    fresh = docs.select("doc_id", "text").join(known_ids, "doc_id", "left_anti")
-    # persist: the band rows feed three actions (candidate join, the
-    # generation write, the report count); without it each would
-    # re-shingle and re-hash the batch
-    new_bands = band_rows_of(minhash_sig_of(fresh)).persist()
+    # signatures of the batch scan itself, anti-joined afterwards: the
+    # spread guard in minhash_sig_of reads ``.rdd``, which on a joined
+    # AQE plan would execute the join's stages once more
+    sigs = minhash_sig_of(docs.select("doc_id", "text"))
+    fresh = sigs.join(known_ids, "doc_id", "left_anti")
+    # persist: the band rows feed the generation write and both sides of
+    # the candidate join; without it each would re-shingle and re-hash
+    # the batch
+    new_bands = band_rows_of(fresh).persist()
     all_bands = known.unionByName(new_bands)
     cands = (
         new_bands.alias("a")
@@ -181,19 +203,21 @@ def _admit_docs_locked(
         )
         .distinct()
     )
-    new_bands.select(*_BAND_COLS).write.mode("errorifexists").parquet(str(out))
-    # report accounting from the persisted band cache the write just
-    # materialized — same rows as the generation on disk (the
-    # errorifexists write either landed exactly new_bands or raised),
-    # without re-reading what was just written. Not an observed metric:
-    # countDistinct is a distinct aggregate, which observe() rejects
-    # (plans/_observed.py docstring).
-    n_docs = new_bands.agg(F.countDistinct("doc_id")).collect()[0][0]
+    # the doc count rides the generation write: exact (a doc id repeated
+    # in the batch counts once), and its driver memory is bounded by the
+    # batch's distinct ids, never the index's
+    gen_df, gen_metrics = observed_metrics(
+        new_bands.select(*_BAND_COLS), docs=F.size(F.collect_set("doc_id"))
+    )
+    gen_df.write.mode("errorifexists").parquet(str(out))
+    n_docs = gen_metrics()["docs"]
     # materialize the (narrow) pair set before dropping the band cache:
     # callers consume cands AFTER this returns, and without the
-    # checkpoint that evaluation would re-shingle and re-join the batch
+    # checkpoint that evaluation would re-shingle and re-join the batch;
+    # the pair count rides the checkpoint's own job
+    cands, cand_metrics = observed_metrics(cands, pairs=F.count(F.lit(1)))
     cands = cands.localCheckpoint(eager=True)
-    n_pairs = cands.count()
+    n_pairs = cand_metrics()["pairs"]
     meta["generations"] = gen + 1
     meta["admissions"].append(
         {"gen": gen, "docs": n_docs, "candidate_pairs": n_pairs}

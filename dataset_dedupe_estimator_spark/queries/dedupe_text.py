@@ -335,49 +335,66 @@ def _minhash_sig_fn(it):
     transform lambda, evaluates md5+conv+16 muls per row, then shuffles
     the partial minima; here the only per-shingle JVM work disappears,
     nothing explodes, and each doc leaves the kernel as ONE 17-int row
-    — the signature aggregate's exchange vanishes from the plan."""
-    import numpy as np
+    — the signature aggregate's exchange vanishes from the plan.
+
+    The per-doc loop runs in C (``operators/native.py``
+    ``minhash_sigs``, the same md5 in a C copy) when the native library
+    is available, and in Python (:func:`_minhash_sigs_py`) otherwise;
+    both give the same signatures."""
     import pyarrow as pa
+
+    from dataset_dedupe_estimator_spark.operators import native
+
+    use_native = native.available()
+    for batch in it:
+        idx = {n: i for i, n in enumerate(batch.schema.names)}
+        texts = batch.column(idx["text"])
+        if use_native:
+            keep, sig_m = native.minhash_sigs(texts, MH_A, MH_B, MH_P)
+        else:
+            keep, sig_m = _minhash_sigs_py(texts.to_pylist())
+        keep_arr = pa.array(keep, pa.bool_())
+        sig_m = sig_m[keep]
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(idx["doc_id"]).cast(pa.int64()).filter(keep_arr)]
+            + [pa.array(sig_m[:, i], pa.int64()) for i in range(N_MINHASH)],
+            names=["doc_id"] + [f"m{i}" for i in range(N_MINHASH)],
+        )
+
+
+def _minhash_sigs_py(texts: list) -> tuple:
+    """Pure-Python fallback of the native ``minhash_sigs``: ``(keep,
+    sigs)``, a bool mask of the docs with a signature and their
+    (len(texts), N_MINHASH) minima (rows not kept are zero)."""
+    import numpy as np
     from hashlib import md5
 
     A = np.asarray(MH_A, dtype=np.int64)[None, :]
     B = np.asarray(MH_B, dtype=np.int64)[None, :]
-    for batch in it:
-        idx = {n: i for i, n in enumerate(batch.schema.names)}
-        doc_ids = batch.column(idx["doc_id"]).to_pylist()
-        texts = batch.column(idx["text"]).to_pylist()
-        out_ids = []
-        sigs = []
-        for doc_id, text in zip(doc_ids, texts):
-            if text is None:
-                continue
-            t = text.split(" ")
-            n = len(t)
-            if n < SHINGLE_W:
-                continue
-            seen = {
-                t[i] + " " + t[i + 1] + " " + t[i + 2]
-                for i in range(n - SHINGLE_W + 1)
-            }
-            bases = np.fromiter(
-                (
-                    int.from_bytes(md5(s.encode("utf-8")).digest()[:4], "big")
-                    % MH_P
-                    for s in seen
-                ),
-                dtype=np.int64,
-                count=len(seen),
-            )
-            sigs.append(((bases[:, None] * A + B) % MH_P).min(axis=0))
-            out_ids.append(doc_id)
-        sig_m = (
-            np.vstack(sigs) if sigs else np.empty((0, N_MINHASH), np.int64)
+    keep = np.zeros(len(texts), dtype=bool)
+    sig_m = np.zeros((len(texts), N_MINHASH), dtype=np.int64)
+    for d, text in enumerate(texts):
+        if text is None:
+            continue
+        t = text.split(" ")
+        n = len(t)
+        if n < SHINGLE_W:
+            continue
+        seen = {
+            t[i] + " " + t[i + 1] + " " + t[i + 2]
+            for i in range(n - SHINGLE_W + 1)
+        }
+        bases = np.fromiter(
+            (
+                int.from_bytes(md5(s.encode("utf-8")).digest()[:4], "big") % MH_P
+                for s in seen
+            ),
+            dtype=np.int64,
+            count=len(seen),
         )
-        yield pa.RecordBatch.from_arrays(
-            [pa.array(out_ids, pa.int64())]
-            + [pa.array(sig_m[:, i], pa.int64()) for i in range(N_MINHASH)],
-            names=["doc_id"] + [f"m{i}" for i in range(N_MINHASH)],
-        )
+        sig_m[d] = ((bases[:, None] * A + B) % MH_P).min(axis=0)
+        keep[d] = True
+    return keep, sig_m
 
 
 def minhash_sig_of(docs: DataFrame) -> DataFrame:

@@ -195,9 +195,11 @@ def sanity_check(src: DataFrame, n_src: int, dest: Path, writer_fmt: str) -> Non
 
     - parquet: the file footer (``pq.ParquetFile``), no Spark job —
       ``spark.read.parquet`` would run a schema-inference job first;
-    - json: one Spark job over the file's lines, counting them and
-      collecting every top-level key present. Spark's JSON writer omits
-      null fields, so the keys must be a subset of the source names;
+    - json: one Spark job, a ``noop`` write of the file's lines whose
+      Observation counts them and collects every top-level key present
+      (a global aggregate would cost a second job under AQE). Spark's
+      JSON writer omits null fields, so the keys must be a subset of the
+      source names;
     - orc: a Spark read-back (its count and column names);
     - csv: a Spark read-back count with the source schema (CSV is
       untyped; the names are the source's).
@@ -207,18 +209,15 @@ def sanity_check(src: DataFrame, n_src: int, dest: Path, writer_fmt: str) -> Non
         pf = pq.ParquetFile(dest)
         out_names, n_out = pf.schema_arrow.names, pf.metadata.num_rows
     elif writer_fmt == "json":
-        row = (
-            src.sparkSession.read.text(str(dest))
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.array_distinct(
-                    F.flatten(F.collect_set(F.json_object_keys("value")))
-                ).alias("keys"),
-            )
-            .first()
+        lines, resolve = observed_metrics(
+            src.sparkSession.read.text(str(dest)),
+            n=F.count(F.lit(1)),
+            keys=F.flatten(F.collect_set(F.json_object_keys("value"))),
         )
-        n_out = row.n
-        out_names = names if set(row.keys) <= set(names) else sorted(row.keys)
+        lines.write.format("noop").mode("overwrite").save()
+        m = resolve()
+        n_out = m["n"]
+        out_names = names if set(m["keys"]) <= set(names) else sorted(set(m["keys"]))
     else:
         reader = src.sparkSession.read
         back = (

@@ -4,6 +4,7 @@ banding, idempotent on re-admission, and crash-safe around the
 generation-write / manifest-commit window."""
 
 import json
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,6 +13,7 @@ from dataset_dedupe_estimator_spark.plans.lsh_index import (
     admit_docs,
     build_lsh_index,
     index_stats,
+    query_docs,
 )
 from dataset_dedupe_estimator_spark.queries.dedupe_text import (
     _minhash_candidate_pairs,
@@ -62,12 +64,29 @@ def test_incremental_equals_single_shot(spark, tmp_path):
     assert r0["generation"] == 2
 
 
+def _admit_or_park(spark, docs, idx, timeout=300):
+    """admit_docs in a daemon thread: an Observation that never resolves
+    parks ``Observation.get`` forever, which fails here instead of
+    hanging the run."""
+    out = []
+    t = threading.Thread(
+        target=lambda: out.append(admit_docs(spark, docs, idx)), daemon=True
+    )
+    t.start()
+    t.join(timeout)
+    assert out, "admission parked (an Observation never resolved)"
+    return out[0]
+
+
 def test_readmission_is_idempotent(spark, tmp_path):
+    """All ids known: the anti-join leaves no signature, both observed
+    counts resolve to 0 on the empty write and checkpoint, and the
+    empty generation still commits."""
     docs = _docs(spark)
     idx = tmp_path / "lsh"
     build_lsh_index(spark, docs.filter(F.col("doc_id") < 100), idx)
     before = index_stats(spark, idx)
-    cands, rep = admit_docs(spark, docs.filter(F.col("doc_id") < 100), idx)
+    cands, rep = _admit_or_park(spark, docs.filter(F.col("doc_id") < 100), idx)
     assert rep["docs"] == 0 and rep["candidate_pairs"] == 0
     assert cands.count() == 0
     after = index_stats(spark, idx)
@@ -237,9 +256,10 @@ def test_single_writer_lock_refuses_concurrent_admission(spark, tmp_path):
 
 
 def test_report_docs_matches_generation_on_disk(spark, tmp_path):
-    """r14: the per-admission doc count comes from the persisted band
-    cache (countDistinct cannot ride an observed metric) — it must
-    equal the distinct doc_ids of the generation actually on disk."""
+    """The per-admission doc count is observed on the generation write
+    (``size(collect_set(doc_id))``; countDistinct cannot ride an
+    observed metric) — it must equal the distinct doc_ids of the
+    generation actually on disk."""
     docs = _docs(spark)
     idx = tmp_path / "obslsh"
     build_lsh_index(spark, docs.filter(F.col("doc_id") % 3 == 1), idx)
@@ -247,3 +267,54 @@ def test_report_docs_matches_generation_on_disk(spark, tmp_path):
     gen1 = spark.read.parquet(str(idx / f"gen-{rep['generation']:05d}.parquet"))
     on_disk = gen1.select("doc_id").distinct().count()
     assert rep["docs"] == on_disk > 0
+
+
+def test_batch_with_repeated_doc_id_counts_it_once(spark, tmp_path):
+    """A doc_id twice in one batch is one admitted doc: both rows' band
+    rows are written (as before), the report and index_stats count it
+    once, and it never pairs with itself."""
+    docs = _docs(spark)
+    idx = tmp_path / "lsh"
+    build_lsh_index(spark, docs.filter(F.col("doc_id") < 60), idx)
+    src = docs.filter(F.col("doc_id") == 7).first()
+    new_id = 10**9
+    batch = spark.createDataFrame(
+        [(new_id, src.text), (new_id, src.text)], "doc_id long, text string"
+    )
+    want = {
+        (r.index_doc_id, new_id) for r in query_docs(spark, batch.limit(1), idx).collect()
+    }
+    assert (7, new_id) in want
+    before = index_stats(spark, idx)
+    cands, rep = _admit_or_park(spark, batch, idx)
+    assert rep["docs"] == 1
+    assert {(r.doc_a, r.doc_b) for r in cands.collect()} == want
+    assert rep["candidate_pairs"] == len(want)
+    after = index_stats(spark, idx)
+    assert after["docs"] == before["docs"] + 1
+    assert after["band_rows"] == before["band_rows"] + 8
+
+
+def test_admit_job_budget(spark, tmp_path):
+    """One admission of a batch read from parquet runs at most 8 Spark
+    jobs, the batch read included: signatures on the batch scan, the
+    known ids from band_id = 0 rows, the index read with the store's
+    schema, and both report counts observed inside the generation write
+    and the candidate checkpoint."""
+    docs = _docs(spark)
+    idx = tmp_path / "lsh"
+    build_lsh_index(spark, docs.filter(F.col("doc_id") % 3 == 1), idx)
+    for m in (2, 0):
+        docs.filter(F.col("doc_id") % 3 == m).write.parquet(str(tmp_path / f"b{m}"))
+    sc = spark.sparkContext
+    counts = []
+    for m in (2, 0):
+        group = f"admit-budget-{m}"
+        sc.setJobGroup(group, group)
+        try:
+            _, rep = admit_docs(spark, spark.read.parquet(str(tmp_path / f"b{m}")), idx)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert rep["docs"] > 0
+        counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert all(0 < n <= 8 for n in counts), counts

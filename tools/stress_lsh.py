@@ -79,14 +79,20 @@ def main() -> int:
         st = build_lsh_index(spark, spark.createDataFrame(hist), idx)
         print(f"build: {st['docs']} docs wall={time.perf_counter() - t0:.1f}s")
 
+        sc = spark.sparkContext
         t0 = time.perf_counter()
-        cands, rep = admit_docs(spark, spark.createDataFrame(batch), idx)
+        sc.setJobGroup("stress-lsh-admit", "admit_docs")
+        try:
+            cands, rep = admit_docs(spark, spark.createDataFrame(batch), idx)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        n_jobs = len(sc.statusTracker().getJobIdsForGroup("stress-lsh-admit"))
         got = {(r.doc_a, r.doc_b) for r in cands.collect()}
         admit_wall = time.perf_counter() - t0
         recall = len(got & planted_pairs) / len(planted_pairs)
         print(
             f"admit: {rep['docs']} docs {rep['candidate_pairs']} pairs "
-            f"recall={recall:.3f} wall={admit_wall:.1f}s"
+            f"recall={recall:.3f} jobs={n_jobs} wall={admit_wall:.1f}s"
         )
         if recall < 0.95:
             ok = False
@@ -114,10 +120,11 @@ def main() -> int:
 
     # ---- admission component breakdown (SCALING.md §LSH) -------------
     # Times the four stages of _admit_docs_locked separately, each forced
-    # with a noop sink so stage cost isn't hidden inside a later action.
-    # Mirrors the real stages (anti-join → signatures → candidate join →
-    # generation write); drift guard: the stage composition here is the
-    # same band_rows_of/minhash_sig_of/STORE.read calls admit_docs makes.
+    # with a noop sink or a count so stage cost isn't hidden inside a
+    # later action. Mirrors the real stages (signatures of the batch →
+    # anti-join against the band_id = 0 ids → candidate join → generation
+    # write); drift guard: the stage composition here is the same
+    # band_rows_of/minhash_sig_of/STORE.read calls admit_docs makes.
     from pyspark.sql import functions as F
 
     from dataset_dedupe_estimator_spark.plans.lsh_index import STORE
@@ -133,16 +140,16 @@ def main() -> int:
         bd = {}
 
         t0 = time.perf_counter()
-        known = STORE.read(spark, idx)
-        known_ids = known.select("doc_id").distinct()
-        fresh2 = batch_df.select("doc_id", "text").join(known_ids, "doc_id", "left_anti")
-        fresh2.persist().count()
-        bd["anti_join_s"] = round(time.perf_counter() - t0, 2)
+        sigs = minhash_sig_of(batch_df.select("doc_id", "text")).persist()
+        sigs.count()
+        bd["signatures_s"] = round(time.perf_counter() - t0, 2)
 
         t0 = time.perf_counter()
-        new_bands = band_rows_of(minhash_sig_of(fresh2)).persist()
+        known = STORE.read(spark, idx)
+        known_ids = known.filter(F.col("band_id") == 0).select("doc_id")
+        new_bands = band_rows_of(sigs.join(known_ids, "doc_id", "left_anti")).persist()
         new_bands.count()
-        bd["signatures_s"] = round(time.perf_counter() - t0, 2)
+        bd["anti_join_s"] = round(time.perf_counter() - t0, 2)
 
         t0 = time.perf_counter()
         all_bands = known.unionByName(new_bands)
@@ -165,7 +172,7 @@ def main() -> int:
         new_bands.write.mode("overwrite").parquet(os.path.join(d, "gen-out.parquet"))
         bd["gen_write_s"] = round(time.perf_counter() - t0, 2)
         new_bands.unpersist()
-        fresh2.unpersist()
+        sigs.unpersist()
 
         comp_total = sum(bd.values())
         print(
