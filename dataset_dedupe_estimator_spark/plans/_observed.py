@@ -12,7 +12,7 @@ retries cannot double-count, and a runtime-empty frame (fully-duplicate
 batch → zero novel rows) resolves to ``count=0`` / ``sum=None`` exactly
 like the read-back would.
 
-SESSION CONSTRAINT (the sources/versioned.py ``_observed_count``
+SESSION CONSTRAINT (the sources/versioned.py ``_observed_counts``
 lesson): attach only to the frame that will EXECUTE the action — the
 observation resolves via the registering session's listener bus, and
 one registered on a session that never runs the action parks

@@ -71,18 +71,34 @@ def normalize_ids(spark: SparkSession, ids, key_col: str) -> DataFrame:
 def tombstones_df(
     spark: SparkSession, index_dir: str | Path, meta: dict, key_col: str
 ) -> DataFrame | None:
-    """Union of committed tombstone sets (keys distinct), or None when
-    the manifest records none — callers skip the anti-join entirely.
-    Live sets are ``[tombstone_floor, tombstone_sets)`` — the floor
-    advances when a consolidation supersedes earlier sets (see
-    :func:`resurrect_keys`), exactly like ``compacted_below`` for
-    generations."""
+    """Union of committed tombstone sets, or None when the manifest
+    records none — callers skip the anti-join entirely. Live sets are
+    ``[tombstone_floor, tombstone_sets)`` — the floor advances when a
+    consolidation supersedes earlier sets (see :func:`resurrect_keys`),
+    exactly like ``compacted_below`` for generations. The keys are
+    distinct without an aggregate: each set is written distinct, and
+    holds only keys no earlier live set holds. The read declares the
+    key's type, taken from one set's footer on the driver, so it runs
+    no schema-inference job: integer keys read as ``long`` (a narrower
+    column widens), string keys (the CLI's ``--string-ids``) as
+    ``string``; any other type is inferred."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     lo = meta.get("tombstone_floor", 0)
     k = meta.get("tombstone_sets", 0)
     if lo >= k:
         return None
     paths = [str(_ts_path(index_dir, i)) for i in range(lo, k)]
-    return spark.read.parquet(*paths).select(key_col).distinct()
+    part = next(Path(paths[0]).glob("*.parquet"))
+    t = pq.read_schema(part).field(key_col).type
+    ddl = (
+        "long" if pa.types.is_integer(t)
+        else "string" if pa.types.is_string(t) or pa.types.is_large_string(t)
+        else None
+    )
+    reader = spark.read if ddl is None else spark.read.schema(f"{key_col} {ddl}")
+    return reader.parquet(*paths).select(key_col)
 
 
 def minus_tombstones(df: DataFrame, ts: DataFrame | None, key_col: str) -> DataFrame:

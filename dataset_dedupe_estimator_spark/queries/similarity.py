@@ -221,13 +221,32 @@ def _unit_col() -> Column:
     CollapseProject inlines the norm aggregate into the transform lambda
     and re-evaluates the 64-element fold per component (verified in the
     optimized plan). Kept as the semantic reference for `unit_features`,
-    the Arrow-batched form that is bit-identical (test_lsh_parity)."""
+    the Arrow-batched form that is bit-identical (test_lsh_parity). A
+    zero norm — a zero vector, or one whose squares all underflow —
+    gives an all-zero unit: cosine 0 with every vector, so no pairs."""
     return F.transform(
-        F.col("embedding"), lambda x: x.cast("double") / F.col("nrm")
+        F.col("embedding"),
+        lambda x: F.when(F.col("nrm") == 0, F.lit(0.0)).otherwise(
+            x.cast("double") / F.col("nrm")
+        ),
     )
 
 
-_SQL_UNIT = "list_transform(embedding, x -> CAST(x AS DOUBLE) / nrm)"
+_SQL_UNIT = (
+    "list_transform(embedding, x -> CASE WHEN nrm = 0 THEN CAST(0 AS DOUBLE) "
+    "ELSE CAST(x AS DOUBLE) / nrm END)"
+)
+
+
+def _unit_rows(e):
+    """Rows of the (n, DIM) float64 array ``e`` over their norms: the
+    norm's ``np.cumsum`` adds strictly left to right, as the fold's
+    ``F.aggregate`` does, so every component matches `_unit_col`
+    exactly — including the all-zero unit of a zero norm."""
+    import numpy as np
+
+    nrm = np.sqrt(np.cumsum(e * e, axis=1)[:, -1])[:, None]
+    return np.divide(e, nrm, out=np.zeros_like(e), where=nrm != 0)
 
 
 def _sql_unit_dot(a: str, b: str) -> str:
@@ -249,8 +268,7 @@ def _unit_features_fn(it):
         vec_id = batch.column(idx["vec_id"])
         flat = batch.column(idx["embedding"]).flatten().to_numpy(zero_copy_only=False)
         e = flat.astype(np.float64).reshape(-1, DIM)
-        nrm = np.sqrt(np.cumsum(e * e, axis=1)[:, -1])
-        unit = e / nrm[:, None]
+        unit = _unit_rows(e)
         offsets = pa.array(
             np.arange(0, (e.shape[0] + 1) * DIM, DIM, dtype=np.int32)
         )
@@ -359,8 +377,7 @@ def _lsh_features_fn(it):
         flat = batch.column(idx["embedding"]).flatten().to_numpy(zero_copy_only=False)
         e = flat.astype(np.float64).reshape(-1, DIM)
         nb = e.shape[0]
-        nrm = np.sqrt(np.cumsum(e * e, axis=1)[:, -1])
-        unit = e / nrm[:, None]
+        unit = _unit_rows(e)
         offsets = pa.array(np.arange(0, (nb + 1) * DIM, DIM, dtype=np.int32))
         arrays = [vec_id, pa.ListArray.from_arrays(offsets, pa.array(unit.ravel()))]
         # r14 (§4.2): plane dots via ONE BLAS GEMM with a sign guard,

@@ -53,11 +53,14 @@ data-pipeline scope), like `operators/matview.py` and
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import time
+from collections.abc import Callable
 from pathlib import Path
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -3637,21 +3640,23 @@ def upsert(
     return overwrite(root, kept.unionByName(updates), num_files=num_files)
 
 
-def _observed_count(df: DataFrame):
-    """Piggyback a row count on the job that already streams ``df``:
-    returns ``(df_with_metrics, resolve)`` where ``resolve()`` reads
-    the count once the FIRST action over the returned frame completes.
-    The DML verbs use it so the rewrite write is the ONLY pass over
-    candidate data — replacing the separate ``cand.count()`` scan plus
-    the read-back ``spark.read.parquet(written_dir).count()``, which at
-    100 TB are full extra reads of every touched file (guide §1.2).
-    Observed metrics aggregate successful tasks only, so task retries
-    cannot double-count.
+def _observed_counts(df: DataFrame, **counts):
+    """Piggyback row counts on the job that already streams ``df``:
+    returns ``(df_with_metrics, resolvers)``, one resolver per keyword
+    of ``counts``, reading its count once the FIRST action over the
+    returned frame completes. Each keyword names a boolean Column (count
+    the rows it holds for) or None (count every row); all ride ONE
+    Observation. The DML verbs use it so the rewrite write is the ONLY
+    pass over candidate data — replacing the separate ``cand.count()``
+    scan plus the read-back ``spark.read.parquet(written_dir).count()``,
+    which at 100 TB are full extra reads of every touched file (guide
+    §1.2). Observed metrics aggregate successful tasks only, so task
+    retries cannot double-count.
 
     SESSION CONSTRAINT: attach only to frames belonging to the SAME
     SparkSession that will execute the write — the observation resolves
     via that session's listener bus, so one registered on a session
-    that never runs the action parks ``resolve()`` forever. Concretely:
+    that never runs the action parks the resolver forever. Concretely:
     never observe a caller-provided frame (a ``foreachBatch`` microbatch
     frame belongs to the STREAMING-CLONE session while the verb may
     execute on the caller's); counts of caller frames are derived
@@ -3660,10 +3665,290 @@ def _observed_count(df: DataFrame):
     from pyspark.sql import functions as F
 
     obs = Observation()
+    metrics = [
+        F.count(F.lit(1) if c is None else F.when(c, F.lit(1))).alias(name)
+        for name, c in counts.items()
+    ]
+    got: dict = {}
+
+    def resolve(name):
+        if not got:  # one driver round trip for every count
+            got.update(obs.get)
+        return int(got[name])
+
     return (
-        df.observe(obs, F.count(F.lit(1)).alias("n")),
-        lambda: int(obs.get["n"]),
+        df.observe(obs, *metrics),
+        {name: functools.partial(resolve, name) for name in counts},
     )
+
+
+# --- copy-on-write rewrite core ---------------------------------------------
+#
+# The five copy-on-write DML verbs (upsert_pruned, delete_where_pruned,
+# delete_where_keys, replace_where, update_where_pruned) share ONE commit
+# skeleton, _rewrite_commit. Each verb keeps its input validation, its
+# candidate rule (which live files may hold a target row), its row
+# transform (the rows of the new data dir, the change-data rows, and the
+# counts to observe) and its report dict. PROTOCOL.md, "Copy-on-write
+# rewrite", lists what the core writes and in which order.
+
+
+class _Snapshot(NamedTuple):
+    """The table as one log snapshot resolves it, under the writer lock."""
+
+    root: Path
+    version: int
+    dirs: list  # live data dirs, absolute
+    entries: list  # log entries up to ``version``, oldest first
+
+    @property
+    def columns(self) -> list:
+        return self.entries[-1]["columns"]
+
+    @property
+    def mapping(self) -> dict:
+        return _column_mapping(self.entries)
+
+    def norm(self, df: DataFrame) -> DataFrame:
+        """``df`` in table column order; columns it lacks (a file that
+        predates a widening) are backfilled as TYPED nulls — these rows
+        get WRITTEN, and an untyped (void) backfill crashes the write."""
+        for c in self.columns:
+            if c not in df.columns:
+                df = df.withColumn(c, _typed_null(c, self.entries))
+        return df.select(*self.columns)
+
+
+class _Rows(NamedTuple):
+    """A verb's row transform, applied to its candidate rows."""
+
+    out: DataFrame  # the rows of the new data dir, in table column order
+    changes: Callable  # () -> the change-data rows, with ``_change``;
+    #                    built only when the feed is active
+    counts: dict  # name -> resolver read after the write; "out": rows of out
+
+
+class _Rewrite(NamedTuple):
+    """A verb's candidate rule, and what to do with the candidates."""
+
+    files: list  # live parquet files to rewrite; the commit masks them
+    rows: Callable  # candidate frame (None when no file) -> _Rows
+    entry: dict  # the verb's own log fields (action, predicates, ...)
+    report: Callable  # (new version, counts) -> report dict
+    num_files: int | None = None  # None: one file per 128 MiB read
+
+
+def _matches(df: DataFrame, predicates):
+    """The ``(column, op, value)`` conjunction as a never-NULL flag: a
+    NULL in a predicate column is no match (plain ``~cond`` would drop
+    such rows from the survivors)."""
+    from pyspark.sql import functions as F
+
+    return F.coalesce(_predicate_cond(df, predicates), F.lit(False))
+
+
+def _predicate_split(predicates):
+    """(keep, drop) candidate filters of a predicate-scoped rewrite."""
+    return (
+        lambda c: c.filter(~_matches(c, predicates)),
+        lambda c: c.filter(_matches(c, predicates)),
+    )
+
+
+def _join_split(keys: DataFrame, on):
+    """(keep, drop) candidate filters of a key-set rewrite: NULL keys
+    never match (join null semantics), so NULL-key rows are kept."""
+    return (
+        lambda c: c.join(keys, on, "left_anti"),
+        lambda c: c.join(keys, on, "left_semi"),
+    )
+
+
+def _kept_rows(cand, keep, drop, new=None) -> _Rows:
+    """The row transform of the verbs that keep part of the candidate
+    rows and may add ``new`` ones (deletes add none; upsert and
+    replace_where add the caller's rows): the new dir holds kept ∪ new,
+    the change data the dropped rows as deletes and ``new`` as inserts.
+    Counts ``cand`` and ``kept`` are observed on frames the core read,
+    and ``out`` on the written frame, whose session runs the write;
+    ``new`` may be the caller's frame, so it is observed only as that
+    frame — its size is ``out`` less ``kept``."""
+    from pyspark.sql import functions as F
+
+    def changes():
+        deletes = None if cand is None else drop(cand).withColumn(
+            "_change", F.lit("delete")
+        )
+        if new is None:
+            return deletes
+        inserts = new.withColumn("_change", F.lit("insert"))
+        return inserts if deletes is None else deletes.unionByName(inserts)
+
+    if cand is None:  # no candidate file: the new rows alone
+        out, n = _observed_counts(new, out=None)
+        zero = lambda: 0  # noqa: E731
+        return _Rows(out, changes, {**n, "cand": zero, "kept": zero})
+    cand, n = _observed_counts(cand, cand=None)
+    kept, n_kept = _observed_counts(keep(cand), kept=None)
+    n.update(n_kept, out=n_kept["kept"])
+    if new is None:
+        return _Rows(kept, changes, n)
+    out, n_out = _observed_counts(kept.unionByName(new), out=None)
+    return _Rows(out, changes, {**n, **n_out})
+
+
+def _zone_map_candidates(t: _Snapshot, predicates) -> tuple[list[str], int]:
+    """(candidate files, skipped file count) of a predicate-scoped
+    rewrite: the files whose zone maps and blooms may hold a match,
+    plus every file of a commit written without stats. ``predicates``
+    are in LOGICAL names, the language of :func:`zone_map_prune`."""
+    report = zone_map_prune(t.root, predicates, t.version)  # mask-aware
+    files = list(report["files"]) + [
+        str(f) for d in report["dirs"] for f in sorted(Path(d).rglob("*.parquet"))
+    ]
+    return files, report["skipped_files"]
+
+
+def _rewrite_commit(
+    spark: SparkSession,
+    root: str | Path,
+    txn: tuple[str, int] | None,
+    idle: Callable,
+    select: Callable,
+    extra_entry: dict | None = None,
+) -> dict:
+    """The copy-on-write commit of the DML verbs, all under the writer
+    lock:
+
+    1. Snapshot and resolve the log. A replayed ``txn`` (a batch at or
+       below the app's watermark: the streaming CDC-apply contract)
+       returns ``idle(version)`` marked ``skipped_duplicate_txn``.
+    2. ``select(snapshot)``, the verb's validation and candidate rule,
+       returns a :class:`_Rewrite` — or a report dict, returned with
+       nothing written (no candidate file: no data dir, no log entry).
+    3. Read the candidate files per commit dir (``basePath`` recovers
+       hive partition columns; ``mergeSchema`` once the table widened)
+       minus the live deletion vectors — a DV-deleted row must never
+       resurrect into a rewrite — and backfill typed nulls.
+    4. ``rewrite.rows(cand)``, the verb's row transform.
+    5. Write ``out`` into a fresh data dir: one file per 128 MiB of
+       candidate bytes unless ``num_files`` is given (0 keeps the rows'
+       own partitioning). The counts are Observations resolved by this
+       write, so the candidates are read once, with no count job.
+    6. ``rewrite.report(version, counts)``. A report with ``committed``
+       false abandons the dir: an update whose files matched by range
+       but no row did writes its candidates once and throws them away —
+       the rare case pays one wasted write so the common case scans
+       once. Zero output rows commit an entry with no data dir.
+    7. The change-data file when the feed is active, then the stats and
+       bloom payloads of the new dir, the ``removed`` mask over every
+       rewritten file, ``extra_entry`` and the ``txn`` stamp, and last
+       the commit link (:func:`_commit`): a crash before it leaves only
+       orphans for vacuum.
+
+    Transforms observe only frames of the session that runs the write:
+    the candidate frames (read here, in ``spark``) and ``out`` itself,
+    never a frame the caller passed in (see :func:`_observed_counts`)."""
+    root = Path(root)
+    (root / _VLOG).mkdir(parents=True, exist_ok=True)
+    with writer_lock(root, wait_seconds=_LOCK_WAIT):
+        entries = _snapshot_entries(root)
+        t = _Snapshot(root, *_resolve(root, entries, None))
+        if txn is not None and int(txn[1]) <= _latest_txns(entries).get(
+            str(txn[0]), -1
+        ):
+            # the whole op holds the lock, so one check suffices
+            return {**idle(t.version), "skipped_duplicate_txn": True}
+        rw = select(t)
+        if not isinstance(rw, _Rewrite):
+            return rw
+        by_base: dict[str, list[str]] = {}
+        for f in rw.files:
+            base = next(d for d in t.dirs if f.startswith(d + os.sep))
+            by_base.setdefault(base, []).append(f)
+        cand = None
+        if by_base:
+            dvf = _dv_frame(spark, root, t.entries)
+            widened = any("added_columns" in e for e in t.entries)
+            for base, plist in by_base.items():
+                reader = spark.read.option("basePath", base)
+                if widened:
+                    reader = reader.option("mergeSchema", "true")
+                part = t.norm(_dv_filter(reader.parquet(*plist), dvf))
+                cand = part if cand is None else cand.unionByName(part)
+        rows = rw.rows(cand)
+        num_files = rw.num_files
+        if num_files is None:
+            cand_bytes = sum(Path(f).stat().st_size for f in rw.files)
+            num_files = max(1, -(-cand_bytes // (128 << 20)))
+        version = t.version + 1
+        dir_name = f"c{version:08d}"
+        data_dir = root / _DATA / dir_name
+        last = t.entries[-1]
+        partition_by = last.get("partition_by") or []
+        out = rows.out
+        writer = (out.coalesce(int(num_files)) if num_files else out).write
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.mode("overwrite").parquet(str(data_dir))
+        n = {k: resolve() for k, resolve in rows.counts.items()}
+        report = rw.report(version, n)
+        has_rows = n["out"] > 0
+        if not (report["committed"] and has_rows):
+            shutil.rmtree(data_dir, ignore_errors=True)
+        if not report["committed"]:
+            return report
+        entry = {
+            **rw.entry,
+            "version": version,
+            "dir": dir_name if has_rows else None,
+            "columns": t.columns,
+            "partition_by": partition_by,
+            "removed": {
+                Path(base).name: sorted(
+                    str(Path(f).relative_to(base)) for f in plist
+                )
+                for base, plist in by_base.items()
+            },
+            "ts": time.time(),
+        }
+        if _cf_active(t.entries):
+            changes = rows.changes()
+            if num_files:
+                changes = changes.coalesce(int(num_files))
+            changes.write.mode("overwrite").parquet(str(root / _CDF / dir_name))
+            entry["change_data"] = True
+        # the DECLARATIONS always ride the entry (entries[-1] is the
+        # inheritance source: a dir-less commit must not drop zone maps
+        # or blooms for every later commit); payloads only with a dir
+        stats_columns = last.get("stats_columns") or []
+        if stats_columns:
+            entry["stats_columns"] = stats_columns
+            if has_rows:
+                entry["stats_types"] = {
+                    c: _dtype_of_path(rows.out, c) for c in stats_columns
+                }
+                entry["stats"] = _collect_file_stats(data_dir, stats_columns)
+        bloom_columns = last.get("bloom_columns") or []
+        if bloom_columns:
+            bloom_bits = last.get("bloom_bits") or 65_536
+            entry["bloom_columns"] = bloom_columns
+            entry["bloom_bits"] = bloom_bits
+            if has_rows:
+                entry["bloom_types"] = {
+                    c: _dtype_of_path(rows.out, c) for c in bloom_columns
+                }
+                entry["blooms_file"] = _write_bloom_sidecar(
+                    root, dir_name, _collect_file_blooms(
+                        spark, data_dir, bloom_columns, bloom_bits
+                    ),
+                )
+        if extra_entry:
+            entry.update(extra_entry)
+        if txn is not None:
+            entry["txn"] = {"app": str(txn[0]), "batch": int(txn[1])}
+        _commit(root, entry)
+    return report
 
 
 def upsert_pruned(
@@ -3715,82 +4000,58 @@ def upsert_pruned(
 
     if not key_cols:
         raise ValueError("upsert_pruned needs at least one key column")
-    root = Path(root)
-    with writer_lock(root, wait_seconds=_LOCK_WAIT):
-        entries = _snapshot_entries(root)
-        version, live_data_dirs, live_entries = _resolve(root, entries, None)
-        if txn is not None and int(txn[1]) <= _latest_txns(entries).get(
-            str(txn[0]), -1
-        ):
-            # replayed source batch (the streaming CDC-apply contract):
-            # the whole op is under the lock, so one check suffices
-            return {
-                "version": version, "rewritten_files": 0,
-                "carried_files": 0, "upsert_rows": 0, "replaced_rows": 0,
-                "committed": False, "skipped_duplicate_txn": True,
-            }
-        dvf = _dv_frame(spark, root, live_entries)
-        schema_cols = live_entries[-1]["columns"]
-        mapping = _column_mapping(live_entries)
+
+    def idle(version):
+        return {
+            "version": version, "rewritten_files": 0, "carried_files": 0,
+            "upsert_rows": 0, "replaced_rows": 0, "committed": False,
+        }
+
+    def select(t):
+        ups, keys = updates, list(key_cols)
+        mapping = t.mapping
         if mapping:  # callers speak logical; storage speaks physical
-            updates = updates.withColumnsRenamed(dict(mapping))
-            key_cols = _names_to_physical(key_cols, mapping)
-        for k in key_cols:
-            if k not in schema_cols:
+            ups = ups.withColumnsRenamed(dict(mapping))
+            keys = _names_to_physical(keys, mapping)
+        for k in keys:
+            if k not in t.columns:
                 raise ValueError(f"key column {k!r} not in table schema")
-        missing = [c for c in schema_cols if c not in updates.columns]
+        missing = [c for c in t.columns if c not in ups.columns]
         if missing:
             raise ValueError(
                 f"updates missing table columns {missing} — an upsert "
                 "replaces whole rows"
             )
-        partition_by = live_entries[-1].get("partition_by") or []
-        stats_columns = live_entries[-1].get("stats_columns") or []
-        bloom_columns = live_entries[-1].get("bloom_columns") or []
-        bloom_bits = live_entries[-1].get("bloom_bits") or 65_536
-        widened = any("added_columns" in e for e in live_entries)
 
         # distinct update keys, collected driver-side up to the cap;
         # beyond it fall back to per-column [min, max] ranges
-        kdf = updates.select(*key_cols).distinct()
+        kdf = ups.select(*keys).distinct()
         key_rows = kdf.limit(max_distinct_keys + 1).collect()
         if not key_rows:
-            return {
-                "version": version, "rewritten_files": 0,
-                "carried_files": 0, "upsert_rows": 0, "replaced_rows": 0,
-                "committed": False,
-            }
+            return idle(t.version)
         exact = len(key_rows) <= max_distinct_keys
         if exact:
             key_vals = {
                 c: sorted({r[c] for r in key_rows if r[c] is not None})
-                for c in key_cols
+                for c in keys
             }
         else:
-            bounds = updates.agg(
-                *[f for c in key_cols
+            bounds = ups.agg(
+                *[f for c in keys
                   for f in (F.min(c).alias(f"lo_{c}"), F.max(c).alias(f"hi_{c}"))]
             ).head()
             key_vals = {
                 c: [bounds[f"lo_{c}"], bounds[f"hi_{c}"]]
-                for c in key_cols
+                for c in keys
                 if bounds[f"lo_{c}"] is not None
             }
-
-        def _norm(df):
-            for c in schema_cols:
-                if c not in df.columns:
-                    # TYPED null: survivors/post-images get WRITTEN — an
-                    # untyped (void) backfill crashes the parquet write
-                    df = df.withColumn(c, _typed_null(c, live_entries))
-            return df.select(*schema_cols)
 
         # candidate files: a file is carried iff SOME key column's
         # recorded range provably contains NO update value of that
         # column (a matching row must equal the update key on EVERY
         # column, so one provably-clean column clears the file)
-        by_dir = {e["dir"]: e for e in live_entries if e.get("dir")}
-        masks = _live_masks(live_entries)
+        by_dir = {e["dir"]: e for e in t.entries if e.get("dir")}
+        masks = _live_masks(t.entries)
         enc_cache: dict[tuple, list] = {}
 
         def _enc_vals(col: str, kind: str) -> list:
@@ -3837,7 +4098,7 @@ def upsert_pruned(
 
         cand_files: list[str] = []
         carried = 0
-        for d in live_data_dirs:
+        for d in t.dirs:
             # .get: a restore can resurrect a dir a checkpoint fold had
             # dropped as dead — stats-less = rewrite-candidate (safe)
             entry = by_dir.get(Path(d).name) or {}
@@ -3845,7 +4106,7 @@ def upsert_pruned(
             stats = entry.get("stats")
             bloom_cols = set(entry.get("bloom_columns") or [])
             btypes = entry.get("bloom_types") or {}
-            use_blooms = bloom_probe and bool(bloom_cols & set(key_cols))
+            use_blooms = bloom_probe and bool(bloom_cols & set(keys))
             if stats is None and not use_blooms:
                 # no pruning metadata: every surviving file may match
                 if masked:
@@ -3869,12 +4130,12 @@ def upsert_pruned(
             blooms = None
             if use_blooms and live_rels:
                 # lazy, per dir with survivors only (see zone_map_prune)
-                blooms = _entry_blooms(root, entry)
+                blooms = _entry_blooms(t.root, entry)
             probe_blooms = use_blooms and blooms is not None
             for rel in live_rels:
                 per_col = (stats or {}).get(rel, {})
                 may = True
-                for c in key_cols:
+                for c in keys:
                     rng = per_col.get(c) if c in types else None
                     if rng is not None and not _any_key_in(
                         _enc_vals(c, types[c]), rng[0], rng[1]
@@ -3897,121 +4158,29 @@ def upsert_pruned(
                 else:
                     carried += 1
 
-        updates_n = _norm(updates)
-        _enforce_constraints(updates_n, _active_constraints(live_entries))
-        if cand_files:
-            # read ONLY the candidate files (per commit dir so basePath
-            # recovers hive partition columns on partitioned tables)
-            by_base: dict[str, list[str]] = {}
-            for f in cand_files:
-                base = next(
-                    d for d in live_data_dirs if f.startswith(d + os.sep)
-                )
-                by_base.setdefault(base, []).append(f)
-            cand = None
-            for base, plist in by_base.items():
-                reader = spark.read.option("basePath", base)
-                if widened:
-                    reader = reader.option("mergeSchema", "true")
-                # deletion vectors apply to every maintenance read too:
-                # a DV-deleted row must never resurrect into a rewrite
-                part = _norm(_dv_filter(reader.parquet(*plist), dvf))
-                cand = part if cand is None else cand.unionByName(part)
-            # counts ride the rewrite job (one pass; _observed_count's
-            # session constraint: ``updates`` is the CALLER's frame, so
-            # its count is derived as n_out - n_survivors instead of
-            # observed directly)
-            cand, n_cand_of = _observed_count(cand)
-            keys_side = F.broadcast(kdf) if exact else kdf
-            survivors, n_surv_of = _observed_count(
-                cand.join(keys_side, key_cols, "left_anti")
-            )
-            out = survivors.unionByName(updates_n)
-        else:  # pure insert: no live file can hold an update key
-            n_cand_of = n_surv_of = lambda: 0  # noqa: E731
-            out = updates_n
-        if num_files is None:
-            if cand_files:
-                cand_bytes = sum(Path(f).stat().st_size for f in cand_files)
-                num_files = max(1, -(-cand_bytes // (128 << 20)))
-            else:
-                # pure insert: keep the updates' own partitioning — a
-                # large batch must not funnel through one task
-                num_files = 0
-        new_version = version + 1
-        dir_name = f"c{new_version:08d}"
-        data_dir = root / _DATA / dir_name
-        out, n_out_of = _observed_count(out)
-        out = out.coalesce(int(num_files)) if num_files else out
-        writer = out.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(data_dir))
-        n_cand, n_out = n_cand_of(), n_out_of()
-        n_up = n_out - n_surv_of()
-        removed: dict[str, list[str]] = {}
-        for f in cand_files:
-            base = next(d for d in live_data_dirs if f.startswith(d + os.sep))
-            removed.setdefault(Path(base).name, []).append(
-                str(Path(f).relative_to(base))
-            )
-        removed = {k: sorted(v) for k, v in removed.items()}
-        entry = {
-            "version": new_version,
-            "action": "upsert",
-            "dir": dir_name,
-            "columns": schema_cols,
-            "partition_by": partition_by,
-            "removed": removed,
-            "key_cols": list(key_cols),
-            "ts": time.time(),
-        }
-        if _cf_active(live_entries):
-            # change-data file: replaced rows as deletes + every update
-            # row as an insert (an UPDATE is its delete+insert pair,
-            # matching changes_between) — O(changed rows)
-            changes = updates_n.withColumn("_change", F.lit("insert"))
-            if cand_files:
-                replaced = cand.join(keys_side, key_cols, "left_semi")
-                changes = replaced.withColumn(
-                    "_change", F.lit("delete")
-                ).unionByName(changes)
-            if num_files:
-                changes = changes.coalesce(int(num_files))
-            changes.write.mode("overwrite").parquet(
-                str(root / _CDF / dir_name)
-            )
-            entry["change_data"] = True
-        if stats_columns:
-            entry["stats_columns"] = stats_columns
-            entry["stats_types"] = {
-                c: _dtype_of_path(out, c) for c in stats_columns
-            }
-            entry["stats"] = _collect_file_stats(data_dir, stats_columns)
-        if bloom_columns:
-            entry["bloom_columns"] = bloom_columns
-            entry["bloom_bits"] = bloom_bits
-            entry["bloom_types"] = {
-                c: _dtype_of_path(out, c) for c in bloom_columns
-            }
-            entry["blooms_file"] = _write_bloom_sidecar(
-                root, dir_name, _collect_file_blooms(
-                    spark, data_dir, bloom_columns, bloom_bits
-                ),
-            )
-        if extra_entry:
-            entry.update(extra_entry)
-        if txn is not None:
-            entry["txn"] = {"app": str(txn[0]), "batch": int(txn[1])}
-        _commit(root, entry)
-    return {
-        "version": new_version,
-        "rewritten_files": len(cand_files),
-        "carried_files": carried,
-        "upsert_rows": n_up,
-        "replaced_rows": n_cand - (n_out - n_up),
-        "committed": True,
-    }
+        updates_n = t.norm(ups)
+        _enforce_constraints(updates_n, _active_constraints(t.entries))
+        keys_side = F.broadcast(kdf) if exact else kdf
+        return _Rewrite(
+            cand_files,
+            lambda cand: _kept_rows(
+                cand, *_join_split(keys_side, keys), new=updates_n
+            ),
+            {"action": "upsert", "key_cols": keys},
+            lambda v, n: {
+                "version": v,
+                "rewritten_files": len(cand_files),
+                "carried_files": carried,
+                "upsert_rows": n["out"] - n["kept"],
+                "replaced_rows": n["cand"] - n["kept"],
+                "committed": True,
+            },
+            # pure insert: keep the updates' own partitioning — a large
+            # batch must not funnel through one task
+            num_files if cand_files or num_files is not None else 0,
+        )
+
+    return _rewrite_commit(spark, root, txn, idle, select, extra_entry)
 
 
 def delete_where(
@@ -4060,157 +4229,40 @@ def delete_where_pruned(
     (the same watermark contract as :func:`append` — the streaming
     CDC-apply path stamps its delete phase with it).
     """
-    from pyspark.sql import functions as F
-
     if not predicates:
         raise ValueError(
             "delete_where_pruned needs at least one predicate "
             "(an unconditional delete is overwrite with an empty frame)"
         )
-    root = Path(root)
-    (root / _VLOG).mkdir(parents=True, exist_ok=True)
-    with writer_lock(root, wait_seconds=_LOCK_WAIT):
-        entries = _snapshot_entries(root)
-        version, live_data_dirs, live_entries = _resolve(root, entries, None)
-        if txn is not None and int(txn[1]) <= _latest_txns(entries).get(
-            str(txn[0]), -1
-        ):
-            return {
-                "version": version, "deleted_rows": 0,
-                "rewritten_files": 0, "carried_files": 0,
-                "skipped_files": 0, "committed": False,
-                "skipped_duplicate_txn": True,
-            }
-        predicates = _preds_to_physical(
-            predicates, _column_mapping(live_entries)
+
+    def select(t):
+        preds = _preds_to_physical(predicates, t.mapping)
+        files, skipped = _zone_map_candidates(t, predicates)
+        if not files:  # no file can hold a match: commit nothing
+            return _delete_report(t.version, skipped)
+        return _Rewrite(
+            files,
+            lambda cand: _kept_rows(cand, *_predicate_split(preds)),
+            {"action": "delete", "predicates": [list(p) for p in preds]},
+            lambda v, n: _delete_report(v, skipped, files, n),
+            num_files,
         )
-        dvf = _dv_frame(spark, root, live_entries)
-        report = zone_map_prune(root, predicates, version)  # mask-aware
-        cand_files = list(report["files"]) + [
-            str(f)
-            for d in report["dirs"]
-            for f in sorted(Path(d).rglob("*.parquet"))
-        ]
-        if not cand_files:  # no file can hold a match: commit nothing
-            return {
-                "version": version, "deleted_rows": 0,
-                "rewritten_files": 0, "carried_files": 0,
-                "skipped_files": report["skipped_files"], "committed": False,
-            }
-        schema_cols = live_entries[-1]["columns"]
-        partition_by = live_entries[-1].get("partition_by") or []
-        stats_columns = live_entries[-1].get("stats_columns") or []
-        bloom_columns = live_entries[-1].get("bloom_columns") or []
-        bloom_bits = live_entries[-1].get("bloom_bits") or 65_536
-        widened = any("added_columns" in e for e in live_entries)
 
-        def _norm(df):
-            for c in schema_cols:
-                if c not in df.columns:
-                    # TYPED null: survivors/post-images get WRITTEN — an
-                    # untyped (void) backfill crashes the parquet write
-                    df = df.withColumn(c, _typed_null(c, live_entries))
-            return df.select(*schema_cols)
+    return _rewrite_commit(spark, root, txn, _delete_report, select)
 
-        # read ONLY the candidate files (per commit dir so basePath
-        # recovers hive partition columns on partitioned tables)
-        by_base: dict[str, list[str]] = {}
-        for f in cand_files:
-            base = next(
-                d for d in live_data_dirs if f.startswith(d + os.sep)
-            )
-            by_base.setdefault(base, []).append(f)
-        cand = None
-        for base, plist in by_base.items():
-            reader = spark.read.option("basePath", base)
-            if widened:
-                reader = reader.option("mergeSchema", "true")
-            part = _norm(_dv_filter(reader.parquet(*plist), dvf))
-            cand = part if cand is None else cand.unionByName(part)
-        # counts ride the rewrite job (one pass — see _observed_count)
-        cand, n_cand_of = _observed_count(cand)
-        # survivors: rows the conjunction does NOT match (NULL in a
-        # predicate column -> no match -> survives; plain ~cond would
-        # wrongly drop those rows)
-        survivors = cand.filter(~F.coalesce(_predicate_cond(cand, predicates), F.lit(False)))
-        survivors, n_kept_of = _observed_count(survivors)
-        if num_files is None:
-            cand_bytes = sum(Path(f).stat().st_size for f in cand_files)
-            num_files = max(1, -(-cand_bytes // (128 << 20)))
-        new_version = version + 1
-        dir_name = f"c{new_version:08d}"
-        data_dir = root / _DATA / dir_name
-        out = survivors.coalesce(int(num_files))
-        writer = out.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(data_dir))
-        n_cand, n_kept = n_cand_of(), n_kept_of()
-        has_rows = any(data_dir.rglob("*.parquet"))
-        if not n_kept:
-            # zero survivors (a row-less part file still counts as
-            # nothing): commit a dir-less entry, not an empty dir
-            has_rows = False
-            shutil.rmtree(data_dir, ignore_errors=True)
-        removed: dict[str, list[str]] = {}
-        for base, plist in by_base.items():
-            removed[Path(base).name] = sorted(
-                str(Path(f).relative_to(base)) for f in plist
-            )
-        entry = {
-            "version": new_version,
-            "action": "delete",
-            "dir": dir_name if has_rows else None,
-            "columns": schema_cols,
-            "partition_by": partition_by,
-            "removed": removed,
-            "predicates": [list(p) for p in predicates],
-            "ts": time.time(),
-        }
-        if txn is not None:
-            entry["txn"] = {"app": str(txn[0]), "batch": int(txn[1])}
-        if _cf_active(live_entries):
-            # change-data file: exactly the deleted rows, written
-            # BEFORE the commit link (crash leaves an orphan for
-            # vacuum) — O(deleted rows), never O(table)
-            deleted = cand.filter(
-                F.coalesce(_predicate_cond(cand, predicates), F.lit(False))
-            )
-            deleted.withColumn("_change", F.lit("delete")).coalesce(
-                int(num_files)
-            ).write.mode("overwrite").parquet(str(root / _CDF / dir_name))
-            entry["change_data"] = True
-        if stats_columns:
-            # the DECLARATION always rides the entry (entries[-1] is the
-            # inheritance source — a dir-less commit must not silently
-            # drop zone maps for every later commit); per-file payloads
-            # only when a directory exists
-            entry["stats_columns"] = stats_columns
-            if has_rows:
-                entry["stats_types"] = {
-                    c: _dtype_of_path(survivors, c) for c in stats_columns
-                }
-                entry["stats"] = _collect_file_stats(data_dir, stats_columns)
-        if bloom_columns:
-            entry["bloom_columns"] = bloom_columns  # declaration always
-            entry["bloom_bits"] = bloom_bits
-            if has_rows:
-                entry["bloom_types"] = {
-                    c: _dtype_of_path(survivors, c) for c in bloom_columns
-                }
-                entry["blooms_file"] = _write_bloom_sidecar(
-                    root, dir_name, _collect_file_blooms(
-                        spark, data_dir, bloom_columns, bloom_bits
-                    ),
-                )
-        _commit(root, entry)
+
+def _delete_report(
+    version: int, skipped: int = 0, files: list = (), n: dict | None = None
+) -> dict:
+    """The report of the two copy-on-write deletes; without counts
+    ``n``, the report of a call that commits nothing."""
     return {
-        "version": new_version,
-        "deleted_rows": n_cand - n_kept,
-        "rewritten_files": len(cand_files),
-        "carried_files": report["skipped_files"],
-        "skipped_files": report["skipped_files"],
-        "committed": True,
+        "version": version,
+        "deleted_rows": n["cand"] - n["kept"] if n else 0,
+        "rewritten_files": len(files),
+        "carried_files": skipped if n else 0,
+        "skipped_files": skipped,
+        "committed": n is not None,
     }
 
 
@@ -4302,8 +4354,6 @@ def delete_where_keys(
     writer-lock critical section)."""
     from pyspark.sql import functions as F
 
-    root = Path(root)
-    (root / _VLOG).mkdir(parents=True, exist_ok=True)
     if key_col in keys.columns:
         keys = keys.select(key_col)
     elif len(keys.columns) == 1:
@@ -4313,22 +4363,11 @@ def delete_where_keys(
             f"keys frame {keys.columns} must contain {key_col!r} or be "
             "a single-column frame"
         )
-    with writer_lock(root, wait_seconds=_LOCK_WAIT):
-        entries = _snapshot_entries(root)
-        version, live_data_dirs, live_entries = _resolve(root, entries, None)
-        if txn is not None and int(txn[1]) <= _latest_txns(entries).get(
-            str(txn[0]), -1
-        ):
-            return {
-                "version": version, "deleted_rows": 0,
-                "rewritten_files": 0, "carried_files": 0,
-                "skipped_files": 0, "committed": False,
-                "skipped_duplicate_txn": True,
-            }
-        mapping = _column_mapping(live_entries)
+
+    def select(t):
+        mapping = t.mapping
         phys_key = _name_to_physical(key_col, mapping) if mapping else key_col
-        schema_cols = live_entries[-1]["columns"]
-        if phys_key.split(".")[0] not in schema_cols:
+        if phys_key.split(".")[0] not in t.columns:
             raise ValueError(
                 f"key column {key_col!r} is not in the table schema"
             )
@@ -4343,15 +4382,9 @@ def delete_where_keys(
         )
         n_keys = kd.count()
         if not n_keys:
-            return {
-                "version": version, "deleted_rows": 0,
-                "rewritten_files": 0, "carried_files": 0,
-                "skipped_files": 0, "committed": False,
-            }
-        rangeable, cand_files = keys_prune_ranges(
-            live_entries, phys_key, live_data_dirs
-        )
-        total_files = len(rangeable) + len(cand_files)
+            return _delete_report(t.version)
+        rangeable, files = keys_prune_ranges(t.entries, phys_key, t.dirs)
+        total_files = len(rangeable) + len(files)
         if rangeable:
             ranges = spark.createDataFrame(
                 rangeable, "_path string, _lo double, _hi double"
@@ -4366,112 +4399,24 @@ def delete_where_keys(
                 .distinct()
                 .collect()
             )
-            cand_files = cand_files + [r["_path"] for r in touched]
-        if not cand_files:  # no file can hold a match: commit nothing
-            return {
-                "version": version, "deleted_rows": 0,
-                "rewritten_files": 0, "carried_files": 0,
-                "skipped_files": total_files, "committed": False,
-            }
-        partition_by = live_entries[-1].get("partition_by") or []
-        stats_columns = live_entries[-1].get("stats_columns") or []
-        bloom_columns = live_entries[-1].get("bloom_columns") or []
-        bloom_bits = live_entries[-1].get("bloom_bits") or 65_536
-        widened = any("added_columns" in e for e in live_entries)
-        dvf = _dv_frame(spark, root, live_entries)
-
-        def _norm(df):
-            for c in schema_cols:
-                if c not in df.columns:
-                    df = df.withColumn(c, _typed_null(c, live_entries))
-            return df.select(*schema_cols)
-
-        by_base: dict[str, list[str]] = {}
-        for f in cand_files:
-            base = next(
-                d for d in live_data_dirs if f.startswith(d + os.sep)
-            )
-            by_base.setdefault(base, []).append(f)
-        cand = None
-        for base, plist in by_base.items():
-            reader = spark.read.option("basePath", base)
-            if widened:
-                reader = reader.option("mergeSchema", "true")
-            part = _norm(_dv_filter(reader.parquet(*plist), dvf))
-            cand = part if cand is None else cand.unionByName(part)
-        # counts ride the rewrite job (one pass — see _observed_count)
-        cand, n_cand_of = _observed_count(cand)
-        match = F.col(phys_key) == F.col("_k")
-        survivors, n_kept_of = _observed_count(
-            cand.join(kd, match, "left_anti")
+            files = files + [r["_path"] for r in touched]
+        skipped = total_files - len(files)
+        if not files:  # no file can hold a match: commit nothing
+            return _delete_report(t.version, skipped)
+        return _Rewrite(
+            files,
+            lambda cand: _kept_rows(
+                cand, *_join_split(kd, F.col(phys_key) == F.col("_k"))
+            ),
+            {
+                "action": "delete",
+                "predicates": [[phys_key, "in_keys", int(n_keys)]],
+            },
+            lambda v, n: _delete_report(v, skipped, files, n),
+            num_files,
         )
-        if num_files is None:
-            cand_bytes = sum(Path(f).stat().st_size for f in cand_files)
-            num_files = max(1, -(-cand_bytes // (128 << 20)))
-        new_version = version + 1
-        dir_name = f"c{new_version:08d}"
-        data_dir = root / _DATA / dir_name
-        out = survivors.coalesce(int(num_files))
-        writer = out.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(data_dir))
-        n_cand, n_kept = n_cand_of(), n_kept_of()
-        has_rows = any(data_dir.rglob("*.parquet"))
-        if not n_kept:
-            has_rows = False
-            shutil.rmtree(data_dir, ignore_errors=True)
-        removed: dict[str, list[str]] = {}
-        for base, plist in by_base.items():
-            removed[Path(base).name] = sorted(
-                str(Path(f).relative_to(base)) for f in plist
-            )
-        entry = {
-            "version": new_version,
-            "action": "delete",
-            "dir": dir_name if has_rows else None,
-            "columns": schema_cols,
-            "partition_by": partition_by,
-            "removed": removed,
-            "predicates": [[phys_key, "in_keys", int(n_keys)]],
-            "ts": time.time(),
-        }
-        if txn is not None:
-            entry["txn"] = {"app": str(txn[0]), "batch": int(txn[1])}
-        if _cf_active(live_entries):
-            deleted = cand.join(kd, match, "left_semi")
-            deleted.withColumn("_change", F.lit("delete")).coalesce(
-                int(num_files)
-            ).write.mode("overwrite").parquet(str(root / _CDF / dir_name))
-            entry["change_data"] = True
-        if stats_columns:
-            entry["stats_columns"] = stats_columns
-            if has_rows:
-                entry["stats_types"] = {
-                    c: _dtype_of_path(survivors, c) for c in stats_columns
-                }
-                entry["stats"] = _collect_file_stats(data_dir, stats_columns)
-        if bloom_columns:
-            entry["bloom_columns"] = bloom_columns
-            entry["bloom_bits"] = bloom_bits
-            if has_rows:
-                entry["bloom_types"] = {
-                    c: _dtype_of_path(survivors, c) for c in bloom_columns
-                }
-                entry["blooms_file"] = _write_bloom_sidecar(
-                    root, dir_name, _collect_file_blooms(
-                        spark, data_dir, bloom_columns, bloom_bits
-                    ),
-                )
-        _commit(root, entry)
-    return {
-        "version": new_version,
-        "deleted_rows": n_cand - n_kept,
-        "rewritten_files": len(cand_files),
-        "carried_files": total_files - len(cand_files),
-        "skipped_files": total_files - len(cand_files),
-        "committed": True,
-    }
+
+    return _rewrite_commit(spark, root, txn, _delete_report, select)
 
 
 def replace_where(
@@ -4492,8 +4437,9 @@ def replace_where(
 
     REFUSES when any row of ``df`` does NOT match the predicates (the
     Delta constraint — out-of-scope rows would silently corrupt data
-    outside the replaced slice) and when a predicate column is NULL in
-    ``df`` (such a row can never match a null-rejecting predicate).
+    outside the replaced slice), when a predicate column is NULL in
+    ``df`` (such a row can never match a null-rejecting predicate), and
+    when a row of ``df`` violates an active CHECK / NOT NULL constraint.
 
     Commit anatomy is the upsert dir+mask shape (``action: upsert``
     with ``op: replace_where`` recorded): a fresh directory holding
@@ -4508,173 +4454,57 @@ def replace_where(
     can touch (the decision reads zero data bytes); with the slice
     clustered — the natural state for date/partition-keyed backfills —
     that is exactly the slice's files and nothing else."""
-    from pyspark.sql import functions as F
-
     if not predicates:
         raise ValueError(
             "replace_where needs at least one predicate — an "
             "unconditional replacement is overwrite()"
         )
-    root = Path(root)
-    (root / _VLOG).mkdir(parents=True, exist_ok=True)
-    with writer_lock(root, wait_seconds=_LOCK_WAIT):
-        entries = _snapshot_entries(root)
-        version, live_data_dirs, live_entries = _resolve(root, entries, None)
-        if txn is not None and int(txn[1]) <= _latest_txns(entries).get(
-            str(txn[0]), -1
-        ):
-            return {
-                "version": version, "replaced_rows": 0,
-                "inserted_rows": 0, "rewritten_files": 0,
-                "carried_files": 0, "committed": False,
-                "skipped_duplicate_txn": True,
-            }
-        mapping = _column_mapping(live_entries)
-        predicates = _preds_to_physical(predicates, mapping)
-        if mapping:  # callers speak logical; storage speaks physical
-            df = df.withColumnsRenamed(dict(mapping))
-        schema_cols = live_entries[-1]["columns"]
-        missing = [c for c in schema_cols if c not in df.columns]
+
+    def idle(version):
+        return {
+            "version": version, "replaced_rows": 0, "inserted_rows": 0,
+            "rewritten_files": 0, "carried_files": 0, "committed": False,
+        }
+
+    def select(t):
+        mapping = t.mapping
+        preds = _preds_to_physical(predicates, mapping)
+        new = df.withColumnsRenamed(dict(mapping)) if mapping else df
+        missing = [c for c in t.columns if c not in new.columns]
         if missing:
             raise ValueError(
                 f"replacement rows missing table columns {missing} — "
                 "replace_where writes whole rows"
             )
-        df = df.select(*schema_cols)
-        out_of_scope = (
-            df.filter(
-                ~F.coalesce(_predicate_cond(df, predicates), F.lit(False))
-            )
-            .limit(1)
-            .count()
-        )
-        if out_of_scope:
+        new = new.select(*t.columns)
+        if new.filter(~_matches(new, preds)).limit(1).count():
             raise ValueError(
-                f"replacement rows exist that do not match {predicates} "
+                f"replacement rows exist that do not match {preds} "
                 "— replaceWhere may only write rows inside the replaced "
                 "slice (rows with a NULL predicate column never match)"
             )
-        partition_by = live_entries[-1].get("partition_by") or []
-        stats_columns = live_entries[-1].get("stats_columns") or []
-        bloom_columns = live_entries[-1].get("bloom_columns") or []
-        bloom_bits = live_entries[-1].get("bloom_bits") or 65_536
-        widened = any("added_columns" in e for e in live_entries)
-        dvf = _dv_frame(spark, root, live_entries)
-        report = zone_map_prune(root, predicates, version)
-        cand_files = list(report["files"]) + [
-            str(f)
-            for d in report["dirs"]
-            for f in sorted(Path(d).rglob("*.parquet"))
-        ]
+        _enforce_constraints(new, _active_constraints(t.entries))
+        files, skipped = _zone_map_candidates(t, predicates)
+        return _Rewrite(
+            files,
+            lambda cand: _kept_rows(cand, *_predicate_split(preds), new=new),
+            {
+                "action": "upsert",
+                "op": "replace_where",
+                "predicates": [list(p) for p in preds],
+            },
+            lambda v, n: {
+                "version": v,
+                "replaced_rows": n["cand"] - n["kept"],
+                "inserted_rows": n["out"] - n["kept"],
+                "rewritten_files": len(files),
+                "carried_files": skipped,
+                "committed": True,
+            },
+            num_files,
+        )
 
-        def _norm(dfx):
-            for c in schema_cols:
-                if c not in dfx.columns:
-                    dfx = dfx.withColumn(c, _typed_null(c, live_entries))
-            return dfx.select(*schema_cols)
-
-        by_base: dict[str, list[str]] = {}
-        for f in cand_files:
-            base = next(
-                d for d in live_data_dirs if f.startswith(d + os.sep)
-            )
-            by_base.setdefault(base, []).append(f)
-        cand = None
-        for base, plist in by_base.items():
-            reader = spark.read.option("basePath", base)
-            if widened:
-                reader = reader.option("mergeSchema", "true")
-            part = _norm(_dv_filter(reader.parquet(*plist), dvf))
-            cand = part if cand is None else cand.unionByName(part)
-        # counts ride the rewrite job (one pass; _observed_count's
-        # session constraint: ``df`` is the CALLER's frame, so its count
-        # is derived as n_dir - n_survivors instead of observed)
-        if cand is not None:
-            cand, n_cand_of = _observed_count(cand)
-            survivors = cand.filter(
-                ~F.coalesce(_predicate_cond(cand, predicates), F.lit(False))
-            )
-            survivors, n_surv_of = _observed_count(survivors)
-            out = survivors.unionByName(df)
-        else:
-            n_cand_of = n_surv_of = lambda: 0  # noqa: E731
-            out = df
-        out, n_dir_of = _observed_count(out)
-        if num_files is None:
-            cand_bytes = sum(Path(f).stat().st_size for f in cand_files)
-            num_files = max(1, -(-cand_bytes // (128 << 20)))
-        new_version = version + 1
-        dir_name = f"c{new_version:08d}"
-        data_dir = root / _DATA / dir_name
-        writer = out.coalesce(int(num_files)).write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(data_dir))
-        has_rows = any(data_dir.rglob("*.parquet"))
-        n_cand, n_dir = n_cand_of(), n_dir_of()
-        n_new = n_dir - n_surv_of()
-        if not n_dir:
-            has_rows = False
-            shutil.rmtree(data_dir, ignore_errors=True)
-        removed: dict[str, list[str]] = {}
-        for base, plist in by_base.items():
-            removed[Path(base).name] = sorted(
-                str(Path(f).relative_to(base)) for f in plist
-            )
-        entry = {
-            "version": new_version,
-            "action": "upsert",
-            "op": "replace_where",
-            "dir": dir_name if has_rows else None,
-            "columns": schema_cols,
-            "partition_by": partition_by,
-            "removed": removed,
-            "predicates": [list(p) for p in predicates],
-            "ts": time.time(),
-        }
-        if txn is not None:
-            entry["txn"] = {"app": str(txn[0]), "batch": int(txn[1])}
-        if _cf_active(live_entries):
-            changes = df.withColumn("_change", F.lit("insert"))
-            if cand is not None:
-                deleted = cand.filter(
-                    F.coalesce(
-                        _predicate_cond(cand, predicates), F.lit(False)
-                    )
-                ).withColumn("_change", F.lit("delete"))
-                changes = deleted.unionByName(changes)
-            changes.coalesce(int(num_files)).write.mode(
-                "overwrite"
-            ).parquet(str(root / _CDF / dir_name))
-            entry["change_data"] = True
-        if stats_columns:
-            entry["stats_columns"] = stats_columns
-            if has_rows:
-                entry["stats_types"] = {
-                    c: _dtype_of_path(out, c) for c in stats_columns
-                }
-                entry["stats"] = _collect_file_stats(data_dir, stats_columns)
-        if bloom_columns:
-            entry["bloom_columns"] = bloom_columns
-            entry["bloom_bits"] = bloom_bits
-            if has_rows:
-                entry["bloom_types"] = {
-                    c: _dtype_of_path(out, c) for c in bloom_columns
-                }
-                entry["blooms_file"] = _write_bloom_sidecar(
-                    root, dir_name, _collect_file_blooms(
-                        spark, data_dir, bloom_columns, bloom_bits
-                    ),
-                )
-        _commit(root, entry)
-    return {
-        "version": new_version,
-        "replaced_rows": n_cand - (n_dir - n_new),
-        "inserted_rows": n_new,
-        "rewritten_files": len(cand_files),
-        "carried_files": report["skipped_files"],
-        "committed": True,
-    }
+    return _rewrite_commit(spark, root, txn, idle, select)
 
 
 def _validate_set_values(set_values: dict) -> None:
@@ -4765,7 +4595,6 @@ def update_where_pruned(
     At 100 TB this is the Delta UPDATE shape: rewrite cost is O(files
     the predicate touches) — the pruning decision reads zero data
     bytes."""
-    from pyspark.sql import Column
     from pyspark.sql import functions as F
 
     if not predicates:
@@ -4777,195 +4606,91 @@ def update_where_pruned(
                 f"predicate {p!r} must be (column, op, value) with op in "
                 f"{sorted(_PRUNE_OPS)}"
             )
-    root = Path(root)
-    (root / _VLOG).mkdir(parents=True, exist_ok=True)
-    with writer_lock(root, wait_seconds=_LOCK_WAIT):
-        entries = _snapshot_entries(root)
-        version, live_data_dirs, live_entries = _resolve(root, entries, None)
-        if txn is not None and int(txn[1]) <= _latest_txns(entries).get(
-            str(txn[0]), -1
-        ):
-            # replayed source batch: the whole op holds the lock, so
-            # one check suffices (same contract as the other DML verbs)
-            return {
-                "version": version, "updated_rows": 0,
-                "rewritten_files": 0, "carried_files": 0,
-                "skipped_files": 0, "committed": False,
-                "skipped_duplicate_txn": True,
-            }
-        mapping = _column_mapping(live_entries)
+
+    def idle(version, skipped=0):
+        return {
+            "version": version, "updated_rows": 0, "rewritten_files": 0,
+            "carried_files": 0, "skipped_files": skipped, "committed": False,
+        }
+
+    def select(t):
+        mapping = t.mapping
         phys_preds = _preds_to_physical(predicates, mapping)
-        schema_cols = live_entries[-1]["columns"]
-        logical_cols = _names_to_logical(schema_cols, mapping)
+        logical_cols = _names_to_logical(t.columns, mapping)
         unknown = sorted(set(set_values) - set(logical_cols))
         if unknown:
             raise ValueError(
                 f"SET columns {unknown} not in table schema {logical_cols}"
             )
-        dvf = _dv_frame(spark, root, live_entries)
-        report = zone_map_prune(root, phys_preds, version)
-        cand_files = list(report["files"]) + [
-            str(f)
-            for d in report["dirs"]
-            for f in sorted(Path(d).rglob("*.parquet"))
-        ]
-        if not cand_files:  # no file can hold a match: commit nothing
-            return {
-                "version": version, "updated_rows": 0,
-                "rewritten_files": 0, "carried_files": 0,
-                "skipped_files": report["skipped_files"], "committed": False,
-            }
-        partition_by = live_entries[-1].get("partition_by") or []
-        stats_columns = live_entries[-1].get("stats_columns") or []
-        bloom_columns = live_entries[-1].get("bloom_columns") or []
-        bloom_bits = live_entries[-1].get("bloom_bits") or 65_536
-        widened = any("added_columns" in e for e in live_entries)
+        files, skipped = _zone_map_candidates(t, predicates)
+        if not files:  # no file can hold a match: commit nothing
+            return idle(t.version, skipped)
 
-        def _norm(df):
-            for c in schema_cols:
-                if c not in df.columns:
-                    # TYPED null: survivors/post-images get WRITTEN — an
-                    # untyped (void) backfill crashes the parquet write
-                    df = df.withColumn(c, _typed_null(c, live_entries))
-            return df.select(*schema_cols)
-
-        by_base: dict[str, list[str]] = {}
-        for f in cand_files:
-            base = next(
-                d for d in live_data_dirs if f.startswith(d + os.sep)
+        def rows(cand):
+            # match on the PHYSICAL frame (pruning's language), then
+            # apply SET expressions under LOGICAL names (the user's
+            # language) — the flag column rides through the projection
+            matched = _matches(cand, phys_preds)
+            logical = _to_logical(cand.withColumn("_upd", matched), mapping)
+            vexprs = _checked_set_exprs(logical, set_values)
+            exprs = [
+                (
+                    F.when(F.col("_upd"), vexprs[lc]).otherwise(F.col(f"`{lc}`"))
+                    if lc in vexprs else F.col(f"`{lc}`")
+                ).alias(lc)
+                for lc in logical_cols
+            ]
+            # back to frozen physical storage names (the append path's
+            # sequence: flat renames first, then nested renames)
+            updated = logical.select(*exprs, "_upd").withColumnsRenamed(
+                {l: p for l, p in mapping.items() if "." not in l}
             )
-            by_base.setdefault(base, []).append(f)
-        cand = None
-        for base, plist in by_base.items():
-            reader = spark.read.option("basePath", base)
-            if widened:
-                reader = reader.option("mergeSchema", "true")
-            part = _norm(_dv_filter(reader.parquet(*plist), dvf))
-            cand = part if cand is None else cand.unionByName(part)
-        # match on the PHYSICAL frame (pruning's language), then apply
-        # SET expressions under LOGICAL names (the user's language) —
-        # the flag column rides through the projection
-        matched = F.coalesce(
-            _predicate_cond(cand, phys_preds), F.lit(False)
-        )
-        flagged = cand.withColumn("_upd", matched)
-        logical = _to_logical(flagged, mapping)
-        vexprs = _checked_set_exprs(logical, set_values)
-        exprs = []
-        for lc in logical_cols:
-            if lc in vexprs:
-                exprs.append(
-                    F.when(F.col("_upd"), vexprs[lc])
-                    .otherwise(F.col(f"`{lc}`"))
-                    .alias(lc)
+            updated = _apply_nested_renames_to_physical(updated, mapping)
+            post = updated.filter(F.col("_upd"))
+            _enforce_constraints(post, _active_constraints(t.entries))
+            # the matched-row count rides the rewrite write; attached
+            # AFTER the constraint probe, whose limit() action would
+            # otherwise resolve the observation early
+            updated, n = _observed_counts(
+                updated, updated=F.col("_upd"), out=None
+            )
+            # change data: pre-images as deletes + post-images as
+            # inserts (an UPDATE is its delete+insert pair, the
+            # representation of changes_between)
+            def changes():
+                return cand.filter(matched).withColumn(
+                    "_change", F.lit("delete")
+                ).unionByName(
+                    post.drop("_upd").select(*t.columns).withColumn(
+                        "_change", F.lit("insert")
+                    )
                 )
-            else:
-                exprs.append(F.col(f"`{lc}`").alias(lc))
-        updated_l = logical.select(*exprs, "_upd")
-        # back to frozen physical storage names (the append path's
-        # sequence: flat renames first, then nested renames)
-        updated_p = updated_l.withColumnsRenamed(
-            {l: p for l, p in mapping.items() if "." not in l}
-        )
-        updated_p = _apply_nested_renames_to_physical(updated_p, mapping)
-        post = updated_p.filter(F.col("_upd"))
-        _enforce_constraints(post, _active_constraints(live_entries))
-        # matched-row count rides the rewrite job (_observed_count's
-        # rationale): the pre-pass ``post.count()`` was a second full
-        # read of every candidate file. Attached AFTER the constraint
-        # probe so its limit() action cannot resolve the observation
-        # early. A no-match UPDATE now writes the (unchanged)
-        # candidates once and abandons the dir — the rare case pays one
-        # wasted write so the common case scans once.
-        from pyspark.sql import Observation
 
-        obs = Observation()
-        updated_p = updated_p.observe(
-            obs, F.count(F.when(F.col("_upd"), F.lit(1))).alias("n")
-        )
-        out = updated_p.drop("_upd").select(*schema_cols)
-        if num_files is None:
-            cand_bytes = sum(Path(f).stat().st_size for f in cand_files)
-            num_files = max(1, -(-cand_bytes // (128 << 20)))
-        new_version = version + 1
-        dir_name = f"c{new_version:08d}"
-        data_dir = root / _DATA / dir_name
-        writer = out.coalesce(int(num_files)).write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(data_dir))
-        n_updated = int(obs.get["n"])
-        if not n_updated:
-            # predicate matched no ROW (files were only possibly
-            # matching): nothing changes — abandon the uncommitted dir
-            shutil.rmtree(data_dir, ignore_errors=True)
-            return {
-                "version": version, "updated_rows": 0,
-                "rewritten_files": 0, "carried_files": 0,
-                "skipped_files": report["skipped_files"], "committed": False,
-            }
-        removed: dict[str, list[str]] = {}
-        for base, plist in by_base.items():
-            removed[Path(base).name] = sorted(
-                str(Path(f).relative_to(base)) for f in plist
-            )
-        entry = {
-            "version": new_version,
-            "action": "update",
-            "dir": dir_name,
-            "columns": schema_cols,
-            "partition_by": partition_by,
-            "removed": removed,
-            "predicates": [list(p) for p in phys_preds],
-            "set_columns": sorted(
-                _names_to_physical(list(set_values), mapping)
-            ),
-            "ts": time.time(),
-        }
-        if _cf_active(live_entries):
-            # pre-image rows as deletes + post-image rows as inserts
-            # (an UPDATE is its delete+insert pair — changes_between's
-            # representation); written BEFORE the commit link
-            pre = cand.filter(matched).withColumn(
-                "_change", F.lit("delete")
-            )
-            changes = pre.unionByName(
-                post.drop("_upd").select(*schema_cols).withColumn(
-                    "_change", F.lit("insert")
-                )
-            ).coalesce(int(num_files))
-            changes.write.mode("overwrite").parquet(
-                str(root / _CDF / dir_name)
-            )
-            entry["change_data"] = True
-        if stats_columns:
-            entry["stats_columns"] = stats_columns
-            entry["stats_types"] = {
-                c: _dtype_of_path(out, c) for c in stats_columns
-            }
-            entry["stats"] = _collect_file_stats(data_dir, stats_columns)
-        if bloom_columns:
-            entry["bloom_columns"] = bloom_columns
-            entry["bloom_bits"] = bloom_bits
-            entry["bloom_types"] = {
-                c: _dtype_of_path(out, c) for c in bloom_columns
-            }
-            entry["blooms_file"] = _write_bloom_sidecar(
-                root, dir_name, _collect_file_blooms(
-                    spark, data_dir, bloom_columns, bloom_bits
+            return _Rows(updated.drop("_upd").select(*t.columns), changes, n)
+
+        return _Rewrite(
+            files,
+            rows,
+            {
+                "action": "update",
+                "predicates": [list(p) for p in phys_preds],
+                "set_columns": sorted(
+                    _names_to_physical(list(set_values), mapping)
                 ),
-            )
-        if txn is not None:
-            entry["txn"] = {"app": str(txn[0]), "batch": int(txn[1])}
-        _commit(root, entry)
-    return {
-        "version": new_version,
-        "updated_rows": n_updated,
-        "rewritten_files": len(cand_files),
-        "carried_files": report["skipped_files"],
-        "skipped_files": report["skipped_files"],
-        "committed": True,
-    }
+            },
+            # no row matched (files only possibly did): nothing changes
+            lambda v, n: {
+                "version": v,
+                "updated_rows": n["updated"],
+                "rewritten_files": len(files),
+                "carried_files": skipped,
+                "skipped_files": skipped,
+                "committed": True,
+            } if n["updated"] else idle(t.version, skipped),
+            num_files,
+        )
+
+    return _rewrite_commit(spark, root, txn, idle, select)
 
 
 def _typed_null(c: str, live_entries: list[dict]):

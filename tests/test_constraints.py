@@ -1,9 +1,9 @@
 """Table constraints (r7, the Delta CHECK / NOT NULL shape):
 ``set_constraints`` is a dir-less property commit with replace
-semantics; append/overwrite/upsert validate INCOMING rows with one
-O(batch) job and refuse the whole commit atomically; row-preserving
-commits (delete, compact, optimize) are exempt; streams and the
-change feed skip the property commit."""
+semantics; append/overwrite/upsert/replace_where/update validate
+INCOMING rows with one O(batch) job and refuse the whole commit
+atomically; row-preserving commits (delete, compact, optimize) are
+exempt; streams and the change feed skip the property commit."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -56,6 +56,19 @@ def test_upsert_validates_updates(spark, table):
         vt.upsert_pruned(spark, table, bad, ["id"])
     ok = spark.createDataFrame([(3, 999)], "id long, v long")
     st = vt.upsert_pruned(spark, table, ok, ["id"])
+    assert st["committed"] and st["replaced_rows"] == 1
+
+
+def test_replace_where_validates_replacement_rows(spark, table):
+    """replace_where writes new rows, so it validates them as upsert
+    does, before any write (it used to commit a violating row)."""
+    n = len(vt.history(table))
+    bad = spark.createDataFrame([(3, -1)], "id long, v long")
+    with pytest.raises(ValueError, match="constraint violation"):
+        vt.replace_where(spark, table, bad, [("id", "==", 3)])
+    assert len(vt.history(table)) == n
+    ok = spark.createDataFrame([(3, 999)], "id long, v long")
+    st = vt.replace_where(spark, table, ok, [("id", "==", 3)])
     assert st["committed"] and st["replaced_rows"] == 1
 
 

@@ -84,9 +84,26 @@ def test_time_travel_still_sees_deleted_rows(spark, banded):
 
 def test_no_match_is_a_no_commit(spark, banded):
     n_versions = len(vt.history(banded))
+    dirs = sorted(p.name for p in (banded / "data").iterdir())
     st = vt.delete_where_pruned(spark, banded, [("id", ">", 10_000)])
     assert not st["committed"] and st["deleted_rows"] == 0
+    assert st["rewritten_files"] == 0 and st["skipped_files"] == 10
+    # pruned to zero files: no data dir written, no log entry
     assert len(vt.history(banded)) == n_versions
+    assert sorted(p.name for p in (banded / "data").iterdir()) == dirs
+
+
+def test_num_files_zero_keeps_the_read_partitioning(spark, banded):
+    """``num_files=0`` skips the coalesce, as upsert_pruned's pure
+    insert always did; every copy-on-write verb shares that sizing."""
+    st = vt.delete_where_pruned(
+        spark, banded, [("id", "between", (0, 59))], num_files=0
+    )
+    assert st["committed"] and st["deleted_rows"] == 60
+    assert st["rewritten_files"] == 6
+    assert _rows(vt.read_version(spark, banded)) == [
+        (i, i * 10) for i in range(60, 100)
+    ]
 
 
 def test_null_predicate_rows_survive(spark, tmp_path):

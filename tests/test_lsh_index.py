@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from dataset_dedupe_estimator_spark.plans.lsh_index import (
     admit_docs,
     build_lsh_index,
+    delete_docs,
     index_stats,
     query_docs,
 )
@@ -318,3 +319,26 @@ def test_admit_job_budget(spark, tmp_path):
         assert rep["docs"] > 0
         counts.append(len(sc.statusTracker().getJobIdsForGroup(group)))
     assert all(0 < n <= 8 for n in counts), counts
+
+
+def test_admit_after_delete_job_budget(spark, tmp_path):
+    """With a live tombstone set an admission runs at most 10 Spark
+    jobs (13 when the set was read by schema inference and made
+    distinct by an aggregate): the set is read with a declared schema,
+    and it needs no distinct (sets are disjoint). The set still costs 2
+    jobs over test_admit_job_budget's 8."""
+    docs = _docs(spark)
+    idx = tmp_path / "lsh"
+    build_lsh_index(spark, docs.filter(F.col("doc_id") % 4 == 1), idx)
+    delete_docs(spark, idx, [1, 5, 9])
+    docs.filter(F.col("doc_id") % 4 == 2).write.parquet(str(tmp_path / "b"))
+    sc = spark.sparkContext
+    group = "admit-after-delete"
+    sc.setJobGroup(group, group)
+    try:
+        _, rep = admit_docs(spark, spark.read.parquet(str(tmp_path / "b")), idx)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert rep["docs"] > 0
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < jobs <= 10, jobs

@@ -405,3 +405,59 @@ def test_bucket_pair_kernel_empty_and_singleton():
     out = list(_bucket_pair_cosine_fn(iter([batch])))
     assert len(out) == 1 and out[0].num_rows == 0
     assert out[0].schema.names == ["vec_a", "vec_b", "cosine"]
+
+
+def test_zero_and_underflowing_norms_give_zero_units(spark, tmp_path):
+    """One semantics for a zero norm — a zero vector, or a 1e-300-scaled
+    one whose squares all underflow: the unit is all zeros, so its
+    cosine with every vector is 0 and it pairs with nothing. The Arrow
+    kernels, the declarative fold and the DuckDB oracle agree bit for
+    bit, and no numpy warning is raised."""
+    import warnings
+
+    import duckdb
+    import numpy as np
+
+    from dataset_dedupe_estimator_spark.queries.similarity import (
+        DIM,
+        EMB_DEDUP_SQL,
+        EMB_NORMED_CTE,
+        unit_features,
+    )
+
+    rng = np.random.default_rng(7)
+    base = rng.standard_normal(DIM)
+    vecs = [np.zeros(DIM), np.zeros(DIM), base * 1e-300, base, base * 2.0]
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs)],
+        "vec_id long, embedding array<double>",
+    )
+    fold = {
+        r.vec_id: list(r.unit)
+        for r in emb.select(
+            "vec_id", "embedding", _norm(F.col("embedding")).alias("nrm")
+        ).select("vec_id", _unit_col().alias("unit")).collect()
+    }
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        kernel = {r.vec_id: list(r.unit) for r in unit_features(emb).collect()}
+        feats = {r.vec_id: list(r.unit) for r in lsh_features(emb).collect()}
+    path = tmp_path / "embeddings"
+    emb.write.parquet(str(path))
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW embeddings AS SELECT * FROM read_parquet('{path}/*.parquet')"
+    )
+    oracle = {
+        vid: list(unit)
+        for vid, unit in con.execute(
+            f"WITH {EMB_NORMED_CTE} SELECT vec_id, unit FROM normed"
+        ).fetchall()
+    }
+    assert fold == kernel == feats == oracle
+    for vid in (0, 1, 2):
+        assert kernel[vid] == [0.0] * DIM
+    assert kernel[3] == kernel[4] and any(kernel[3])
+    # only the two nonzero copies of `base` pair up
+    pairs = con.execute(EMB_DEDUP_SQL).fetchall()
+    assert [(a, b) for a, b, _ in pairs] == [(3, 4)]

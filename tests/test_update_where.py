@@ -91,17 +91,23 @@ def test_update_refusals(spark, table):
 
 
 def test_update_no_match_commits_nothing(spark, table):
+    dirs = sorted(p.name for p in (table / "data").iterdir())
     st = vt.update_where_pruned(
         spark, table, [("k", "==", 999)], {"lang": "xx"}
     )
-    assert st["committed"] is False
+    assert st["committed"] is False and st["rewritten_files"] == 0
+    # pruned to zero files: no data dir written, no log entry
+    assert sorted(p.name for p in (table / "data").iterdir()) == dirs
+    assert len(vt.history(table)) == 1
     # a file may match by range while no ROW matches: also uncommitted
+    # (its one-pass write is abandoned)
     st2 = vt.update_where_pruned(
         spark, table, [("k", "in", (10,)), ("lang", "==", "zz")],
         {"lang": "xx"},
     )
     assert st2["committed"] is False
     assert len(vt.history(table)) == 1
+    assert sorted(p.name for p in (table / "data").iterdir()) == dirs
 
 
 def test_update_validates_constraints_atomically(spark, table):
