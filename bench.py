@@ -32,10 +32,6 @@ def chunker_throughput(n_mib: int = 48) -> dict:
 
     from dataset_dedupe_estimator_spark.operators.chunker import (
         ChunkerParams,
-        _compressed_size,
-        _fast_arrays_ok,
-        _hash64,
-        _iter_file_chunks,
         file_chunk_arrays,
     )
 
@@ -50,8 +46,7 @@ def chunker_throughput(n_mib: int = 48) -> dict:
     with tempfile.NamedTemporaryFile() as f:
         f.write(blob)
         f.flush()
-        for _ in _iter_file_chunks(f.name, ChunkerParams()):  # warm
-            break
+        file_chunk_arrays(f.name, ChunkerParams())  # warm
         for label, params in (
             ("chunker_mb_s", ChunkerParams()),
             ("chunker_mb_s_probe16k", ChunkerParams(compress_probe_bytes=16 * 1024)),
@@ -62,15 +57,10 @@ def chunker_throughput(n_mib: int = 48) -> dict:
             best = float("inf")
             for _ in range(2):
                 t0 = time.perf_counter()
-                if _fast_arrays_ok(params):
-                    # the executor hot path (r11): fused native block
-                    # pipeline — boundary scan + cut selection + hash +
-                    # probe emit arrays, zero per-chunk Python objects
-                    file_chunk_arrays(f.name, params)
-                else:
-                    for _off, chunk in _iter_file_chunks(f.name, params):
-                        _hash64(chunk)
-                        _compressed_size(chunk, params.compress_probe_bytes)
+                # the executor's per-file work: block iterator, cut
+                # selection, identity hash and probe (native passes where
+                # the kernels built, the per-chunk loop otherwise)
+                file_chunk_arrays(f.name, params)
                 best = min(best, time.perf_counter() - t0)
             out[label] = round(n_mib * 1024 * 1024 / best / 1e6, 1)
     return out

@@ -43,6 +43,15 @@ UDF *streams* each file in 8 MiB blocks rather than materializing it — this
 is the 100 TB scale path: `binaryFile` caps rows at 2 GB and ships whole
 file bytes through the scan, while path-based streaming reads only inside
 the executor task.
+
+One pipeline serves every entry point: ``_iter_block_cuts`` streams a file
+once through a carry buffer and yields each parameterization's final cuts
+per block; ``_emit_chunk_cols`` turns a cut list into chunk columns;
+``_chunk_partition_fn`` (the one mapInArrow closure) batches them, for
+files and for the split path's work units alike; ``_chunk_frame`` is the
+one file-size dispatch between task-per-file and intra-file parallel
+chunking. ``chunk_bytes`` is the in-memory reference the tests compare
+the pipeline against.
 """
 
 from __future__ import annotations
@@ -250,22 +259,37 @@ def _cuts_from_candidates(n: int, candidates: np.ndarray, start: int, params: Ch
 
     ``start`` is the offset (within the buffer) where the current pending
     chunk begins. Returns final cut positions within [0, n].
+
+    The cost follows the cuts, not the candidates: a binary search jumps
+    to the first candidate at least ``min_size`` past the chunk start, so
+    input where nearly every byte is a candidate selects as fast as
+    sparse input. A skipped candidate could never be accepted (the start
+    only moves forward), and the max-size cuts it would force are forced
+    by the next candidate examined, or by the tail rule, instead: forced
+    cuts depend only on the furthest position reached.
     """
-    cuts: list[int] = []
+    cand = np.asarray(candidates)
+    min_size, max_size = params.min_size, params.max_size
     enforce_max = params.enforce_max
-    for c in candidates.tolist():
+    cuts: list[int] = []
+    i = 0
+    while True:
+        i = max(i, int(np.searchsorted(cand, start + min_size)))
+        if i >= cand.shape[0]:
+            break
+        c = int(cand[i])
+        i += 1
         # No candidate fell in (start+min, start+max] → force cuts at max.
         if enforce_max:
-            while c - start > params.max_size:
-                start += params.max_size
+            while c - start > max_size:
+                start += max_size
                 cuts.append(start)
-        if c - start < params.min_size:
-            continue
-        cuts.append(int(c))
-        start = int(c)
+        if c - start >= min_size:
+            cuts.append(c)
+            start = c
     if enforce_max:
-        while n - start > params.max_size:
-            start += params.max_size
+        while n - start > max_size:
+            start += max_size
             cuts.append(start)
     return cuts
 
@@ -288,231 +312,10 @@ def chunk_bytes(data: bytes, params: ChunkerParams = ChunkerParams()) -> list[tu
 
 _BLOCK = 8 * 1024 * 1024  # streaming read block
 
-# Files at or above this size switch from task-per-file to intra-file
-# parallel chunking (chunk_files_auto); estimate()'s shared-scan dispatch
-# references the same constant so the two never disagree.
+# Files at or above this size take intra-file parallel chunking instead of
+# one task per file. Read at call time by ``_chunk_frame``, the chunker's
+# only file-size dispatch.
 PARALLEL_THRESHOLD = 1024 * 1024 * 1024
-
-
-def _iter_file_chunks(path: str, params: ChunkerParams) -> Iterator[tuple[int, bytes]]:
-    """Stream a file and yield (offset, chunk_bytes) without materializing it.
-
-    Keeps a pending tail across blocks; with max enforcement a chunk never
-    exceeds ``params.max_size`` so the pending buffer is bounded by
-    max_size + BLOCK and each block's boundary rescan is O(block).
-
-    ``enforce_max=False`` (the reference-parity mode) is refused here: a
-    candidate-free stretch would grow ``pending`` to the whole file and
-    re-run boundary detection over all of it per block — O(n²) time and
-    O(file) memory. Use ``chunk_bytes`` on in-memory data for parity
-    studies, or keep max enforcement for streaming scale.
-    """
-    if not params.enforce_max:
-        raise ValueError(
-            "streaming chunking requires enforce_max=True (bounded pending "
-            "buffer); use chunk_bytes() for enforce_max=False parity analysis"
-        )
-    pending = b""
-    base = 0  # file offset of pending[0]
-    with open(path, "rb") as f:
-        while True:
-            block = f.read(_BLOCK)
-            if not block:
-                break
-            pending += block
-            buf = np.frombuffer(pending, dtype=np.uint8)
-            cand = _boundary_candidates(buf, params)
-            # Only cut up to len(pending) - max_size safety margin? No: cut
-            # everything except the final partial chunk, which may still grow.
-            cuts = _cuts_from_candidates(len(pending), cand, 0, params)
-            prev = 0
-            for c in cuts:
-                yield base + prev, pending[prev:c]
-                prev = c
-            pending = pending[prev:]
-            base += prev
-    if pending:
-        yield base, pending
-
-
-def _fast_arrays_ok(p: ChunkerParams) -> bool:
-    """True when the fused native block pipeline can serve this
-    parameterization: native kernels present (xxh3-64/xxh64 + lz4
-    probe) and an lz4-family probe scheme ('zlib1' stays on the
-    per-chunk path)."""
-    return (
-        native.available()
-        and IDENTITY_HASH in _NATIVE_SCHEMES
-        and p.compress_scheme in ("auto", "lz4")
-        and p.enforce_max
-    )
-
-
-def _emit_chunk_cols(
-    buf: np.ndarray,
-    start0: int,
-    cuts,
-    cap: int,
-    probe_cache: dict[int, int] | None = None,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """(buf-relative offsets, sizes, hashes, compressed) for a FINAL cut
-    list over ``buf`` via the native passes — the single fused-emit
-    implementation shared by the per-file, shared-scan and intra-file
-    parallel paths (one copy to keep bit-identical to the per-chunk
-    reference pipeline). ``cap``: -1 = full probe, 0 = skip (comps =
-    sizes), >0 = sampled with linear extrapolation. ``probe_cache``
-    (optional, per file): hash -> size reuse across blocks — first
-    occurrence wins, capped at 1M entries, identical results either way
-    (identical bytes probe to identical sizes)."""
-    cuts_a = np.asarray(cuts, dtype=np.int64)
-    n = cuts_a.shape[0]
-    rel = np.empty(n, dtype=np.int64)
-    rel[0] = start0
-    rel[1:] = cuts_a[:-1]
-    sizes = cuts_a - rel
-    # executor-local scheme: callers gate the fused path on the driver's
-    # scheme matching this process's IDENTITY_HASH, so this dispatch is
-    # always the cluster-wide choice
-    if IDENTITY_HASH == "xxh3-64":
-        hashes = native.chunk_hashes3(buf, cuts_a, start0)
-    else:
-        hashes = native.chunk_hashes(buf, cuts_a, start0, 42)
-    if cap == 0:
-        return rel, sizes, hashes, sizes.copy()
-    uniq, first, inv = np.unique(
-        hashes, return_index=True, return_inverse=True
-    )
-    if probe_cache is None:
-        probed = native.chunk_probes(
-            buf, rel, sizes, first.astype(np.int64), cap
-        )
-        return rel, sizes, hashes, probed[inv]
-    uniq_l = uniq.tolist()
-    comps_u = np.empty(uniq.shape[0], dtype=np.int64)
-    need: list[int] = []
-    for j, h in enumerate(uniq_l):
-        c = probe_cache.get(h)
-        if c is None:
-            need.append(j)
-        else:
-            comps_u[j] = c
-    if need:
-        need_a = np.asarray(need, dtype=np.int64)
-        idx = first[need_a].astype(np.int64)
-        probed = native.chunk_probes(buf, rel, sizes, idx, cap)
-        comps_u[need_a] = probed
-        if len(probe_cache) < 1_000_000:
-            for j, c in zip(need, probed.tolist()):
-                probe_cache[uniq_l[j]] = c
-    return rel, sizes, hashes, comps_u[inv]
-
-
-def _iter_block_arrays(
-    path: str, p: ChunkerParams
-) -> Iterator[tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]]:
-    """Stream a file and yield per-block chunk COLUMNS — (absolute
-    offsets, sizes, hashes, compressed sizes), all int64 — with zero
-    per-chunk Python objects: boundary scan, cut slicing, identity hash
-    and compressibility probe all run as native passes over the block
-    (operators/native.py ``chunk_hash_scan`` / ``chunk_probe_scan``).
-
-    Bit-identical to ``_iter_file_chunks`` + ``_hash64`` +
-    ``_compressed_size`` per chunk (pinned by tests): same cuts (same
-    candidate scan and selection), same identity-hash signed values
-    (xxh3-64 by default; xxh64 seed-42 when that scheme is pinned),
-    same lz4 probe with the same sampled-extrapolation truncation, and
-    the same within-file repeat-chunk probe reuse (first occurrence
-    wins — here via a per-file hash->size dict over the block's
-    np.unique, instead of a per-chunk dict lookup)."""
-    if not _fast_arrays_ok(p):
-        raise RuntimeError(
-            "fused chunk pipeline needs the native kernels and an "
-            "lz4-family probe scheme"
-        )
-    probe = p.compress_probe_bytes
-    cap = -1 if probe is None else int(probe)
-    probe_cache: dict[int, int] = {}
-    # fused boundary-scan + cut-selection kernel with min_size
-    # skip-ahead (FastCDC shape): eligible when min_size clears the
-    # warm-up window (gear's effective window is 64); identical cuts
-    # to candidates + _cuts_from_candidates (hypothesis-pinned)
-    eff_w = 64 if p.scheme == "gear" else p.window
-    use_fused_cuts = p.min_size > eff_w
-    if p.scheme == "gear":
-        table = (
-            _user_gear_table(p.gear_table)
-            if p.gear_table is not None
-            else _gear_table(p.seed)
-        )
-    else:
-        table = _gear_table(p.seed)
-
-    def final_cuts(buf: np.ndarray, n: int) -> list[int]:
-        if use_fused_cuts:
-            fc = native.fused_cuts(
-                buf, table, p.mask_bits, p.min_size, p.max_size,
-                p.scheme, p.window, int(_MIX),
-            )
-            if fc is not None:
-                return fc.tolist()
-        return _cuts_from_candidates(n, _boundary_candidates(buf, p), 0, p)
-
-    def emit(buf: np.ndarray, start0: int, cuts: list[int], base: int):
-        rel, sizes, hashes, comps = _emit_chunk_cols(
-            buf, start0, cuts, cap, probe_cache
-        )
-        return rel + base, sizes, hashes, comps
-
-    # preallocated carry buffer: readinto appends after the carried
-    # tail — no per-block bytes concatenation. With enforce_max the
-    # post-cut remainder is <= max_size, so capacity is bounded.
-    cap_bytes = p.max_size + _BLOCK
-    ring = bytearray(cap_bytes)
-    view = memoryview(ring)
-    filled = 0  # valid bytes in ring[0:filled]
-    base = 0  # file offset of ring[0]
-    with open(path, "rb") as f:
-        while True:
-            nread = f.readinto(view[filled : filled + _BLOCK])
-            if not nread:
-                break
-            filled += nread
-            buf = np.frombuffer(view[:filled], dtype=np.uint8)
-            cuts = final_cuts(buf, filled)
-            if cuts:
-                yield emit(buf, 0, cuts, base)
-                prev = cuts[-1]
-                rest = filled - prev
-                if rest:
-                    view[:rest] = bytes(view[prev:filled])
-                filled = rest
-                base += prev
-    if filled:
-        buf = np.frombuffer(view[:filled], dtype=np.uint8)
-        yield emit(buf, 0, [filled], base)
-
-
-def file_chunk_arrays(
-    path: str, p: ChunkerParams
-) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
-    """Whole-file chunk columns (offsets, sizes, hashes, compressed) via
-    the fused native pipeline — the executor hot path as one call (what
-    bench.py's chunker metric measures)."""
-    offs, sizes, hashes, comps = [], [], [], []
-    for o, s, h, c in _iter_block_arrays(path, p):
-        offs.append(o)
-        sizes.append(s)
-        hashes.append(h)
-        comps.append(c)
-    if not offs:
-        z = np.empty(0, dtype=np.int64)
-        return z, z.copy(), z.copy(), z.copy()
-    return (
-        np.concatenate(offs),
-        np.concatenate(sizes),
-        np.concatenate(hashes),
-        np.concatenate(comps),
-    )
 
 
 def boundary_compatible(a: ChunkerParams, b: ChunkerParams) -> bool:
@@ -540,73 +343,35 @@ def boundary_compatible(a: ChunkerParams, b: ChunkerParams) -> bool:
     )
 
 
-def _iter_file_chunks_multi(
+def _iter_block_cuts(
     path: str, params_list: list[ChunkerParams]
-) -> Iterator[tuple[int, int, bytes]]:
-    """Stream a file ONCE and yield (param_idx, offset, chunk_bytes) for
-    every parameterization in ``params_list``.
+) -> Iterator[tuple[int, np.ndarray, int, np.ndarray | list[int], int]]:
+    """Stream a file ONCE and yield ``(param_idx, buf, start0, cuts,
+    base)`` per block and parameterization: the FINAL cut positions
+    ``cuts`` (relative to ``buf``) of the chunks that parameterization
+    completes in this block, the first starting at ``buf[start0]``;
+    ``buf`` holds the file from offset ``base``. The last yield of each
+    parameterization ends at the end of the file. ``buf`` views a reused
+    carry buffer, so consume it before advancing the iterator.
 
-    The default estimate runs two chunker parameterizations (reference:
-    gearhash store + xet-core chunker, src/lib.rs:16-33 + src/xet.rs:10-39)
-    — as two sequential passes that read the corpus twice. When the
-    parameterizations share the boundary-candidate function
-    (``boundary_compatible``: same scheme/seed/window/mask, different
-    min/max), the read and the boundary scan — the memory-bandwidth costs —
-    are shared, and only the per-param cut selection + hash/probe differ.
-    At 100 TB this halves corpus I/O for `estimate(with_xet=True)`.
+    Several parameterizations must be ``boundary_compatible``: the read
+    and the boundary scan (the memory-bandwidth costs) are shared, and
+    only cut selection differs. This is exact: a candidate within
+    ``min_size`` of a chunk start is discarded by cut selection, and
+    ``min_size > window``, so context differences at buffer edges never
+    surface in a cut (the argument behind streaming ≡ in-memory parity).
+    One parameterization with the native library and ``min_size`` above
+    the effective window (gear: 64) takes its cuts from the fused
+    scan-and-select kernel instead, whose min_size skip-ahead (FastCDC,
+    Xia et al., USENIX ATC 2016) never evaluates bytes that cannot end a
+    chunk: on input where nearly every byte is a candidate it cuts 8 MiB
+    in under 1 ms, against ~50 ms for a candidate scan and selection.
 
-    Equivalence to per-param ``_iter_file_chunks`` is exact: candidate
-    positions within ``min_size`` of a chunk start are discarded by cut
-    selection, and ``min_size >> window``, so the per-param context
-    differences at buffer edges can never surface in a cut (the same
-    argument behind streaming ≡ in-memory parity).
-    """
-    base_p = params_list[0]
-    for p in params_list[1:]:
-        if not boundary_compatible(base_p, p):
-            raise ValueError(
-                "shared-scan chunking requires boundary-compatible params "
-                "(same scheme/seed/window/mask_bits/gear_table, enforce_max)"
-            )
-    n_p = len(params_list)
-    pending = b""  # buffer covering [base, base + len(pending)) of the file
-    base = 0
-    starts = [0] * n_p  # per-param absolute offset of its current chunk start
-    with open(path, "rb") as f:
-        while True:
-            block = f.read(_BLOCK)
-            if not block:
-                break
-            pending += block
-            buf = np.frombuffer(pending, dtype=np.uint8)
-            cand = _boundary_candidates(buf, base_p)  # ONE scan for all params
-            for i, p in enumerate(params_list):
-                prev = starts[i] - base
-                cuts = _cuts_from_candidates(len(pending), cand, prev, p)
-                for c in cuts:
-                    yield i, base + prev, pending[prev:c]
-                    prev = c
-                starts[i] = base + prev
-            # drop bytes every param has consumed
-            keep_from = min(starts) - base
-            if keep_from:
-                pending = pending[keep_from:]
-                base += keep_from
-    if pending:
-        for i in range(n_p):
-            if starts[i] < base + len(pending):
-                yield i, starts[i], pending[starts[i] - base :]
-
-
-def _iter_block_arrays_multi(
-    path: str, params_list: list[ChunkerParams]
-) -> Iterator[tuple[int, np.ndarray, np.ndarray, np.ndarray, np.ndarray]]:
-    """Shared-scan twin of :func:`_iter_block_arrays`: stream the file
-    ONCE, boundary-scan each block ONCE, and yield per-param chunk
-    COLUMNS ``(param_idx, offsets, sizes, hashes, comps)`` — the fused
-    native emit (hash + probe as single C passes) applied to every
-    parameterization of the shared candidate scan. Bit-identical to
-    ``_iter_file_chunks_multi`` + per-chunk hash/probe (tests pin it).
+    The carry buffer holds ``max_size + block`` bytes, which bounds the
+    pending chunk only under max enforcement: ``enforce_max=False`` (the
+    reference-parity mode) is refused here — a candidate-free stretch
+    would overflow it. Use ``chunk_bytes`` on in-memory data for parity
+    studies; the split path (``_chunk_frame``) serves it for files.
     """
     base_p = params_list[0]
     for p in params_list[1:]:
@@ -616,45 +381,49 @@ def _iter_block_arrays_multi(
                 "(same scheme/seed/window/mask_bits/gear_table, enforce_max)"
             )
     if not all(p.enforce_max for p in params_list):
-        # the carry buffer is sized max_size + block: an unbounded
-        # pending region would overflow it and truncate silently
         raise ValueError(
-            "fused shared-scan chunking requires enforce_max=True on "
-            "every parameterization (bounded carry buffer)"
+            "streaming chunking requires enforce_max=True (bounded carry "
+            "buffer); use chunk_bytes() for enforce_max=False parity analysis"
         )
-    n_p = len(params_list)
-    caps = [
-        -1 if p.compress_probe_bytes is None else int(p.compress_probe_bytes)
-        for p in params_list
-    ]
-    probe_caches: list[dict[int, int]] = [{} for _ in params_list]
+    eff_w = 64 if base_p.scheme == "gear" else base_p.window
+    fused = (
+        len(params_list) == 1 and native.available() and base_p.min_size > eff_w
+    )
+    if base_p.scheme == "gear" and base_p.gear_table is not None:
+        table = _user_gear_table(base_p.gear_table)
+    else:
+        table = _gear_table(base_p.seed)
 
-    def emit(pi: int, buf: np.ndarray, start0: int, cuts: list[int], base: int):
-        rel, sizes, hashes, comps = _emit_chunk_cols(
-            buf, start0, cuts, caps[pi], probe_caches[pi]
-        )
-        return pi, rel + base, sizes, hashes, comps
-
-    cap_bytes = max(p.max_size for p in params_list) + _BLOCK
-    ring = bytearray(cap_bytes)
+    # preallocated carry buffer: readinto appends after the carried
+    # tail — no per-block bytes concatenation
+    ring = bytearray(max(p.max_size for p in params_list) + _BLOCK)
     view = memoryview(ring)
-    filled = 0
+    filled = 0  # valid bytes in ring[0:filled]
     base = 0  # file offset of ring[0]
-    starts = [0] * n_p  # per-param absolute offset of current chunk start
+    starts = [0] * len(params_list)  # absolute start of each pending chunk
     with open(path, "rb") as f:
-        while True:
-            nread = f.readinto(view[filled : filled + _BLOCK])
-            if not nread:
-                break
+        while nread := f.readinto(view[filled : filled + _BLOCK]):
             filled += nread
             buf = np.frombuffer(view[:filled], dtype=np.uint8)
-            cand = _boundary_candidates(buf, base_p)  # ONE scan, all params
-            for i, p in enumerate(params_list):
-                prev = starts[i] - base
-                cuts = _cuts_from_candidates(filled, cand, prev, p)
-                if cuts:
-                    yield emit(i, buf, prev, cuts, base)
-                    starts[i] = base + cuts[-1]
+            if fused:  # one parameterization: its chunk starts at buf[0]
+                cut_lists = [
+                    native.fused_cuts(
+                        buf, table, base_p.mask_bits, base_p.min_size,
+                        base_p.max_size, base_p.scheme, base_p.window,
+                        int(_MIX),
+                    )
+                ]
+            else:
+                cand = _boundary_candidates(buf, base_p)  # ONE scan, all params
+                cut_lists = [
+                    _cuts_from_candidates(filled, cand, s - base, p)
+                    for s, p in zip(starts, params_list)
+                ]
+            for i, cuts in enumerate(cut_lists):
+                if len(cuts):
+                    yield i, buf, starts[i] - base, cuts, base
+                    starts[i] = base + int(cuts[-1])
+            # drop bytes every param has consumed
             keep_from = min(starts) - base
             if keep_from:
                 rest = filled - keep_from
@@ -664,118 +433,213 @@ def _iter_block_arrays_multi(
                 base += keep_from
     if filled:
         buf = np.frombuffer(view[:filled], dtype=np.uint8)
-        for i in range(n_p):
-            if starts[i] < base + filled:
-                yield emit(i, buf, starts[i] - base, [filled], base)
+        for i, s in enumerate(starts):
+            if s < base + filled:
+                yield i, buf, s - base, [filled], base
 
 
-def _arrays_batch_multi(
-    pi: int, file_idx: int, path: str, seq0: int, acc: list[tuple],
-    schema: pa.Schema,
+def _emit_chunk_cols(
+    buf: np.ndarray,
+    start0: int,
+    cuts,
+    base: int,
+    p: ChunkerParams,
+    hash_scheme: str,
+    probe_cache: dict[int, int],
+    keep_data: bool,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray, list[bytes] | None]:
+    """The chunker's one emitter: a FINAL cut list over ``buf`` (chunks
+    ``[start0, cuts[0])``, ``[cuts[0], cuts[1])``, …; ``buf[0]`` is file
+    offset ``base``) → (file offsets, sizes, hashes, compressed sizes,
+    chunk bytes when ``keep_data`` else None).
+
+    With a native identity hash (``hash_scheme`` is the driver's choice;
+    callers have resolved it on this node through ``_hash64_fn``, which
+    refuses a node without the kernels) and an lz4-family probe, or none
+    (``compress_probe_bytes=0``), hash and probe each run as one native
+    pass with no per-chunk Python objects. Otherwise — no C compiler, or
+    ``compress_scheme="zlib1"`` — the per-chunk ``_hash64_fn`` /
+    ``_compressed_size`` loop runs over the same cuts. Both give the same
+    values. ``probe_cache`` (per file and parameterization): hash → size,
+    first occurrence wins, capped at 1M entries; identical bytes probe to
+    identical sizes, so it changes no value."""
+    cuts_a = np.asarray(cuts, dtype=np.int64)
+    n = cuts_a.shape[0]
+    rel = np.empty(n, dtype=np.int64)
+    rel[0] = start0
+    rel[1:] = cuts_a[:-1]
+    sizes = cuts_a - rel
+    data = None
+    if keep_data:
+        data = [buf[a:b].tobytes() for a, b in zip(rel.tolist(), cuts_a.tolist())]
+    probe = p.compress_probe_bytes
+    if hash_scheme not in _NATIVE_SCHEMES or (
+        probe != 0 and p.compress_scheme not in ("auto", "lz4")
+    ):
+        hash64 = _hash64_fn(hash_scheme)
+        hashes = np.empty(n, dtype=np.int64)
+        comps = np.empty(n, dtype=np.int64)
+        chunks = data if data is not None else (
+            buf[a:b].tobytes() for a, b in zip(rel.tolist(), cuts_a.tolist())
+        )
+        for j, chunk in enumerate(chunks):
+            h = hash64(chunk)
+            comp = probe_cache.get(h)
+            if comp is None:
+                comp = _compressed_size(chunk, probe, p.compress_scheme)
+                if len(probe_cache) < 1_000_000:
+                    probe_cache[h] = comp
+            hashes[j] = h
+            comps[j] = comp
+        return rel + base, sizes, hashes, comps, data
+    if hash_scheme == "xxh3-64":
+        hashes = native.chunk_hashes3(buf, cuts_a, start0)
+    else:
+        hashes = native.chunk_hashes(buf, cuts_a, start0, 42)
+    if probe == 0:
+        return rel + base, sizes, hashes, sizes.copy(), data
+    cap = -1 if probe is None else int(probe)
+    uniq, first, inv = np.unique(hashes, return_index=True, return_inverse=True)
+    uniq_l = uniq.tolist()
+    comps_u = np.empty(uniq.shape[0], dtype=np.int64)
+    need: list[int] = []
+    for j, h in enumerate(uniq_l):
+        c = probe_cache.get(h)
+        if c is None:
+            need.append(j)
+        else:
+            comps_u[j] = c
+    if need:
+        need_a = np.asarray(need, dtype=np.int64)
+        idx = first[need_a].astype(np.int64)
+        probed = native.chunk_probes(buf, rel, sizes, idx, cap)
+        comps_u[need_a] = probed
+        if len(probe_cache) < 1_000_000:
+            for j, c in zip(need, probed.tolist()):
+                probe_cache[uniq_l[j]] = c
+    return rel + base, sizes, hashes, comps_u[inv], data
+
+
+def file_chunk_arrays(
+    path: str, p: ChunkerParams
+) -> tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]:
+    """Whole-file chunk columns (offsets, sizes, hashes, compressed): an
+    executor's per-file work as one call, on either platform (what
+    bench.py's chunker metric measures)."""
+    cache: dict[int, int] = {}
+    parts = [
+        _emit_chunk_cols(buf, start0, cuts, base, p, IDENTITY_HASH, cache, False)[:4]
+        for _, buf, start0, cuts, base in _iter_block_cuts(path, [p])
+    ]
+    if not parts:
+        z = np.empty(0, dtype=np.int64)
+        return z, z.copy(), z.copy(), z.copy()
+    offs, sizes, hashes, comps = (np.concatenate(c) for c in zip(*parts))
+    return offs, sizes, hashes, comps
+
+
+# CHUNK_SCHEMA rows tagged with the parameterization that cut them.
+_MULTI_SCHEMA = pa.schema([pa.field("param_idx", pa.int64()), *CHUNK_SCHEMA])
+
+
+def _chunk_batch(
+    schema: pa.Schema, pi: int, file_idx: int, path: str, seq0: int, acc: list[tuple]
 ) -> pa.RecordBatch:
-    offs = np.concatenate([a[0] for a in acc])
-    sizes = np.concatenate([a[1] for a in acc])
-    hashes = np.concatenate([a[2] for a in acc])
-    comps = np.concatenate([a[3] for a in acc])
-    n = offs.shape[0]
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(np.full(n, pi, dtype=np.int64)),
-            pa.array(np.full(n, file_idx, dtype=np.int64)),
-            pa.repeat(path, n),
-            pa.array(np.arange(seq0, seq0 + n, dtype=np.int64)),
-            pa.array(offs),
-            pa.array(hashes),
-            pa.array(sizes),
-            pa.array(comps),
-            pa.nulls(n, pa.binary()),
-        ],
-        schema=schema,
+    """One output batch from accumulated emitter columns; the int64
+    arrays are handed to Arrow zero-copy."""
+    offs, sizes, hashes, comps = (
+        np.concatenate([a[k] for a in acc]) for k in range(4)
     )
+    n = offs.shape[0]
+    if acc[0][4] is None:
+        data = pa.nulls(n, pa.binary())
+    else:
+        data = pa.array([d for a in acc for d in a[4]], pa.binary())
+    cols = [
+        pa.array(np.full(n, file_idx, dtype=np.int64)),
+        pa.repeat(path, n),
+        pa.array(np.arange(seq0, seq0 + n, dtype=np.int64)),
+        pa.array(offs),
+        pa.array(hashes),
+        pa.array(sizes),
+        pa.array(comps),
+        data,
+    ]
+    if schema.names[0] == "param_idx":
+        cols.insert(0, pa.array(np.full(n, pi, dtype=np.int64)))
+    return pa.RecordBatch.from_arrays(cols, schema=schema)
 
 
-def make_chunk_partition_fn_multi(params_list: list[ChunkerParams], keep_data: bool):
-    """mapInArrow closure emitting CHUNK_SCHEMA rows + ``param_idx`` for
-    every parameterization from one shared file scan."""
-    schema = pa.schema([pa.field("param_idx", pa.int64()), *CHUNK_SCHEMA])
+def _unit_block(row: dict) -> list[tuple[int, np.ndarray, int, np.ndarray, int]]:
+    """A split-path work unit as one ``_iter_block_cuts``-shaped block:
+    the unit's bytes and its file-absolute cuts rebased onto them."""
+    ustart = row["ustart"]
+    with open(row["path"], "rb") as f:
+        f.seek(ustart)
+        buf = np.frombuffer(f.read(row["uend"] - ustart), dtype=np.uint8)
+    return [(0, buf, 0, np.asarray(row["cuts"], dtype=np.int64) - ustart, ustart)]
 
+
+def _chunk_partition_fn(
+    params_list: list[ChunkerParams], keep_data: bool, schema: pa.Schema
+):
+    """The chunker's one mapInArrow closure. Input rows are files
+    ``(file_idx, path)``, streamed through ``_iter_block_cuts``, or the
+    split path's work units ``(file_idx, path, begin_seq, ustart, uend,
+    cuts)``; every cut list goes through ``_emit_chunk_cols``. Output
+    rows follow ``schema`` (``param_idx`` first when it has one); ``seq``
+    counts per (file, parameterization) from the unit's ``begin_seq`` or
+    0, and a batch is yielded per parameterization once it holds 4,096
+    rows."""
     hash_scheme = IDENTITY_HASH  # driver's choice, enforced executor-side
 
     def chunk_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _hash64 = _hash64_fn(hash_scheme)
-        # fused native path (see make_chunk_partition_fn): per-param
-        # probe schemes must all be lz4-family (probe=0 sides qualify
-        # via cap==0 short-circuit, scheme string notwithstanding).
-        # EVERY param needs enforce_max — the array iterator's carry
-        # buffer is sized max_size + block, so an unbounded pending
-        # region would silently truncate (reviewed bug, r11)
-        fast = (
-            not keep_data
-            and hash_scheme == IDENTITY_HASH
-            and hash_scheme in _NATIVE_SCHEMES
-            and native.available()
-            and all(
-                p.enforce_max
-                and (
-                    p.compress_probe_bytes == 0
-                    or p.compress_scheme in ("auto", "lz4")
-                )
-                for p in params_list
-            )
-        )
+        # a node that cannot compute the driver's scheme fails loudly
+        # here: mixing identity hashes in one table would corrupt every
+        # dedup count downstream
+        _hash64_fn(hash_scheme)
         for batch in batches:
-            for file_idx, path in zip(
-                batch.column("file_idx").to_pylist(), batch.column("path").to_pylist()
-            ):
-                if fast:
-                    seqs = [0] * len(params_list)
-                    accs: list[list] = [[] for _ in params_list]
-                    naccs = [0] * len(params_list)
-                    for pi, offs, sizes, hashes, comps in (
-                        _iter_block_arrays_multi(path, params_list)
-                    ):
-                        accs[pi].append((offs, sizes, hashes, comps))
-                        naccs[pi] += offs.shape[0]
-                        if naccs[pi] >= 4096:
-                            yield _arrays_batch_multi(
-                                pi, file_idx, path, seqs[pi], accs[pi], schema
-                            )
-                            seqs[pi] += naccs[pi]
-                            accs[pi], naccs[pi] = [], 0
-                    for pi in range(len(params_list)):
-                        if naccs[pi]:
-                            yield _arrays_batch_multi(
-                                pi, file_idx, path, seqs[pi], accs[pi], schema
-                            )
-                    continue
-                rows: dict[str, list] = {k: [] for k in schema.names}
-                seqs = [0] * len(params_list)
-                probe_caches: list[dict[int, int]] = [{} for _ in params_list]
-                for pi, offset, chunk in _iter_file_chunks_multi(path, params_list):
-                    p = params_list[pi]
-                    h = _hash64(chunk)
-                    comp = probe_caches[pi].get(h)
-                    if comp is None:
-                        comp = _compressed_size(chunk, p.compress_probe_bytes, p.compress_scheme)
-                        if len(probe_caches[pi]) < 1_000_000:
-                            probe_caches[pi][h] = comp
-                    rows["param_idx"].append(pi)
-                    rows["file_idx"].append(file_idx)
-                    rows["path"].append(path)
-                    rows["seq"].append(seqs[pi])
-                    rows["offset"].append(offset)
-                    rows["hash"].append(h)
-                    rows["size"].append(len(chunk))
-                    rows["compressed"].append(comp)
-                    rows["data"].append(chunk if keep_data else None)
-                    seqs[pi] += 1
-                    if len(rows["seq"]) >= 4096:
-                        yield pa.RecordBatch.from_pydict(rows, schema=schema)
-                        rows = {k: [] for k in schema.names}
-                if rows["seq"]:
-                    yield pa.RecordBatch.from_pydict(rows, schema=schema)
+            units = "cuts" in batch.schema.names
+            for row in batch.to_pylist():
+                file_idx, path = row["file_idx"], row["path"]
+                if units:
+                    blocks = _unit_block(row)
+                else:
+                    blocks = _iter_block_cuts(path, params_list)
+                # identical bytes compress to the identical size, so repeat
+                # chunks within a file skip the probe (self-similar files
+                # are the dedup estimator's whole subject)
+                caches: list[dict[int, int]] = [{} for _ in params_list]
+                seqs = [row.get("begin_seq", 0)] * len(params_list)
+                accs: list[list[tuple]] = [[] for _ in params_list]
+                counts = [0] * len(params_list)
+                for pi, buf, start0, cuts, base in blocks:
+                    cols = _emit_chunk_cols(
+                        buf, start0, cuts, base, params_list[pi], hash_scheme,
+                        caches[pi], keep_data,
+                    )
+                    accs[pi].append(cols)
+                    counts[pi] += cols[1].shape[0]
+                    if counts[pi] >= 4096:
+                        yield _chunk_batch(
+                            schema, pi, file_idx, path, seqs[pi], accs[pi]
+                        )
+                        seqs[pi] += counts[pi]
+                        accs[pi], counts[pi] = [], 0
+                for pi, acc in enumerate(accs):
+                    if acc:
+                        yield _chunk_batch(schema, pi, file_idx, path, seqs[pi], acc)
 
     return chunk_partition
+
+
+def make_chunk_partition_fn(p: ChunkerParams, keep_data: bool):
+    """mapInArrow closure: (file_idx, path) batches → CHUNK_SCHEMA
+    chunk-row batches.
+
+    Shared by the batch scan (chunk_files) and the streaming source
+    (streaming/incremental.py) — the operator itself is stateless."""
+    return _chunk_partition_fn([p], keep_data, CHUNK_SCHEMA)
 
 
 def _file_list_frame(spark: SparkSession, files: list[tuple[int, str]]) -> DataFrame:
@@ -803,16 +667,14 @@ def chunk_files_multi(
     store_data: bool = False,
 ) -> DataFrame:
     """files × params → chunk rows with ``param_idx``, ONE read per file
-    (see ``_iter_file_chunks_multi``). All parameterizations must be
-    ``boundary_compatible``."""
-    files = _file_list_frame(spark, list(enumerate(paths)))
-    chunks = files.mapInArrow(
-        make_chunk_partition_fn_multi(params_list, store_data),
-        "param_idx long, " + CHUNK_DDL,
-    )
-    if not store_data:
-        chunks = chunks.drop("data")
-    return chunks
+    (see ``_iter_block_cuts``). All parameterizations must be
+    ``boundary_compatible``. The default estimate runs two chunker
+    parameterizations (reference: gearhash store + xet-core chunker,
+    src/lib.rs:16-33 + src/xet.rs:10-39) as two sequential passes; the
+    shared scan halves corpus I/O. Files the ring cannot serve (see
+    ``_chunk_frame``) take the single-parameterization split path once
+    per parameterization."""
+    return _chunk_frame(spark, paths, params_list, store_data)
 
 
 def _compressed_size(chunk: bytes, probe: int | None, scheme: str = "auto") -> int:
@@ -860,7 +722,7 @@ def _compressed_size(chunk: bytes, probe: int | None, scheme: str = "auto") -> i
 # (plans/chunk_index.py manifest pin).
 IDENTITY_HASH = "xxh3-64" if native.available() else "sha1-64"
 
-# schemes the fused native array pipeline can compute
+# schemes the native hash passes can compute
 _NATIVE_SCHEMES = ("xxh3-64", "xxh64")
 
 
@@ -907,101 +769,6 @@ def _hash64_fn(scheme: str):
 _hash64 = _hash64_fn(IDENTITY_HASH)
 
 
-def _arrays_batch(
-    file_idx: int, path: str, seq0: int, acc: list[tuple]
-) -> pa.RecordBatch:
-    """CHUNK_SCHEMA RecordBatch straight from accumulated block
-    columns — int64 arrays are handed to Arrow zero-copy."""
-    offs = np.concatenate([a[0] for a in acc])
-    sizes = np.concatenate([a[1] for a in acc])
-    hashes = np.concatenate([a[2] for a in acc])
-    comps = np.concatenate([a[3] for a in acc])
-    n = offs.shape[0]
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(np.full(n, file_idx, dtype=np.int64)),
-            pa.repeat(path, n),
-            pa.array(np.arange(seq0, seq0 + n, dtype=np.int64)),
-            pa.array(offs),
-            pa.array(hashes),
-            pa.array(sizes),
-            pa.array(comps),
-            pa.nulls(n, pa.binary()),
-        ],
-        schema=CHUNK_SCHEMA,
-    )
-
-
-def make_chunk_partition_fn(p: ChunkerParams, keep_data: bool):
-    """mapInArrow closure: (file_idx, path) batches → chunk-row batches.
-
-    Shared by the batch scan (chunk_files) and the streaming source
-    (streaming/incremental.py) — the operator itself is stateless."""
-
-    hash_scheme = IDENTITY_HASH  # driver's choice, enforced executor-side
-
-    def chunk_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _hash64 = _hash64_fn(hash_scheme)
-        # fused native path: boundary scan + cut slicing + hash + probe
-        # all emit preallocated arrays per block — no per-chunk Python
-        # objects (bit-identical to the per-chunk path; tests pin it).
-        # hash_scheme is the DRIVER's cluster-wide choice: an executor
-        # may only take the fused fast path when its own scheme matches
-        # the driver's (mixing fast-path xxh3-64 with a sha1-64 cluster
-        # scheme would corrupt every dedup count downstream)
-        fast = (
-            not keep_data
-            and hash_scheme == IDENTITY_HASH
-            and _fast_arrays_ok(p)
-        )
-        for batch in batches:
-            for file_idx, path in zip(
-                batch.column("file_idx").to_pylist(), batch.column("path").to_pylist()
-            ):
-                if fast:
-                    seq0 = 0
-                    acc: list[tuple] = []
-                    nacc = 0
-                    for cols in _iter_block_arrays(path, p):
-                        acc.append(cols)
-                        nacc += cols[0].shape[0]
-                        if nacc >= 4096:
-                            yield _arrays_batch(file_idx, path, seq0, acc)
-                            seq0 += nacc
-                            acc, nacc = [], 0
-                    if nacc:
-                        yield _arrays_batch(file_idx, path, seq0, acc)
-                    continue
-                rows: dict[str, list] = {k: [] for k in CHUNK_SCHEMA.names}
-                # identical bytes compress to the identical size, so repeat
-                # chunks within a file skip the probe (self-similar files —
-                # the dedup estimator's whole subject — are the common case).
-                # Bounded: cleared per file and capped.
-                probe_cache: dict[int, int] = {}
-                for seq, (offset, chunk) in enumerate(_iter_file_chunks(path, p)):
-                    h = _hash64(chunk)
-                    comp = probe_cache.get(h)
-                    if comp is None:
-                        comp = _compressed_size(chunk, p.compress_probe_bytes, p.compress_scheme)
-                        if len(probe_cache) < 1_000_000:
-                            probe_cache[h] = comp
-                    rows["file_idx"].append(file_idx)
-                    rows["path"].append(path)
-                    rows["seq"].append(seq)
-                    rows["offset"].append(offset)
-                    rows["hash"].append(h)
-                    rows["size"].append(len(chunk))
-                    rows["compressed"].append(comp)
-                    rows["data"].append(chunk if keep_data else None)
-                    if len(rows["seq"]) >= 4096:
-                        yield pa.RecordBatch.from_pydict(rows, schema=CHUNK_SCHEMA)
-                        rows = {k: [] for k in CHUNK_SCHEMA.names}
-                if rows["seq"]:
-                    yield pa.RecordBatch.from_pydict(rows, schema=CHUNK_SCHEMA)
-
-    return chunk_partition
-
-
 # ---- intra-file parallel chunking (beyond reference: one task per SPLIT) --
 #
 # One-task-per-file wall-clock is bounded by the largest file (the
@@ -1012,7 +779,10 @@ def make_chunk_partition_fn(p: ChunkerParams, keep_data: bool):
 # BIT-IDENTICAL candidates to the sequential scan. Only the min/max
 # cut-selection pass is sequential, and it runs over the candidate list
 # (~1 per 64 KiB: a 1 TB file is ~16M ints), not the bytes. Phase 2
-# re-reads cut-aligned ranges in parallel and emits chunk rows.
+# re-reads cut-aligned ranges in parallel and emits chunk rows through
+# the per-file path's closure.
+
+_CAND_SCHEMA = pa.schema([("file_idx", pa.int64()), ("pos", pa.int64())])
 
 
 def _split_scan_fn(p: ChunkerParams):
@@ -1021,8 +791,8 @@ def _split_scan_fn(p: ChunkerParams):
 
     def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for batch in batches:
-            fi_out: list[int] = []
-            pos_out: list[int] = []
+            fi_out: list[np.ndarray] = []
+            pos_out: list[np.ndarray] = []
             for file_idx, path, start, end in zip(
                 batch.column("file_idx").to_pylist(),
                 batch.column("path").to_pylist(),
@@ -1036,78 +806,15 @@ def _split_scan_fn(p: ChunkerParams):
                 buf = np.frombuffer(data, dtype=np.uint8)
                 cand = _boundary_candidates(buf, p) + ctx
                 cand = cand[(cand > start) & (cand <= end)]
-                fi_out.extend([file_idx] * len(cand))
-                pos_out.extend(int(c) for c in cand)
-            yield pa.RecordBatch.from_pydict(
-                {"file_idx": fi_out, "pos": pos_out},
-                schema=pa.schema([("file_idx", pa.int64()), ("pos", pa.int64())]),
+                fi_out.append(np.full(cand.shape[0], file_idx, dtype=np.int64))
+                pos_out.append(cand)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    pa.array(np.concatenate(fi_out or [np.empty(0, np.int64)])),
+                    pa.array(np.concatenate(pos_out or [np.empty(0, np.int64)])),
+                ],
+                schema=_CAND_SCHEMA,
             )
-
-    return fn
-
-
-def _emit_units_fn(p: ChunkerParams, keep_data: bool):
-    """Phase 2 mapInArrow closure: work-unit rows (file_idx, path,
-    begin_seq, ustart, uend, cuts) → chunk rows. Shares the hash/probe
-    pipeline with the per-file path (including the per-unit probe cache)."""
-    hash_scheme = IDENTITY_HASH  # driver's choice, enforced executor-side
-
-    def fn(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        _hash64 = _hash64_fn(hash_scheme)
-        fast = not keep_data and hash_scheme == "xxh64" and _fast_arrays_ok(p)
-        cap = (
-            -1
-            if p.compress_probe_bytes is None
-            else int(p.compress_probe_bytes)
-        )
-        for batch in batches:
-            for file_idx, path, begin_seq, ustart, uend, unit_cuts in zip(
-                batch.column("file_idx").to_pylist(),
-                batch.column("path").to_pylist(),
-                batch.column("begin_seq").to_pylist(),
-                batch.column("ustart").to_pylist(),
-                batch.column("uend").to_pylist(),
-                batch.column("cuts").to_pylist(),
-            ):
-                with open(path, "rb") as f:
-                    f.seek(ustart)
-                    data = f.read(uend - ustart)
-                if fast:
-                    # fused emit over the unit's explicit cut list (cuts
-                    # are file-absolute; rebase to the unit buffer)
-                    buf = np.frombuffer(data, dtype=np.uint8)
-                    cuts_a = (
-                        np.asarray(unit_cuts, dtype=np.int64) - ustart
-                    )
-                    rel, sizes, hashes, comps = _emit_chunk_cols(
-                        buf, 0, cuts_a, cap
-                    )
-                    yield _arrays_batch(
-                        file_idx, path, begin_seq,
-                        [(rel + ustart, sizes, hashes, comps)],
-                    )
-                    continue
-                rows: dict[str, list] = {k: [] for k in CHUNK_SCHEMA.names}
-                probe_cache: dict[int, int] = {}
-                prev = ustart
-                for seq_off, c in enumerate(unit_cuts):
-                    chunk = data[prev - ustart : c - ustart]
-                    h = _hash64(chunk)
-                    comp = probe_cache.get(h)
-                    if comp is None:
-                        comp = _compressed_size(chunk, p.compress_probe_bytes, p.compress_scheme)
-                        probe_cache[h] = comp
-                    rows["file_idx"].append(file_idx)
-                    rows["path"].append(path)
-                    rows["seq"].append(begin_seq + seq_off)
-                    rows["offset"].append(prev)
-                    rows["hash"].append(h)
-                    rows["size"].append(len(chunk))
-                    rows["compressed"].append(comp)
-                    rows["data"].append(chunk if keep_data else None)
-                    prev = c
-                if rows["seq"]:
-                    yield pa.RecordBatch.from_pydict(rows, schema=CHUNK_SCHEMA)
 
     return fn
 
@@ -1121,7 +828,8 @@ def _units_from_candidates_fn(
     64 KiB — a 1 TB file is ~16M int64s ≈ 128 MB in one task), so no
     candidate ever reaches the driver and a directory of many TB-scale
     files selects cuts for every file in parallel. ``meta`` maps
-    file_idx → (path, size); it is O(#large files), tiny by definition."""
+    file_idx → (path, size); it is O(#large files), tiny by definition.
+    An empty file has no chunk and so no unit."""
     import pandas as pd
 
     def fn(pdf: "pd.DataFrame") -> "pd.DataFrame":
@@ -1130,7 +838,7 @@ def _units_from_candidates_fn(
         pos = pdf["pos"].to_numpy(dtype=np.int64)
         cands = np.sort(pos[pos >= 0])  # drop the no-candidate sentinel
         cuts = _cuts_from_candidates(size, cands, 0, params)
-        if not cuts or cuts[-1] != size:
+        if size and (not cuts or cuts[-1] != size):
             cuts = [*cuts, size]
         units: list[tuple[int, str, int, int, int, list[int]]] = []
         begin_seq, ustart, ucuts = 0, 0, []
@@ -1168,7 +876,7 @@ def _parallel_chunks(
             splits.append((idx, path, s, min(s + split_bytes, size)))
     splits_df = spark.createDataFrame(
         splits, "file_idx long, path string, start long, end long"
-    ).repartition(len(splits))
+    ).repartition(max(len(splits), 1))
     cand_df = splits_df.mapInArrow(
         _split_scan_fn(params), "file_idx long, pos long"
     )
@@ -1187,10 +895,53 @@ def _parallel_chunks(
         )
         .repartition(max(len(splits), 1))
     )
-    chunks = units_df.mapInArrow(_emit_units_fn(params, store_data), CHUNK_DDL)
+    chunks = units_df.mapInArrow(
+        _chunk_partition_fn([params], store_data, CHUNK_SCHEMA), CHUNK_DDL
+    )
     if not store_data:
         chunks = chunks.drop("data")
     return chunks
+
+
+def _chunk_frame(
+    spark: SparkSession,
+    paths: list[str],
+    params_list: list[ChunkerParams],
+    store_data: bool,
+    parallel_threshold: int | None = None,
+    split_bytes: int = 256 * 1024 * 1024,
+) -> DataFrame:
+    """The chunker's one file-size dispatch: chunk rows with
+    ``param_idx`` for every file of ``paths`` (``file_idx`` is its
+    position there) under every parameterization of ``params_list``.
+
+    A file takes one task through the shared-scan ring when it can:
+    below ``parallel_threshold`` (default ``PARALLEL_THRESHOLD``, read
+    now) and under max enforcement, which bounds the ring's carry. The
+    others take the split path: one call per parameterization covers
+    all of them."""
+    threshold = PARALLEL_THRESHOLD if parallel_threshold is None else parallel_threshold
+    bounded = all(p.enforce_max for p in params_list)
+    small: list[tuple[int, str]] = []
+    large: list[tuple[int, str]] = []
+    for i, path in enumerate(paths):
+        fits = bounded and os.path.getsize(path) < threshold
+        (small if fits else large).append((i, path))
+    parts = []
+    if small or not large:
+        part = _file_list_frame(spark, small).mapInArrow(
+            _chunk_partition_fn(params_list, store_data, _MULTI_SCHEMA),
+            "param_idx long, " + CHUNK_DDL,
+        )
+        parts.append(part if store_data else part.drop("data"))
+    if large:
+        for pi, p in enumerate(params_list):
+            part = _parallel_chunks(spark, large, p, split_bytes, store_data)
+            parts.append(part.select(F.lit(pi).cast("long").alias("param_idx"), "*"))
+    out = parts[0]
+    for extra in parts[1:]:
+        out = out.unionByName(extra)
+    return out
 
 
 def chunk_file_parallel(
@@ -1209,8 +960,6 @@ def chunk_file_parallel(
     1 TB file's selection task holds ~128 MB — nothing reaches the
     driver); phase 2 re-reads cut-aligned work units in parallel.
     """
-    if os.path.getsize(path) == 0:
-        return chunk_files(spark, [path], params=params, store_data=store_data)
     return _parallel_chunks(
         spark, [(file_idx, path)], params, split_bytes, store_data
     )
@@ -1221,25 +970,17 @@ def chunk_files_auto(
     paths: list[str],
     params: ChunkerParams = ChunkerParams(),
     store_data: bool = False,
-    parallel_threshold: int = PARALLEL_THRESHOLD,
+    parallel_threshold: int | None = None,
     split_bytes: int = 256 * 1024 * 1024,
 ) -> DataFrame:
     """Task-per-file for ordinary files; intra-file parallel chunking for
-    files over ``parallel_threshold`` — the dispatcher ``estimate`` uses,
-    so one huge file no longer pins the whole job to a single core. All
-    large files share one phase-1 and one phase-2 job."""
-    small = [(i, p) for i, p in enumerate(paths) if os.path.getsize(p) < parallel_threshold]
-    large = [(i, p) for i, p in enumerate(paths) if os.path.getsize(p) >= parallel_threshold]
-    out = None
-    if small or not large:
-        files = _file_list_frame(spark, small)
-        out = files.mapInArrow(make_chunk_partition_fn(params, store_data), CHUNK_DDL)
-        if not store_data:
-            out = out.drop("data")
-    if large:
-        part = _parallel_chunks(spark, large, params, split_bytes, store_data)
-        out = part if out is None else out.unionByName(part)
-    return out
+    files of ``parallel_threshold`` bytes or more (default
+    ``PARALLEL_THRESHOLD``) — the dispatcher ``estimate`` uses, so one
+    huge file no longer pins the whole job to a single core. All large
+    files share one phase-1 and one phase-2 job."""
+    return _chunk_frame(
+        spark, paths, [params], store_data, parallel_threshold, split_bytes
+    ).drop("param_idx")
 
 
 def chunk_files(

@@ -19,14 +19,12 @@ zero-filled pages). For estimates where exact uniqueness is unnecessary,
 
 from __future__ import annotations
 
-import os
 from dataclasses import replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from dataset_dedupe_estimator_spark.operators.chunker import (
-    PARALLEL_THRESHOLD,
     ChunkerParams,
     XET_PARAMS,
     boundary_compatible,
@@ -154,42 +152,28 @@ def estimate_groups(
 
     With xet, when both parameterizations share the boundary-candidate
     function (the default: min/max/probe differ, scheme/seed/mask
-    identical), small files are read and boundary-scanned ONCE for both
-    — half the I/O of the reference's two sequential passes. Files large
-    enough for intra-file parallel chunking, and incompatible params, take
-    one pass per param (the split machinery is single-param), unioned
-    into the same aggregate. The xet side's zlib probe is skipped
+    identical), ONE chunker call reads and boundary-scans each file once
+    for both — half the I/O of the reference's two sequential passes.
+    Incompatible params take one call each, unioned into the same
+    aggregate. The chunker decides which files are large enough for
+    intra-file parallel chunking. The xet side's zlib probe is skipped
     (probe=0): its ``compressed`` column is never consumed, and the probe
     is ~30% of chunker CPU at full fidelity.
     """
     paths = [p for g in groups for p in g]
     group_of = [i for i, g in enumerate(groups) for _ in g]
     prms = [params] + ([replace(xet_params, compress_probe_bytes=0)] if with_xet else [])
-    shared = len(prms) == 2 and boundary_compatible(params, xet_params)
-    # shared scan for small files; per-param passes for the rest
-    small, rest = [], []
-    for i, p in enumerate(paths):
-        fits = shared and os.path.getsize(p) < PARALLEL_THRESHOLD
-        (small if fits else rest).append(i)
-
-    def tagged(chunks: DataFrame, idx: list[int]) -> DataFrame:
-        # file_idx enumerates the sub-list the chunker received; an empty
-        # sub-list yields no rows to look up
-        at = (F.col("file_idx") + 1).cast("int")
-        grp = F.element_at(F.array(*[F.lit(group_of[i]) for i in idx]), at)
-        return chunks.select(grp.alias("grp"), "*")
-
-    parts = []
-    if shared and (small or not rest):
-        chunks = chunk_files_multi(spark, [paths[i] for i in small], prms)
-        parts.append(tagged(chunks, small))
-    if rest or not shared:
-        for k, prm in enumerate(prms):
-            chunks = chunk_files_auto(spark, [paths[i] for i in rest], params=prm)
-            parts.append(tagged(chunks, rest).select(F.lit(k).alias("param_idx"), "*"))
-    chunks = parts[0]
-    for extra in parts[1:]:
-        chunks = chunks.unionByName(extra)
+    shared = not with_xet or boundary_compatible(params, xet_params)
+    chunks = None
+    for k, plist in enumerate([prms] if shared else [[p] for p in prms]):
+        part = chunk_files_multi(spark, paths, plist)
+        if k:
+            part = part.withColumn("param_idx", F.lit(k).cast("long"))
+        chunks = part if chunks is None else chunks.unionByName(part)
+    # file_idx is the file's position in ``paths``
+    at = (F.col("file_idx") + 1).cast("int")
+    grp = F.element_at(F.array(*[F.lit(g) for g in group_of]), at)
+    chunks = chunks.select(grp.alias("grp"), "*")
     rows = {
         (r.grp, r.param_idx): r
         for r in chunk_stats(chunks, by=("grp", "param_idx")).collect()

@@ -4160,7 +4160,12 @@ def upsert_pruned(
 
         updates_n = t.norm(ups)
         _enforce_constraints(updates_n, _active_constraints(t.entries))
-        keys_side = F.broadcast(kdf) if exact else kdf
+        # exact mode holds the distinct keys already: broadcast them as a
+        # local relation instead of running the distinct aggregate again
+        keys_side = (
+            F.broadcast(spark.createDataFrame(key_rows, kdf.schema))
+            if exact else kdf
+        )
         return _Rewrite(
             cand_files,
             lambda cand: _kept_rows(

@@ -12,9 +12,9 @@ import pytest
 from dataset_dedupe_estimator_spark.operators.chunker import (
     ChunkerParams,
     _hash64,
-    _iter_file_chunks,
     chunk_bytes,
     chunk_files,
+    file_chunk_arrays,
 )
 
 RNG = np.random.default_rng(7)
@@ -53,10 +53,16 @@ def test_content_defined_resync():
     assert shared / len(orig) > 0.8
 
 
+def _streamed(path, params):
+    """(offset, size) per chunk from the streaming file pipeline."""
+    offs, sizes, _, _ = file_chunk_arrays(str(path), params)
+    return list(zip(offs.tolist(), sizes.tolist()))
+
+
 def test_streaming_matches_in_memory(tmp_path):
     path = tmp_path / "blob.bin"
     path.write_bytes(DATA)
-    streamed = [(o, len(c)) for o, c in _iter_file_chunks(str(path), P)]
+    streamed = _streamed(path, P)
     assert streamed == chunk_bytes(DATA)
 
 
@@ -65,7 +71,7 @@ def test_streaming_crosses_block_boundaries(tmp_path):
     big = (DATA * 3)[: 10 * 1024 * 1024]
     path = tmp_path / "big.bin"
     path.write_bytes(big)
-    streamed = [(o, len(c)) for o, c in _iter_file_chunks(str(path), P)]
+    streamed = _streamed(path, P)
     assert streamed == chunk_bytes(big)
     assert sum(s for _, s in streamed) == len(big)
 
@@ -117,7 +123,7 @@ def test_gearhash_streaming_matches_in_memory(tmp_path):
     big = (DATA * 3)[: 10 * 1024 * 1024]
     path = tmp_path / "gear.bin"
     path.write_bytes(big)
-    streamed = [(o, len(c)) for o, c in _iter_file_chunks(str(path), GEAR_P)]
+    streamed = _streamed(path, GEAR_P)
     assert streamed == chunk_bytes(big, GEAR_P)
     assert sum(s for _, s in streamed) == len(big)
 
@@ -203,7 +209,7 @@ def test_streaming_refuses_unbounded_pending(tmp_path):
     path.write_bytes(DATA[:100_000])
     p = ChunkerParams(scheme="gear", enforce_max=False)
     with pytest.raises(ValueError, match="enforce_max"):
-        list(_iter_file_chunks(str(path), p))
+        file_chunk_arrays(str(path), p)
 
 
 def test_gearhash_coverage_and_bounds():
@@ -376,24 +382,30 @@ def _native_available() -> bool:
 
 
 class TestFusedArrayPipeline:
-    """The r11 fused native block pipeline (`_iter_block_arrays` /
-    `file_chunk_arrays`: boundary scan + min/max cut selection with
-    min_size skip-ahead + xxh64 + lz4 probe, all emitting arrays) must
-    be BIT-IDENTICAL to the per-chunk reference pipeline
-    (`_iter_file_chunks` + `_hash64` + `_compressed_size`) — offsets,
-    sizes, hashes, compressed sizes, in order."""
+    """The streaming pipeline (`file_chunk_arrays`: the block iterator,
+    with the fused min_size skip-ahead cut kernel where eligible, and the
+    emitter's native hash and lz4 probe passes) must be BIT-IDENTICAL to
+    the in-memory reference (`chunk_bytes` over the file's bytes +
+    `_hash64` + `_compressed_size` per chunk) — offsets, sizes, hashes,
+    compressed sizes, in order."""
 
-    def _slow(self, path, p):
+    def _slow(self, path, p, scheme=None):
         from dataset_dedupe_estimator_spark.operators.chunker import (
+            IDENTITY_HASH,
             _compressed_size,
-            _hash64,
-            _iter_file_chunks,
+            _hash64_fn,
         )
 
+        hash64 = _hash64_fn(scheme or IDENTITY_HASH)
+        with open(path, "rb") as f:
+            data = f.read()
         return [
-            (off, len(ch), _hash64(ch),
-             _compressed_size(ch, p.compress_probe_bytes, p.compress_scheme))
-            for off, ch in _iter_file_chunks(path, p)
+            (off, size, hash64(data[off : off + size]),
+             _compressed_size(
+                 data[off : off + size], p.compress_probe_bytes,
+                 p.compress_scheme,
+             ))
+            for off, size in chunk_bytes(data, p)
         ]
 
     def _fast(self, path, p):
@@ -481,6 +493,39 @@ class TestFusedArrayPipeline:
 
         check()
 
+    def test_zlib1_probe(self, tmp_path):
+        """compress_scheme="zlib1" takes the emitter's per-chunk loop."""
+        f = tmp_path / "big.bin"
+        f.write_bytes((DATA * 3)[: 10 * 1024 * 1024])
+        for probe in (None, 16 * 1024):
+            p = ChunkerParams(compress_scheme="zlib1", compress_probe_bytes=probe)
+            assert self._slow(str(f), p) == self._fast(str(f), p), probe
+
+    @pytest.mark.parametrize("scheme", ["sha1-64", "xxh64", "xxh3-64"])
+    def test_emitter_hash_schemes(self, tmp_path, scheme):
+        """Every identity-hash scheme the driver can pick gives the same
+        values through the emitter as the per-chunk hash callable, across
+        the block iterator's 8 MiB blocks."""
+        from dataset_dedupe_estimator_spark.operators.chunker import (
+            _emit_chunk_cols,
+            _iter_block_cuts,
+        )
+
+        if scheme != "sha1-64" and not _native_available():
+            pytest.skip("no C compiler")
+        f = tmp_path / "big.bin"
+        f.write_bytes((DATA * 3)[: 10 * 1024 * 1024])
+        p = ChunkerParams(compress_probe_bytes=16 * 1024)
+        got, cache = [], {}
+        for _, buf, start0, cuts, base in _iter_block_cuts(str(f), [p]):
+            offs, sizes, hashes, comps, _ = _emit_chunk_cols(
+                buf, start0, cuts, base, p, scheme, cache, False
+            )
+            got.extend(zip(
+                offs.tolist(), sizes.tolist(), hashes.tolist(), comps.tolist()
+            ))
+        assert got == self._slow(str(f), p, scheme)
+
     @pytest.mark.skipif(not _native_available(), reason="no C compiler")
     def test_chunk_files_uses_fast_path_same_rows(self, spark, tmp_path):
         """End-to-end through Spark: chunk_files (fast path) equals a
@@ -508,3 +553,94 @@ class TestFusedArrayPipeline:
             "data"
         ).orderBy("file_idx", "seq").collect()
         assert fast == slow
+
+
+def _cuts_reference(n, candidates, start, params):
+    """Cut selection candidate by candidate: the definition that
+    ``_cuts_from_candidates`` must reproduce."""
+    cuts = []
+    for c in candidates.tolist():
+        if params.enforce_max:
+            while c - start > params.max_size:
+                start += params.max_size
+                cuts.append(start)
+        if c - start < params.min_size:
+            continue
+        cuts.append(c)
+        start = c
+    if params.enforce_max:
+        while n - start > params.max_size:
+            start += params.max_size
+            cuts.append(start)
+    return cuts
+
+
+def test_cut_selection_matches_candidate_loop():
+    """Random lengths, candidate densities (up to every byte), starts,
+    min/max (min above max included) and both enforce_max modes."""
+    from dataset_dedupe_estimator_spark.operators.chunker import (
+        _cuts_from_candidates,
+    )
+
+    rng = np.random.default_rng(3)
+    for _ in range(3000):
+        n = int(rng.integers(0, 4000))
+        k = int(rng.integers(0, n + 1))
+        cand = np.unique(rng.integers(1, n + 1, k)).astype(np.int64)
+        start = int(rng.integers(0, n // 2 + 1))
+        p = ChunkerParams(
+            min_size=int(rng.integers(0, 600)),
+            max_size=int(rng.integers(1, 1200)),
+            enforce_max=bool(rng.integers(0, 2)),
+        )
+        assert _cuts_from_candidates(n, cand, start, p) == _cuts_reference(
+            n, cand, start, p
+        ), (n, start, p)
+
+
+def test_store_data_rows_carry_chunk_bytes(spark, tmp_path):
+    """store_data=True: each row's data is the file's bytes at
+    [offset, offset + size), and every other column equals the
+    store_data=False row, for one and for two parameterizations."""
+    from dataset_dedupe_estimator_spark.operators.chunker import (
+        XET_PARAMS,
+        chunk_files_multi,
+    )
+
+    big = (DATA * 3)[: 10 * 1024 * 1024]
+    f = tmp_path / "big.bin"
+    f.write_bytes(big)
+    cases = [
+        lambda sd: chunk_files(spark, [str(f)], store_data=sd),
+        lambda sd: chunk_files_multi(
+            spark, [str(f)], [P, XET_PARAMS], store_data=sd
+        ),
+    ]
+    for make in cases:
+        with_data = make(True).collect()
+        assert with_data
+        for r in with_data:
+            assert r.data == big[r.offset : r.offset + r.size]
+        assert sorted(
+            tuple(v for c, v in r.asDict().items() if c != "data")
+            for r in with_data
+        ) == sorted(tuple(r) for r in make(False).collect())
+
+
+def test_split_path_rows_equal_per_file_rows(spark, tmp_path):
+    """The split path's work units go through the same emitter as the
+    per-file path (native hash and probe passes where available): its
+    rows equal chunk_files' rows, compressed sizes included."""
+    from dataset_dedupe_estimator_spark.operators.chunker import (
+        chunk_file_parallel,
+    )
+
+    f = tmp_path / "big.bin"
+    f.write_bytes((DATA * 3)[: 10 * 1024 * 1024])
+    p = ChunkerParams(compress_probe_bytes=16 * 1024)
+    want = chunk_files(spark, [str(f)], params=p).orderBy("seq").collect()
+    got = chunk_file_parallel(
+        spark, str(f), params=p, split_bytes=4 * 1024 * 1024
+    ).orderBy("seq").collect()
+    assert len(want) > 100
+    assert got == want

@@ -5,9 +5,9 @@ materialized frames, as the bench's merge keys and the CDC apply's
 netted batch are. The budgets are the per-verb counts of
 OPTIMIZATION_r14 §8, except two: replace_where's (a probe of the
 caller's rows for out-of-scope ones, then read and write) and
-upsert_pruned's, 6 rather than §8's 4 — the distinct update keys are
-collected (2 jobs) and the write's broadcast runs that aggregate again
-(2 jobs), in this shape and in the bench's sf0.1 merge alike."""
+upsert_pruned's, 5 rather than §8's 4 — collecting the distinct update
+keys is 2 jobs, and the write broadcasts the collected keys as a local
+relation (1 job), in this shape and in the bench's sf0.1 merge alike."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -61,7 +61,7 @@ def _replace(spark, root):
 @pytest.mark.parametrize(
     "verb, budget",
     [
-        (_upsert, 6),
+        (_upsert, 5),
         (_delete, 2),
         (_update, 2),
         (_delete_keys, 10),

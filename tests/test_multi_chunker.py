@@ -10,9 +10,9 @@ from hypothesis import given, settings, strategies as st
 from dataset_dedupe_estimator_spark.operators.chunker import (
     XET_PARAMS,
     ChunkerParams,
-    _iter_file_chunks,
-    _iter_file_chunks_multi,
+    _iter_block_cuts,
     boundary_compatible,
+    chunk_bytes,
     chunk_files_multi,
 )
 from dataset_dedupe_estimator_spark.plans.estimate import (
@@ -37,14 +37,26 @@ def blob_file(tmp_path_factory):
 
 
 def _collect_single(path, params):
-    return list(_iter_file_chunks(path, params))
+    """(offset, chunk bytes) per chunk from the in-memory reference."""
+    with open(path, "rb") as f:
+        data = f.read()
+    return [(o, data[o : o + s]) for o, s in chunk_bytes(data, params)]
+
+
+def _collect_multi(path, params_list):
+    """(offset, chunk bytes) per chunk and param from the shared scan."""
+    per_param = {i: [] for i in range(len(params_list))}
+    for pi, buf, start0, cuts, base in _iter_block_cuts(path, params_list):
+        prev = start0
+        for c in cuts:
+            per_param[pi].append((base + prev, buf[prev:c].tobytes()))
+            prev = c
+    return per_param
 
 
 def test_multi_matches_singles_bitwise(blob_file):
     params_list = [ESTIMATE_PARAMS, XET_PARAMS]
-    per_param = {i: [] for i in range(len(params_list))}
-    for pi, off, chunk in _iter_file_chunks_multi(blob_file, params_list):
-        per_param[pi].append((off, chunk))
+    per_param = _collect_multi(blob_file, params_list)
     for i, p in enumerate(params_list):
         assert per_param[i] == _collect_single(blob_file, p), f"param {i}"
 
@@ -52,7 +64,7 @@ def test_multi_matches_singles_bitwise(blob_file):
 def test_multi_rejects_incompatible(blob_file):
     with pytest.raises(ValueError, match="boundary-compatible"):
         list(
-            _iter_file_chunks_multi(
+            _iter_block_cuts(
                 blob_file, [ChunkerParams(), ChunkerParams(seed=99)]
             )
         )
@@ -84,11 +96,9 @@ def test_multi_parity_property(data, mins, max_mult):
     try:
         with os.fdopen(fd, "wb") as f:
             f.write(data)
-        per_param = {i: [] for i in range(len(params_list))}
-        for pi, off, chunk in _iter_file_chunks_multi(path, params_list):
-            per_param[pi].append((off, chunk))
+        per_param = _collect_multi(path, params_list)
         for i, p in enumerate(params_list):
-            assert per_param[i] == list(_iter_file_chunks(path, p)), f"param {i}"
+            assert per_param[i] == _collect_single(path, p), f"param {i}"
     finally:
         os.unlink(path)
 
@@ -110,12 +120,28 @@ def test_estimate_mixed_corpus_unions_large_files(spark, parquet_paths, monkeypa
     'large', the shared-scan path must union the per-param large-file
     chunks into the same aggregate and produce identical metrics (hash
     uniqueness is global across the small/large split)."""
+    import os
+
     import dataset_dedupe_estimator_spark.operators.chunker as ch
 
     baseline = estimate(spark, parquet_paths)
-    sizes = sorted(__import__("os").path.getsize(p) for p in parquet_paths)
+    sizes = sorted(os.path.getsize(p) for p in parquet_paths)
     monkeypatch.setattr(ch, "PARALLEL_THRESHOLD", sizes[len(sizes) // 2] + 1)
+    split_calls = []
+    parallel_chunks = ch._parallel_chunks
+
+    def spy(spark, files, params, *args):
+        split_calls.append([i for i, _ in files])
+        return parallel_chunks(spark, files, params, *args)
+
+    monkeypatch.setattr(ch, "_parallel_chunks", spy)
     mixed = estimate(spark, parquet_paths)
+    # the large half took the split path, once per parameterization
+    large = [
+        i for i, p in enumerate(parquet_paths)
+        if os.path.getsize(p) > sizes[len(sizes) // 2]
+    ]
+    assert large and split_calls == [large, large]
     assert mixed == baseline
 
 
@@ -166,10 +192,10 @@ def test_estimate_shared_scan_matches_two_pass(spark, parquet_paths):
 
 
 def test_fused_multi_arrays_bit_parity(tmp_path):
-    """r11: the shared-scan fused array pipeline
-    (`_iter_block_arrays_multi`) must equal the per-chunk multi path
-    (`_iter_file_chunks_multi` + `_hash64` + `_compressed_size`)
-    bit-for-bit per param — offsets, sizes, hashes, compressed."""
+    """The shared-scan pipeline (`_iter_block_cuts` + `_emit_chunk_cols`)
+    must equal the in-memory reference per param (`chunk_bytes` over the
+    file's bytes + `_hash64` + `_compressed_size`) bit-for-bit —
+    offsets, sizes, hashes, compressed."""
     from dataclasses import replace
 
     import numpy as np
@@ -193,21 +219,20 @@ def test_fused_multi_arrays_bit_parity(tmp_path):
         C.ChunkerParams(),
         replace(C.XET_PARAMS, compress_probe_bytes=0),
     ]
-    slow, caches = [], [{}, {}]
-    for pi, off, ch in C._iter_file_chunks_multi(str(f), plist):
-        p = plist[pi]
-        h = C._hash64(ch)
-        comp = caches[pi].get(h)
-        if comp is None:
+    slow = []
+    for pi, p in enumerate(plist):
+        for off, size in C.chunk_bytes(blob, p):
+            ch = blob[off : off + size]
             comp = C._compressed_size(
                 ch, p.compress_probe_bytes, p.compress_scheme
             )
-            caches[pi][h] = comp
-        slow.append((pi, off, len(ch), h, comp))
-    fast = []
-    for pi, offs, sizes, hashes, comps in C._iter_block_arrays_multi(
-        str(f), plist
-    ):
+            slow.append((pi, off, size, C._hash64(ch), comp))
+    fast, caches = [], [{}, {}]
+    for pi, buf, start0, cuts, base in C._iter_block_cuts(str(f), plist):
+        offs, sizes, hashes, comps, _ = C._emit_chunk_cols(
+            buf, start0, cuts, base, plist[pi], C.IDENTITY_HASH, caches[pi],
+            False,
+        )
         fast.extend(zip(
             [pi] * len(offs), offs.tolist(), sizes.tolist(),
             hashes.tolist(), comps.tolist(),
@@ -254,4 +279,39 @@ def test_multi_fast_gate_requires_enforce_max(spark, tmp_path):
     import pytest
 
     with pytest.raises(ValueError, match="enforce_max"):
-        list(C._iter_block_arrays_multi(str(f), [p]))
+        list(C._iter_block_cuts(str(f), [p]))
+
+
+def test_dense_candidates_shared_scan_is_exact_and_bounded(tmp_path):
+    """A run of a 4-byte pattern whose 64-byte window sum is a boundary
+    candidate makes EVERY byte a candidate under ESTIMATE_PARAMS. The
+    two-parameterization shared scan must still equal each
+    parameterization's own pipeline, and its cut selection must cost
+    per cut, not per candidate: on 32 MiB, a selection that walks every
+    candidate takes ~10 s, a per-cut one ~0.3 s."""
+    import time
+    from dataclasses import replace
+
+    from dataset_dedupe_estimator_spark.operators import chunker as C
+
+    f = tmp_path / "dense.bin"
+    f.write_bytes(bytes([118, 118, 146, 126]) * (8 << 20))
+    head = np.frombuffer(f.read_bytes()[: 1 << 16], dtype=np.uint8)
+    assert C._boundary_candidates(head, ESTIMATE_PARAMS).shape[0] > 65_000
+    plist = [ESTIMATE_PARAMS, replace(XET_PARAMS, compress_probe_bytes=0)]
+    got = {0: [], 1: []}
+    caches = [{}, {}]
+    t0 = time.perf_counter()
+    for pi, buf, start0, cuts, base in _iter_block_cuts(str(f), plist):
+        got[pi].append(
+            C._emit_chunk_cols(
+                buf, start0, cuts, base, plist[pi], C.IDENTITY_HASH,
+                caches[pi], False,
+            )[:4]
+        )
+    elapsed = time.perf_counter() - t0
+    for pi, p in enumerate(plist):
+        cols = [np.concatenate(c) for c in zip(*got[pi])]
+        want = C.file_chunk_arrays(str(f), p)
+        assert all(np.array_equal(a, b) for a, b in zip(cols, want)), pi
+    assert elapsed < 2.0, elapsed

@@ -27,7 +27,7 @@ from dataset_dedupe_estimator_spark.operators.chunker import (  # noqa: E402
     _boundary_candidates,
     _compressed_size,
     _hash64,
-    _iter_file_chunks,
+    file_chunk_arrays,
 )
 
 
@@ -115,28 +115,15 @@ def main() -> None:
         f.write(data)
         path = f.name
     try:
-        from dataset_dedupe_estimator_spark.operators.chunker import (
-            _fast_arrays_ok,
-            file_chunk_arrays,
-        )
-
         for label, p in (
             ("window/full-probe", ChunkerParams()),
             ("window/probe16k", ChunkerParams(compress_probe_bytes=16 * 1024)),
             ("gear/full-probe", ChunkerParams(scheme="gear")),
         ):
-            if _fast_arrays_ok(p):
-                print(
-                    f"end-to-end fused [{label}]: "
-                    f"{_rate(n, lambda p=p: file_chunk_arrays(path, p), reps=3):.0f} MB/s/core"
-                )
-
-            def run(p=p):
-                for _off, ch in _iter_file_chunks(path, p):
-                    _hash64(ch)
-                    _compressed_size(ch, p.compress_probe_bytes, p.compress_scheme)
-
-            print(f"end-to-end per-chunk [{label}]: {_rate(n, run, reps=2):.0f} MB/s/core")
+            print(
+                f"end-to-end [{label}]: "
+                f"{_rate(n, lambda p=p: file_chunk_arrays(path, p), reps=3):.0f} MB/s/core"
+            )
     finally:
         os.unlink(path)
 
