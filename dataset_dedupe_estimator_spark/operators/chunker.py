@@ -343,9 +343,19 @@ def boundary_compatible(a: ChunkerParams, b: ChunkerParams) -> bool:
     )
 
 
+def _require_compatible(params_list: list[ChunkerParams]) -> None:
+    """Refuse a parameterization list one boundary scan cannot serve."""
+    for p in params_list[1:]:
+        if not boundary_compatible(params_list[0], p):
+            raise ValueError(
+                "shared-scan chunking requires boundary-compatible params "
+                "(same scheme/seed/window/mask_bits/gear_table, enforce_max)"
+            )
+
+
 def _iter_block_cuts(
     path: str, params_list: list[ChunkerParams]
-) -> Iterator[tuple[int, np.ndarray, int, np.ndarray | list[int], int]]:
+) -> Iterator[tuple[int, np.ndarray, int, list[int], int]]:
     """Stream a file ONCE and yield ``(param_idx, buf, start0, cuts,
     base)`` per block and parameterization: the FINAL cut positions
     ``cuts`` (relative to ``buf``) of the chunks that parameterization
@@ -360,12 +370,7 @@ def _iter_block_cuts(
     ``min_size`` of a chunk start is discarded by cut selection, and
     ``min_size > window``, so context differences at buffer edges never
     surface in a cut (the argument behind streaming ≡ in-memory parity).
-    One parameterization with the native library and ``min_size`` above
-    the effective window (gear: 64) takes its cuts from the fused
-    scan-and-select kernel instead, whose min_size skip-ahead (FastCDC,
-    Xia et al., USENIX ATC 2016) never evaluates bytes that cannot end a
-    chunk: on input where nearly every byte is a candidate it cuts 8 MiB
-    in under 1 ms, against ~50 ms for a candidate scan and selection.
+    One parameterization is the one-element case of the same scan.
 
     The carry buffer holds ``max_size + block`` bytes, which bounds the
     pending chunk only under max enforcement: ``enforce_max=False`` (the
@@ -373,27 +378,13 @@ def _iter_block_cuts(
     would overflow it. Use ``chunk_bytes`` on in-memory data for parity
     studies; the split path (``_chunk_frame``) serves it for files.
     """
-    base_p = params_list[0]
-    for p in params_list[1:]:
-        if not boundary_compatible(base_p, p):
-            raise ValueError(
-                "shared-scan chunking requires boundary-compatible params "
-                "(same scheme/seed/window/mask_bits/gear_table, enforce_max)"
-            )
+    _require_compatible(params_list)
     if not all(p.enforce_max for p in params_list):
         raise ValueError(
             "streaming chunking requires enforce_max=True (bounded carry "
             "buffer); use chunk_bytes() for enforce_max=False parity analysis"
         )
-    eff_w = 64 if base_p.scheme == "gear" else base_p.window
-    fused = (
-        len(params_list) == 1 and native.available() and base_p.min_size > eff_w
-    )
-    if base_p.scheme == "gear" and base_p.gear_table is not None:
-        table = _user_gear_table(base_p.gear_table)
-    else:
-        table = _gear_table(base_p.seed)
-
+    base_p = params_list[0]
     # preallocated carry buffer: readinto appends after the carried
     # tail — no per-block bytes concatenation
     ring = bytearray(max(p.max_size for p in params_list) + _BLOCK)
@@ -405,20 +396,11 @@ def _iter_block_cuts(
         while nread := f.readinto(view[filled : filled + _BLOCK]):
             filled += nread
             buf = np.frombuffer(view[:filled], dtype=np.uint8)
-            if fused:  # one parameterization: its chunk starts at buf[0]
-                cut_lists = [
-                    native.fused_cuts(
-                        buf, table, base_p.mask_bits, base_p.min_size,
-                        base_p.max_size, base_p.scheme, base_p.window,
-                        int(_MIX),
-                    )
-                ]
-            else:
-                cand = _boundary_candidates(buf, base_p)  # ONE scan, all params
-                cut_lists = [
-                    _cuts_from_candidates(filled, cand, s - base, p)
-                    for s, p in zip(starts, params_list)
-                ]
+            cand = _boundary_candidates(buf, base_p)  # ONE scan, all params
+            cut_lists = [
+                _cuts_from_candidates(filled, cand, s - base, p)
+                for s, p in zip(starts, params_list)
+            ]
             for i, cuts in enumerate(cut_lists):
                 if len(cuts):
                     yield i, buf, starts[i] - base, cuts, base
@@ -540,13 +522,14 @@ def file_chunk_arrays(
 
 # CHUNK_SCHEMA rows tagged with the parameterization that cut them.
 _MULTI_SCHEMA = pa.schema([pa.field("param_idx", pa.int64()), *CHUNK_SCHEMA])
+_MULTI_DDL = "param_idx long, " + CHUNK_DDL
 
 
 def _chunk_batch(
-    schema: pa.Schema, pi: int, file_idx: int, path: str, seq0: int, acc: list[tuple]
+    pi: int, file_idx: int, path: str, seq0: int, acc: list[tuple]
 ) -> pa.RecordBatch:
-    """One output batch from accumulated emitter columns; the int64
-    arrays are handed to Arrow zero-copy."""
+    """One ``_MULTI_SCHEMA`` batch from accumulated emitter columns; the
+    int64 arrays are handed to Arrow zero-copy."""
     offs, sizes, hashes, comps = (
         np.concatenate([a[k] for a in acc]) for k in range(4)
     )
@@ -556,6 +539,7 @@ def _chunk_batch(
     else:
         data = pa.array([d for a in acc for d in a[4]], pa.binary())
     cols = [
+        pa.array(np.full(n, pi, dtype=np.int64)),
         pa.array(np.full(n, file_idx, dtype=np.int64)),
         pa.repeat(path, n),
         pa.array(np.arange(seq0, seq0 + n, dtype=np.int64)),
@@ -565,9 +549,7 @@ def _chunk_batch(
         pa.array(comps),
         data,
     ]
-    if schema.names[0] == "param_idx":
-        cols.insert(0, pa.array(np.full(n, pi, dtype=np.int64)))
-    return pa.RecordBatch.from_arrays(cols, schema=schema)
+    return pa.RecordBatch.from_arrays(cols, schema=_MULTI_SCHEMA)
 
 
 def _unit_block(row: dict) -> list[tuple[int, np.ndarray, int, np.ndarray, int]]:
@@ -580,17 +562,15 @@ def _unit_block(row: dict) -> list[tuple[int, np.ndarray, int, np.ndarray, int]]
     return [(0, buf, 0, np.asarray(row["cuts"], dtype=np.int64) - ustart, ustart)]
 
 
-def _chunk_partition_fn(
-    params_list: list[ChunkerParams], keep_data: bool, schema: pa.Schema
-):
+def _chunk_partition_fn(params_list: list[ChunkerParams], keep_data: bool):
     """The chunker's one mapInArrow closure. Input rows are files
     ``(file_idx, path)``, streamed through ``_iter_block_cuts``, or the
     split path's work units ``(file_idx, path, begin_seq, ustart, uend,
     cuts)``; every cut list goes through ``_emit_chunk_cols``. Output
-    rows follow ``schema`` (``param_idx`` first when it has one); ``seq``
-    counts per (file, parameterization) from the unit's ``begin_seq`` or
-    0, and a batch is yielded per parameterization once it holds 4,096
-    rows."""
+    rows are ``_MULTI_SCHEMA``: ``param_idx`` is the position in
+    ``params_list``, ``seq`` counts per (file, parameterization) from the
+    unit's ``begin_seq`` or 0, and a batch is yielded per
+    parameterization once it holds 4,096 rows."""
     hash_scheme = IDENTITY_HASH  # driver's choice, enforced executor-side
 
     def chunk_partition(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
@@ -621,25 +601,22 @@ def _chunk_partition_fn(
                     accs[pi].append(cols)
                     counts[pi] += cols[1].shape[0]
                     if counts[pi] >= 4096:
-                        yield _chunk_batch(
-                            schema, pi, file_idx, path, seqs[pi], accs[pi]
-                        )
+                        yield _chunk_batch(pi, file_idx, path, seqs[pi], accs[pi])
                         seqs[pi] += counts[pi]
                         accs[pi], counts[pi] = [], 0
                 for pi, acc in enumerate(accs):
                     if acc:
-                        yield _chunk_batch(schema, pi, file_idx, path, seqs[pi], acc)
+                        yield _chunk_batch(pi, file_idx, path, seqs[pi], acc)
 
     return chunk_partition
 
 
 def make_chunk_partition_fn(p: ChunkerParams, keep_data: bool):
-    """mapInArrow closure: (file_idx, path) batches → CHUNK_SCHEMA
-    chunk-row batches.
-
-    Shared by the batch scan (chunk_files) and the streaming source
-    (streaming/incremental.py) — the operator itself is stateless."""
-    return _chunk_partition_fn([p], keep_data, CHUNK_SCHEMA)
+    """mapInArrow closure: (file_idx, path) batches → chunk-row batches
+    of ``"param_idx long, " + CHUNK_DDL`` (``param_idx`` always 0), for
+    the streaming source (streaming/incremental.py), which drops
+    ``param_idx`` — the operator itself is stateless."""
+    return _chunk_partition_fn([p], keep_data)
 
 
 def _file_list_frame(spark: SparkSession, files: list[tuple[int, str]]) -> DataFrame:
@@ -658,6 +635,20 @@ def _file_list_frame(spark: SparkSession, files: list[tuple[int, str]]) -> DataF
     return spark.range(0, n, 1, max(n, 1)).select(
         F.element_at(idx, at).alias("file_idx"), F.element_at(path, at).alias("path")
     )
+
+
+def _ring_frame(
+    spark: SparkSession,
+    files: list[tuple[int, str]],
+    params_list: list[ChunkerParams],
+    store_data: bool,
+) -> DataFrame:
+    """Chunk rows with ``param_idx`` for ``(file_idx, path)`` files, one
+    task per file streaming through the shared-scan ring."""
+    chunks = _file_list_frame(spark, files).mapInArrow(
+        _chunk_partition_fn(params_list, store_data), _MULTI_DDL
+    )
+    return chunks if store_data else chunks.drop("data")
 
 
 def chunk_files_multi(
@@ -896,11 +887,9 @@ def _parallel_chunks(
         .repartition(max(len(splits), 1))
     )
     chunks = units_df.mapInArrow(
-        _chunk_partition_fn([params], store_data, CHUNK_SCHEMA), CHUNK_DDL
+        _chunk_partition_fn([params], store_data), _MULTI_DDL
     )
-    if not store_data:
-        chunks = chunks.drop("data")
-    return chunks
+    return chunks if store_data else chunks.drop("data")
 
 
 def _chunk_frame(
@@ -919,7 +908,9 @@ def _chunk_frame(
     below ``parallel_threshold`` (default ``PARALLEL_THRESHOLD``, read
     now) and under max enforcement, which bounds the ring's carry. The
     others take the split path: one call per parameterization covers
-    all of them."""
+    all of them. An incompatible list is refused here, on the driver,
+    whichever path its files would take."""
+    _require_compatible(params_list)
     threshold = PARALLEL_THRESHOLD if parallel_threshold is None else parallel_threshold
     bounded = all(p.enforce_max for p in params_list)
     small: list[tuple[int, str]] = []
@@ -929,15 +920,11 @@ def _chunk_frame(
         (small if fits else large).append((i, path))
     parts = []
     if small or not large:
-        part = _file_list_frame(spark, small).mapInArrow(
-            _chunk_partition_fn(params_list, store_data, _MULTI_SCHEMA),
-            "param_idx long, " + CHUNK_DDL,
-        )
-        parts.append(part if store_data else part.drop("data"))
+        parts.append(_ring_frame(spark, small, params_list, store_data))
     if large:
         for pi, p in enumerate(params_list):
             part = _parallel_chunks(spark, large, p, split_bytes, store_data)
-            parts.append(part.select(F.lit(pi).cast("long").alias("param_idx"), "*"))
+            parts.append(part.withColumn("param_idx", F.lit(pi).cast("long")))
     out = parts[0]
     for extra in parts[1:]:
         out = out.unionByName(extra)
@@ -962,7 +949,7 @@ def chunk_file_parallel(
     """
     return _parallel_chunks(
         spark, [(file_idx, path)], params, split_bytes, store_data
-    )
+    ).drop("param_idx")
 
 
 def chunk_files_auto(
@@ -995,10 +982,6 @@ def chunk_files(
     file_idx is the position in ``paths`` — input-list order, not
     lexicographic (src/store.rs:117 semantics).
     """
-    files = _file_list_frame(spark, list(enumerate(paths)))
-    chunks = files.mapInArrow(
-        make_chunk_partition_fn(params, store_data), CHUNK_DDL
-    )
-    if not store_data:
-        chunks = chunks.drop("data")
-    return chunks
+    return _ring_frame(
+        spark, list(enumerate(paths)), [params], store_data
+    ).drop("param_idx")

@@ -156,91 +156,6 @@ uint64_t xxh64(const uint8_t *p, int64_t len, uint64_t seed) {
     return h;
 }
 
-/* Fused boundary scan + min/max cut selection with min_size SKIP-AHEAD
-   (the FastCDC acceleration): after each cut, the next acceptable cut
-   is >= start+min_size, so the scan warms the w-byte window just
-   before that position and never evaluates the skipped bytes.
-   Emits FINAL cut positions identical to window_scan followed by
-   _cuts_from_candidates (candidates below min are discarded there
-   anyway; forced cuts at start+max_size replicate the enforce_max
-   rule, including the trailing rule for a candidate-free tail).
-   Requires min_size > w (warm-up must not cross the previous cut's
-   evaluation window — callers gate on this). */
-int64_t window_cuts(const uint8_t *buf, int64_t n, const uint64_t *tab,
-                    uint64_t mix, uint64_t limit, int64_t w,
-                    int64_t min_size, int64_t max_size,
-                    int64_t *out, int64_t cap) {
-    int64_t k = 0, start = 0;
-    for (;;) {
-        int64_t lo = start + min_size; /* first acceptable cut position */
-        int64_t hi = start + max_size; /* forced cut position */
-        int64_t c = lo > w + 1 ? lo : w + 1;
-        int64_t end = hi < n ? hi : n;
-        int64_t found = -1;
-        if (c <= end) {
-            uint64_t sum = 0; /* window for cut c covers bytes [c-w, c-1] */
-            for (int64_t b = c - w; b < c; b++) sum += tab[buf[b]];
-            for (;;) {
-                if (sum * mix < limit) { found = c; break; }
-                if (c >= end) break;
-                c++;
-                sum += tab[buf[c - 1]] - tab[buf[c - 1 - w]];
-            }
-        }
-        if (found >= 0) {
-            if (k < cap) out[k] = found;
-            k++;
-            start = found;
-        } else if (n - start > max_size) {
-            if (k < cap) out[k] = hi;
-            k++;
-            start = hi;
-        } else {
-            return k;
-        }
-    }
-}
-
-/* Gearhash twin: h_t = sum_{j<=t} tab[buf_j] << (t-j) mod 2^64 — terms
-   64+ positions back vanish, so warming h over the 64 bytes before the
-   evaluation point reproduces the full-scan value exactly for every
-   position the min_size > 64 gate can accept. Cut position c tests the
-   hash AT byte c-1 (gear_scan emits i+1). */
-int64_t gear_cuts(const uint8_t *buf, int64_t n, const uint64_t *tab,
-                  uint64_t limit, int64_t min_size, int64_t max_size,
-                  int64_t *out, int64_t cap) {
-    int64_t k = 0, start = 0;
-    for (;;) {
-        int64_t lo = start + min_size;
-        int64_t hi = start + max_size;
-        int64_t c = lo > 65 ? lo : 65; /* byte c-1 needs 64 warm bytes */
-        int64_t end = hi < n ? hi : n;
-        int64_t found = -1;
-        if (c <= end) {
-            uint64_t h = 0;
-            for (int64_t b = c - 65; b < c; b++) h = (h << 1) + tab[buf[b]];
-            /* h is now the full-scan hash at byte c-1 */
-            for (;;) {
-                if (h < limit) { found = c; break; }
-                if (c >= end) break;
-                c++;
-                h = (h << 1) + tab[buf[c - 1]];
-            }
-        }
-        if (found >= 0) {
-            if (k < cap) out[k] = found;
-            k++;
-            start = found;
-        } else if (n - start > max_size) {
-            if (k < cap) out[k] = hi;
-            k++;
-            start = hi;
-        } else {
-            return k;
-        }
-    }
-}
-
 /* XXH3-64 (seedless one-shot, default secret) — BIT-PARITY with the
    reference's identity hash (src/store.rs:44, xxhash_rust::xxh3::xxh3_64,
    itself a port of Yann Collet's public-domain upstream). Implemented
@@ -692,18 +607,6 @@ def _compile() -> ctypes.CDLL | None:
     for fn in (lib.gear_scan, lib.window_scan, lib.lz4_size):
         fn.restype = ctypes.c_int64
     lib.lz4_size.argtypes = [ctypes.c_char_p, ctypes.c_int64]
-    lib.window_cuts.restype = ctypes.c_int64
-    lib.window_cuts.argtypes = [
-        ctypes.c_void_p, ctypes.c_int64, ctypes.c_void_p,
-        ctypes.c_uint64, ctypes.c_uint64, ctypes.c_int64,
-        ctypes.c_int64, ctypes.c_int64, ctypes.c_void_p, ctypes.c_int64,
-    ]
-    lib.gear_cuts.restype = ctypes.c_int64
-    lib.gear_cuts.argtypes = [
-        ctypes.c_void_p, ctypes.c_int64, ctypes.c_void_p,
-        ctypes.c_uint64, ctypes.c_int64, ctypes.c_int64,
-        ctypes.c_void_p, ctypes.c_int64,
-    ]
     lib.chunk_hash_scan.restype = None
     lib.chunk_hash_scan.argtypes = [
         ctypes.c_void_p, ctypes.c_void_p, ctypes.c_int64,
@@ -841,42 +744,6 @@ def chunk_hashes3(
         start0, out.ctypes.data,
     )
     return out.view(np.int64)
-
-
-def fused_cuts(
-    buf: np.ndarray,
-    table_i64: np.ndarray,
-    mask_bits: int,
-    min_size: int,
-    max_size: int,
-    scheme: str,
-    window: int = 64,
-    mix_i64: int | None = None,
-) -> np.ndarray | None:
-    """FINAL cut positions (boundary scan + min/max selection fused,
-    min_size skip-ahead) — identical to the candidates +
-    _cuts_from_candidates pipeline; None without the native lib.
-    Callers must ensure min_size > window (gear: > 64)."""
-    lib = _get()
-    if lib is None:
-        return None
-    buf = np.ascontiguousarray(buf)
-    n = buf.shape[0]
-    cap = n // max(min(min_size, max_size), 1) + 2
-    out = np.empty(cap, dtype=np.int64)
-    limit = ctypes.c_uint64(1 << (64 - mask_bits))
-    if scheme == "gear":
-        k = lib.gear_cuts(
-            buf.ctypes.data, n, table_i64.ctypes.data, limit,
-            min_size, max_size, out.ctypes.data, cap,
-        )
-    else:
-        mix = ctypes.c_uint64(int(mix_i64) & 0xFFFFFFFFFFFFFFFF)
-        k = lib.window_cuts(
-            buf.ctypes.data, n, table_i64.ctypes.data, mix, limit,
-            window, min_size, max_size, out.ctypes.data, cap,
-        )
-    return out[:k]
 
 
 def chunk_hashes(

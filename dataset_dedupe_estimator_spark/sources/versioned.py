@@ -4024,8 +4024,13 @@ def upsert_pruned(
             )
 
         # distinct update keys, collected driver-side up to the cap;
-        # beyond it fall back to per-column [min, max] ranges
-        kdf = ups.select(*keys).distinct()
+        # beyond it fall back to per-column [min, max] ranges. The keys
+        # are checkpointed so the write's join side reuses this
+        # aggregate in the JVM: a round trip through Python rows would
+        # re-convert every key (a local timestamp in a repeated DST hour
+        # loses its fold) and pickle up to max_distinct_keys rows on the
+        # driver
+        kdf = ups.select(*keys).distinct().localCheckpoint(eager=False)
         key_rows = kdf.limit(max_distinct_keys + 1).collect()
         if not key_rows:
             return idle(t.version)
@@ -4160,12 +4165,7 @@ def upsert_pruned(
 
         updates_n = t.norm(ups)
         _enforce_constraints(updates_n, _active_constraints(t.entries))
-        # exact mode holds the distinct keys already: broadcast them as a
-        # local relation instead of running the distinct aggregate again
-        keys_side = (
-            F.broadcast(spark.createDataFrame(key_rows, kdf.schema))
-            if exact else kdf
-        )
+        keys_side = F.broadcast(kdf) if exact else kdf
         return _Rewrite(
             cand_files,
             lambda cand: _kept_rows(

@@ -56,8 +56,10 @@ def chunk_file_stream(
     )
     # binaryFile yields file:/... URIs; the chunker opens local paths
     files = files.withColumn("path", F.regexp_replace("path", "^file:", ""))
-    chunks = files.mapInArrow(make_chunk_partition_fn(params, False), CHUNK_DDL)
-    return chunks.drop("data").drop("file_idx")
+    chunks = files.mapInArrow(
+        make_chunk_partition_fn(params, False), "param_idx long, " + CHUNK_DDL
+    )
+    return chunks.drop("param_idx", "data", "file_idx")
 
 
 def run_incremental_chunker(

@@ -382,9 +382,8 @@ def _native_available() -> bool:
 
 
 class TestFusedArrayPipeline:
-    """The streaming pipeline (`file_chunk_arrays`: the block iterator,
-    with the fused min_size skip-ahead cut kernel where eligible, and the
-    emitter's native hash and lz4 probe passes) must be BIT-IDENTICAL to
+    """The streaming pipeline (`file_chunk_arrays`: the block iterator
+    and the emitter's native hash and lz4 probe passes) must be BIT-IDENTICAL to
     the in-memory reference (`chunk_bytes` over the file's bytes +
     `_hash64` + `_compressed_size` per chunk) — offsets, sizes, hashes,
     compressed sizes, in order."""
@@ -443,7 +442,7 @@ class TestFusedArrayPipeline:
             ChunkerParams(scheme="gear", min_size=16 * 1024,
                           max_size=64 * 1024, mask_bits=14),
             XET_PARAMS,
-            # min_size <= window: fused-cuts ineligible, still exact
+            # min_size <= window: still exact
             ChunkerParams(min_size=60, max_size=1000, mask_bits=8),
             ChunkerParams(min_size=100, max_size=1000, mask_bits=8),
         ]

@@ -6,8 +6,9 @@ netted batch are. The budgets are the per-verb counts of
 OPTIMIZATION_r14 §8, except two: replace_where's (a probe of the
 caller's rows for out-of-scope ones, then read and write) and
 upsert_pruned's, 5 rather than §8's 4 — collecting the distinct update
-keys is 2 jobs, and the write broadcasts the collected keys as a local
-relation (1 job), in this shape and in the bench's sf0.1 merge alike."""
+keys is 2 jobs (the aggregate's shuffle and the capped collect of its
+checkpointed output), and the write broadcasts the checkpointed keys
+(1 job), in this shape and in the bench's sf0.1 merge alike."""
 
 import pytest
 from pyspark.sql import functions as F

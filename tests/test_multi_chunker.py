@@ -249,7 +249,7 @@ def test_fused_multi_arrays_bit_parity(tmp_path):
 
 def test_multi_fast_gate_requires_enforce_max(spark, tmp_path):
     """Reviewed r11 bug: an enforce_max=False param with probe=0 used to
-    slip past the fused-path gate, overflow the bounded carry buffer on
+    slip past the shared-scan gate, overflow the bounded carry buffer on
     a candidate-free region and silently truncate the file. The gate
     now requires enforce_max on EVERY param; full byte coverage is the
     regression pin."""
@@ -275,7 +275,7 @@ def test_multi_fast_gate_requires_enforce_max(spark, tmp_path):
         .collect()
     )
     assert total[0]["sum(size)"] == len(blob)
-    # and the fused iterator itself refuses the unbounded mode outright
+    # and the block iterator itself refuses the unbounded mode outright
     import pytest
 
     with pytest.raises(ValueError, match="enforce_max"):
@@ -315,3 +315,21 @@ def test_dense_candidates_shared_scan_is_exact_and_bounded(tmp_path):
         want = C.file_chunk_arrays(str(f), p)
         assert all(np.array_equal(a, b) for a, b in zip(cols, want)), pi
     assert elapsed < 2.0, elapsed
+
+
+def test_incompatible_params_refused_for_split_path_files(spark, tmp_path, monkeypatch):
+    """An incompatible parameterization list is refused on the driver,
+    before any frame is built, also when every file would take the
+    split path (which chunks one parameterization at a time and so
+    never meets the shared-scan iterator's own check)."""
+    import dataset_dedupe_estimator_spark.operators.chunker as ch
+
+    f = tmp_path / "big.bin"
+    f.write_bytes(np.random.default_rng(3).integers(0, 256, 300_000, dtype=np.uint8).tobytes())
+    monkeypatch.setattr(ch, "PARALLEL_THRESHOLD", 1)
+    for plist in (
+        [ChunkerParams(), ChunkerParams(seed=99)],
+        [ChunkerParams(enforce_max=False), ChunkerParams(enforce_max=False)],
+    ):
+        with pytest.raises(ValueError, match="boundary-compatible"):
+            chunk_files_multi(spark, [str(f)], plist)

@@ -289,3 +289,41 @@ def test_upsert_counts_with_cross_session_updates(spark, banded):
     assert _rows(got.filter(F.col("id").isin(30, 200, 201))) == [
         (30, -1), (200, -2), (201, -3),
     ]
+
+
+def test_timestamp_key_in_repeated_dst_hour(spark, tmp_path, monkeypatch):
+    """A timestamp key in the hour a DST fall-back repeats must match
+    its own table row, whatever zone the driver's Python process runs
+    in: the join's key side stays in the JVM. A round trip of the
+    collected keys through Python datetimes loses ``fold`` and shifts
+    the second 01:30 onto the first."""
+    import time
+
+    root = tmp_path / "tbl"
+    # 2024-11-03 01:30 EDT and 01:30 EST, plus a neighbour an hour on
+    first, second, later = 1730611800, 1730615400, 1730619000
+    vt.append(
+        root,
+        spark.createDataFrame(
+            [(first, 1), (second, 2), (later, 3)], "s long, v long"
+        ).select(F.timestamp_seconds("s").alias("ts"), "v"),
+        num_files=1,
+    )
+    ups = spark.createDataFrame([(second, -2)], "s long, v long").select(
+        F.timestamp_seconds("s").alias("ts"), "v"
+    )
+    monkeypatch.setenv("TZ", "America/New_York")
+    time.tzset()
+    try:
+        st = vt.upsert_pruned(spark, root, ups, ["ts"])
+    finally:
+        monkeypatch.undo()
+        time.tzset()
+    assert st["replaced_rows"] == 1 and st["upsert_rows"] == 1
+    got = sorted(
+        tuple(r)
+        for r in vt.read_version(spark, root)
+        .select(F.unix_timestamp("ts").alias("s"), "v")
+        .collect()
+    )
+    assert got == [(first, 1), (second, -2), (later, 3)]

@@ -230,7 +230,7 @@ def test_chunk_hash3_scan_matches_oneshot():
 
 
 def test_default_scheme_is_xxh3(tmp_path):
-    """The engine default is the reference-parity scheme, the fused
+    """The engine default is the reference-parity scheme, the native
     array pipeline computes it, and the per-chunk path agrees."""
     from dataset_dedupe_estimator_spark.operators import chunker
 

@@ -75,30 +75,22 @@ def main() -> None:
         print(f"compress probe [{label}]: "
               f"{_rate(n, lambda: [_compressed_size(c, None, scheme) for c in chunks], reps=1):.0f} MB/s")
 
-    # r11 fused-path stages (the real executor hot path; the per-chunk
-    # stages above are the legacy/fallback pipeline)
+    # native emit stages (the executor hot path; the per-chunk stages
+    # above are the fallback pipeline)
     if native.available():
         from dataset_dedupe_estimator_spark.operators.chunker import (
-            _MIX,
             _cuts_from_candidates,
-            _gear_table,
         )
 
         p0 = ChunkerParams()
-        table = _gear_table(p0.seed)
-        fc = native.fused_cuts(
-            buf, table, p0.mask_bits, p0.min_size, p0.max_size,
-            "window", p0.window, int(_MIX),
-        )
-        print(
-            f"fused cuts [window, min-skip]: "
-            f"{_rate(n, lambda: native.fused_cuts(buf, table, p0.mask_bits, p0.min_size, p0.max_size, 'window', p0.window, int(_MIX))):.0f} MB/s"
-        )
         cand = _boundary_candidates(buf, p0)
+        print(
+            f"cut selection [window]: "
+            f"{_rate(n, lambda: _cuts_from_candidates(n, cand, 0, p0)):.0f} MB/s"
+        )
         cuts = np.asarray(
             _cuts_from_candidates(n, cand, 0, p0), dtype=np.int64
         )
-        assert np.array_equal(fc, cuts), "fused cuts diverged from reference"
         rel = np.empty(len(cuts), dtype=np.int64)
         rel[0] = 0
         rel[1:] = cuts[:-1]
